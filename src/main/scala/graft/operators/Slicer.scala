@@ -205,34 +205,38 @@ final class Slicer(
     def seenOf(t: String): Option[DataFrame] =
       genKeys.get(t).map(_.reduce(_ union _))
 
+    var round = 0
+
     /** Persist fresh frontiers, materialize the round's count+max stats,
       * fold the survivors into the discovered state. Round 15: one
-      * SMALL ACTION PER FRAME ON PARALLEL FUTURES instead of the r14
+      * SMALL ACTION PER FRAME, run concurrently, instead of the r14
       * single fused action — the fused plan was one job, but its
       * broadcast builds (one per semi/anti join in the round's chains)
       * ran as strictly SEQUENTIAL driver jobs, and the event-log
       * timeline showed the round's wall dominated by the ~0.1-0.2 s
       * planning gaps between those jobs, not by task time (guide §2.6:
       * actions are only sequential because the driver calls them
-      * sequentially). Per-frame futures plan, build broadcasts and
-      * schedule concurrently; the per-table stats rows are identical. */
+      * sequentially). The per-frame actions plan, build broadcasts and
+      * schedule concurrently on [[graft.Par]]'s bounded per-call pool,
+      * each under the job description `slice/round-<k>/<table>`; the
+      * per-table stats rows are identical. */
     def ingest(fresh: Seq[(String, DataFrame)]): Unit = {
       val t0 = System.nanoTime()
       frontier = Map.empty
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val stats = fresh.map { case (t, df) =>
+      val persisted = fresh.map { case (t, df) =>
         val p = df.persist(StorageLevel.MEMORY_AND_DISK)
         // session-lifetime discovery state is family-scoped: the cache
         // manager holds persisted frames forever unless unpersisted, so
         // every generation registers for release (double-unpersist from
         // the compaction path below is a harmless no-op)
         graft.CacheBook.register(p.sparkSession, "slice")(() => { p.unpersist(false); () })
-        t -> (p, Future(countMaxOne(t, p)))
+        t -> p
       }
-      stats.map { case (t, (df, fut)) =>
-        val (n, mx) = Await.result(fut, Duration.Inf)
+      val k = round
+      round += 1
+      graft.Par.each(persisted) { case (t, df) =>
+        df.sparkSession.sparkContext.setJobDescription(s"slice/round-$k/$t")
+        val (n, mx) = countMaxOne(t, df)
         (t, (df, n, mx))
       }.foreach { case (t, (df, n, mx)) =>
         if (n > 0) {

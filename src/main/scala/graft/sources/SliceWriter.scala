@@ -18,7 +18,14 @@ import graft.operators.SliceResult
   */
 object SliceWriter {
 
-  /** @param scrub per-table output transform (e.g. a
+  /** Per-table segments plus the manifest. The table writes and the
+    * manifest's collect run concurrently on [[graft.Par]] (up to the
+    * context's `defaultParallelism` at once): each job is mostly
+    * driver-side planning and commit, which a sequential loop would
+    * serialize. `manifest.json` lands only after every write succeeded,
+    * so a failed dump never carries one.
+    *
+    * @param scrub per-table output transform (e.g. a
     *   [[graft.functions.ScrubConfig]]) applied while dumping — the
     *   reference scrubs during COPY-out, never in place.
     * @param format segment format (parquet | orc | csv | json) */
@@ -26,9 +33,17 @@ object SliceWriter {
       scrub: (String, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame =
         (_, df) => df,
       format: String = "parquet"): Unit = {
-    result.allRows.foreach { case (table, df) =>
-      Formats.write(scrub(table, df), s"$outDir/data/$table", format)
-    }
+    val rows = result.allRows
+    // None = the manifest task, Some(t) = table t's segments
+    val json = graft.Par.each(None +: rows.keys.toSeq.sorted.map(Some(_))) {
+      case Some(t) => Formats.write(scrub(t, rows(t)), s"$outDir/data/$t", format); ""
+      case None    => manifestJson(result)
+    }.head
+    Files.createDirectories(Paths.get(outDir))
+    Files.writeString(Paths.get(s"$outDir/manifest.json"), json)
+  }
+
+  private def manifestJson(result: SliceResult): String = {
     val counts = result.manifest.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val seqs = result.sequences.collect()
@@ -37,9 +52,7 @@ object SliceWriter {
       val lv = seqs.get(t).flatMap(Option(_)).map(_.toString).getOrElse("null")
       s"""    {"id": "$t", "row_count": ${counts(t)}, "last_value": $lv}"""
     }
-    val json = tables.mkString("{\n  \"tables\": [\n", ",\n", "\n  ]\n}\n")
-    Files.createDirectories(Paths.get(outDir))
-    Files.writeString(Paths.get(s"$outDir/manifest.json"), json)
+    tables.mkString("{\n  \"tables\": [\n", ",\n", "\n  ]\n}\n")
   }
 
   /** Bucketed-layout slice dump — the WAREHOUSE-landing format next to
@@ -78,10 +91,17 @@ object SliceWriter {
   /** Schema sections alongside the data (reference: pg_dump pre/post
     * sections embedded in the archive, slice_db/dump.py:112,174) so the
     * slice restores into an EMPTY database. Pure metadata — DataFrame
-    * schemas plus the FK graph, no jobs. */
+    * schemas plus the FK graph, no jobs.
+    *
+    * @param scrub the transform the data was dumped with: column types
+    *   come from the SCRUBBED schema, because some scrubs change them
+    *   (`null` → string, `date_year` on a timestamp → date) and the restored tables
+    *   must accept the dumped values. Schema-only; launches no jobs. */
   def writeSchema(result: SliceResult, graph: graft.plans.SchemaGraph,
-      outDir: String): Unit =
-    DdlWriter.write(graph, t => result.rows(t).schema, result.keys.keySet, outDir)
+      outDir: String,
+      scrub: (String, org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame =
+        (_, df) => df): Unit =
+    DdlWriter.write(graph, t => scrub(t, result.rows(t)).schema, result.keys.keySet, outDir)
 
   /** Package an already-written slice directory into a single ZIP —
     * literal parity with the reference's ZIP-of-segments archive

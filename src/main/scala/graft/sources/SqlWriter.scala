@@ -44,10 +44,15 @@ object SqlWriter {
     df.select(concat(parts: _*).as("stmt"))
   }
 
+  /** One script directory per table, `<outDir>/sql/<table>`. The tables
+    * write concurrently on [[graft.Par]] (up to the context's
+    * `defaultParallelism` at once); each table is still one job. */
   def write(result: SliceResult, outDir: String,
-      scrub: (String, DataFrame) => DataFrame = (_, df) => df): Unit =
-    result.allRows.foreach { case (table, df) =>
-      insertStatements(scrub(table, df), table)
+      scrub: (String, DataFrame) => DataFrame = (_, df) => df): Unit = {
+    val rows = result.allRows
+    graft.Par.each(rows.keys.toSeq.sorted) { table =>
+      insertStatements(scrub(table, rows(table)), table)
         .write.mode("overwrite").text(s"$outDir/sql/$table")
     }
+  }
 }

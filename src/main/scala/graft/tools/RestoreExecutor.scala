@@ -1,7 +1,7 @@
 package graft.tools
 
-import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, Executors, TimeUnit}
-import java.util.concurrent.atomic.{AtomicInteger, AtomicReference}
+import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
@@ -22,7 +22,14 @@ import graft.plans.SchemaGraph
   *    has finished loading — event-driven, NOT level-by-level barriers
   *    (a deep chain must not serialize its siblings; the reference's
   *    GraphRunner has the same property);
-  *  - at most `jobs` loads are in flight (the pool IS the semaphore);
+  *  - the wait graph applies only when the target already has the
+  *    constraints: with `includeSchema` the executor creates the tables
+  *    itself from pre-data, which declares none, so every table is
+  *    eligible at once and the FKs arrive with post-data after the
+  *    loads;
+  *  - at most `jobs` loads are in flight, on `jobs` workers of
+  *    [[graft.Par]] — so also never more than the Spark context's
+  *    `defaultParallelism`;
   *  - FK-cycle members (flagged by [[SchemaGraph.restoreOrder]]) drop
   *    their cycle back-edge from the wait graph and load in toposort
   *    position — on a target with deferrable constraints those are the
@@ -81,7 +88,8 @@ object RestoreExecutor {
     * table (completion order). Fails fast: the first error stops
     * scheduling, in-flight loads drain, and the error rethrows.
     *
-    * @param jobs concurrent table loads (≥ 1) — the semaphore width
+    * @param jobs concurrent table loads (≥ 1) — the semaphore width,
+    *   capped at the context's `defaultParallelism`
     * @param setSequence invoked once per manifest `last_value` AFTER
     *   all data (table, value) — dialect-specific statement
     * @param includeSchema install the slice's embedded DDL sections
@@ -90,7 +98,9 @@ object RestoreExecutor {
     *   an EMPTY target works — and `schema/post-data.sql` adds the
     *   PK/FK constraints AFTER all data (restore.py's section order;
     *   cycle back-edges are in post-data, so "constraint checked after
-    *   both sides exist" holds on targets without deferrable support)
+    *   both sides exist" holds on targets without deferrable support).
+    *   The freshly created tables have no FKs to violate, so the loads
+    *   ignore the FK wait graph and start together, up to `jobs`
     * @param ddlDialect per-statement rewrite of DdlWriter's PostgreSQL
     *   DDL into the target's dialect (identity for Postgres) */
   def apply(spark: SparkSession, graph: SchemaGraph, sliceDir: String,
@@ -119,94 +129,73 @@ object RestoreExecutor {
     // references count, matching restoreOrder: forward/reverse are
     // slice-DISCOVERY directions, but the target's FK constraint
     // exists either way (a forward=false parent loaded late would
-    // still violate it).
+    // still violate it). With `includeSchema` the tables are the ones
+    // pre-data just created, and pre-data declares no constraints
+    // (DdlWriter.preData): nothing to wait on, every table is eligible
+    // at once.
     val deps: Map[String, Set[String]] = present.iterator.map { t =>
-      t -> graph.references.collect {
+      t -> (if (includeSchema) Set.empty[String] else graph.references.collect {
         case r if r.table == t && r.refTable != t &&
           present(r.refTable) && pos(r.refTable) < pos(t) => r.refTable
-      }.toSet
+      }.toSet)
     }.toMap
 
-    val pool = Executors.newFixedThreadPool(jobs)
+    // `jobs` workers on graft.Par (the pool IS the semaphore); each
+    // takes the first eligible table, or waits for a load to finish
+    val waiting = collection.mutable.SortedSet.empty[String] ++ present
     val doneSet = collection.mutable.Set.empty[String]
-    val started = collection.mutable.Set.empty[String]
+    var failed = false
+    val lock = new Object
+    def nextTable(): Option[String] = lock.synchronized {
+      var pick = Option.empty[String]
+      while (!failed && pick.isEmpty && waiting.nonEmpty) {
+        pick = waiting.find(t => deps(t).forall(doneSet))
+        if (pick.isEmpty) lock.wait()
+      }
+      pick.foreach(waiting -= _)
+      pick
+    }
     val loads = new ConcurrentLinkedQueue[Load]()
     val inFlight = new AtomicInteger(0)
-    // submitted-but-unfinished count, incremented AT SUBMIT TIME under
-    // the lock: the fail-fast drain below must wait on this, not on
-    // inFlight — a task accepted by the pool but not yet through its
-    // own inFlight.incrementAndGet() is invisible to inFlight, and
-    // draining on inFlight==0 could shutdownNow() (interrupting a JDBC
-    // load that just started) while such a task exists.
-    val pending = new AtomicInteger(0)
     val peak = new AtomicInteger(0)
-    val firstError = new AtomicReference[Throwable](null)
-    val allDone = new CountDownLatch(present.size)
-    val lock = new Object
-
-    def schedule(): Unit = lock.synchronized {
-      if (firstError.get() != null) return
-      val ready = present.toSeq.sorted.filter(t =>
-        !started(t) && !doneSet(t) && deps(t).forall(doneSet))
-      ready.foreach { t =>
-        started += t
-        pending.incrementAndGet()
-        pool.submit(new Runnable {
-          override def run(): Unit = {
-            val cur = inFlight.incrementAndGet()
-            peak.updateAndGet(p => math.max(p, cur))
-            val t0 = System.nanoTime()
-            try {
-              spark.read.parquet(s"$sliceDir/data/$t")
-                .write.mode("append").jdbc(url, t, props)
-              val t1 = System.nanoTime()
-              // row count from the manifest — the accounting target;
-              // a post-write df.count() would re-scan the parquet
-              loads.add(Load(t,
-                manifest.collectFirst { case (`t`, n, _) => n }.getOrElse(-1L),
-                t0, t1))
-              lock.synchronized { doneSet += t }
-            } catch {
-              case e: Throwable => firstError.compareAndSet(null, e); ()
-            } finally {
-              inFlight.decrementAndGet()
-              pending.decrementAndGet()
-              allDone.countDown()
-              schedule()
-            }
-          }
-        })
-        ()
+    graft.Par.each(1 to jobs) { _ =>
+      var next = nextTable()
+      while (next.isDefined) {
+        val t = next.get
+        val cur = inFlight.incrementAndGet()
+        peak.updateAndGet(p => math.max(p, cur))
+        val t0 = System.nanoTime()
+        try {
+          spark.read.parquet(s"$sliceDir/data/$t")
+            .write.mode("append").jdbc(url, t, props)
+          // row count from the manifest — the accounting target; a
+          // post-write df.count() would re-scan the parquet
+          loads.add(Load(t,
+            manifest.collectFirst { case (`t`, n, _) => n }.getOrElse(-1L),
+            t0, System.nanoTime()))
+          lock.synchronized { doneSet += t; lock.notifyAll() }
+        } catch {
+          case e: Throwable =>
+            lock.synchronized { failed = true; lock.notifyAll() }
+            throw e
+        } finally inFlight.decrementAndGet()
+        next = nextTable()
       }
     }
-
-    try {
-      schedule()
-      // fail fast: poll the latch so an error doesn't hang the drain
-      while (!allDone.await(50, TimeUnit.MILLISECONDS)) {
-        if (firstError.get() != null && pending.get() == 0) {
-          throw firstError.get()
-        }
-      }
-      if (firstError.get() != null) throw firstError.get()
-      // post-data constraints AFTER every load (the reference's section
-      // order: pg_restore applies post-data once the data section is in)
-      if (includeSchema && java.nio.file.Files.isReadable(
-          schemaDir.resolve("post-data.sql")))
-        runSection(url, props, schemaDir.resolve("post-data.sql"), ddlDialect)
-      // sequences LAST — deliberately INVERTING the reference's
-      // ordering (slice_db/restore.py calls _restore_sequences before
-      // _restore_rows). Equivalent because the rows carry explicit key
-      // values either way (neither engine draws from the sequence
-      // during the load); setting last_value after the data keeps the
-      // executor's fail-fast property (a failed load never leaves the
-      // target's sequences advanced past data that was never written).
-      manifest.foreach { case (t, _, lv) => lv.foreach(setSequence(t, _)) }
-      require(peak.get() <= jobs, s"semaphore breached: ${peak.get()} > $jobs")
-      loads.iterator().asScala.toSeq
-    } finally {
-      pool.shutdownNow()
-      ()
-    }
+    // post-data constraints AFTER every load (the reference's section
+    // order: pg_restore applies post-data once the data section is in)
+    if (includeSchema && java.nio.file.Files.isReadable(
+        schemaDir.resolve("post-data.sql")))
+      runSection(url, props, schemaDir.resolve("post-data.sql"), ddlDialect)
+    // sequences LAST — deliberately INVERTING the reference's
+    // ordering (slice_db/restore.py calls _restore_sequences before
+    // _restore_rows). Equivalent because the rows carry explicit key
+    // values either way (neither engine draws from the sequence
+    // during the load); setting last_value after the data keeps the
+    // executor's fail-fast property (a failed load never leaves the
+    // target's sequences advanced past data that was never written).
+    manifest.foreach { case (t, _, lv) => lv.foreach(setSequence(t, _)) }
+    require(peak.get() <= jobs, s"semaphore breached: ${peak.get()} > $jobs")
+    loads.iterator().asScala.toSeq
   }
 }

@@ -109,8 +109,9 @@ object SliceDump {
     RestoreWriter.write(graph, outDir, seqs, s"$outDir/restore.sql",
       result.keys.keySet, transaction, disableTriggers, jobs)
     // schema sections (pre-data CREATE TABLEs, post-data constraints) so
-    // the archive restores into an empty database
-    SliceWriter.writeSchema(result, graph, outDir)
+    // the archive restores into an empty database; typed from the
+    // scrubbed schemas, like the data
+    SliceWriter.writeSchema(result, graph, outDir, scrub)
     // reference-parity single-archive output (slice_db ZIP-of-segments)
     if (sys.env.get("SPARK_GRAFT_SLICE_ZIP").contains("1"))
       SliceWriter.zip(outDir, s"$outDir.zip")

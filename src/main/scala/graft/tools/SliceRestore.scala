@@ -40,17 +40,20 @@ object SliceRestore {
       tmp
     } else path
 
-  /** Per-table (id, manifestCount, actualCount); registers temp views. */
+  /** Per-table (id, manifestCount, actualCount); registers temp views.
+    * The counts run concurrently on [[graft.Par]]; the views register
+    * on the calling thread. */
   def validate(spark: SparkSession, sliceDir: String): Seq[(String, Long, Long)] = {
     val manifest = new ObjectMapper()
       .readTree(java.nio.file.Files.readString(
         java.nio.file.Paths.get(s"$sliceDir/manifest.json")))
-    manifest.get("tables").elements().asScala.map { t =>
+    val tables = manifest.get("tables").elements().asScala.map { t =>
       val id = t.get("id").asText()
       val df = spark.read.parquet(s"$sliceDir/data/$id")
       df.createOrReplaceTempView(id)
-      (id, t.get("row_count").asLong(), df.count())
+      (id, t.get("row_count").asLong(), df)
     }.toSeq
+    graft.Par.each(tables) { case (id, expected, df) => (id, expected, df.count()) }
   }
 
   /** Per-reference orphan count over restored data: child FK values
@@ -58,21 +61,21 @@ object SliceRestore {
     * to fixpoint is FK-CLOSED along its forward references, so every
     * count must be 0 — the restore-side proof that the discovery
     * semantics held (the reference gets this for free from the target
-    * database's constraints; a lake restore has to check). */
+    * database's constraints; a lake restore has to check). One
+    * concurrent count per reference on [[graft.Par]]. */
   def validateRefs(spark: SparkSession, graph: graft.plans.SchemaGraph,
       sliceDir: String): Seq[(String, Long)] = {
     import org.apache.spark.sql.functions.col
     def has(t: String) =
       java.nio.file.Files.exists(java.nio.file.Paths.get(s"$sliceDir/data/$t"))
-    graph.references
-      .filter(r => r.forward && has(r.table) && has(r.refTable))
-      .map { r =>
-        val vals = spark.read.parquet(s"$sliceDir/data/${r.table}")
-          .select(r.columns.map(col): _*).na.drop("any").toDF(r.refColumns: _*)
-        val parent = spark.read.parquet(s"$sliceDir/data/${r.refTable}")
-          .select(r.refColumns.map(col): _*)
-        r.id -> vals.join(parent, r.refColumns, "left_anti").count()
-      }
+    val refs = graph.references.filter(r => r.forward && has(r.table) && has(r.refTable))
+    graft.Par.each(refs) { r =>
+      val vals = spark.read.parquet(s"$sliceDir/data/${r.table}")
+        .select(r.columns.map(col): _*).na.drop("any").toDF(r.refColumns: _*)
+      val parent = spark.read.parquet(s"$sliceDir/data/${r.refTable}")
+        .select(r.refColumns.map(col): _*)
+      r.id -> vals.join(parent, r.refColumns, "left_anti").count()
+    }
   }
 
   def main(args: Array[String]): Unit = {
