@@ -114,6 +114,7 @@ final class CentroidBank(val cids: Array[Long], val flat: Array[Double],
   /** Top-`topN` centroid ids of `v`'s bank in rank order (score
     * best-first, cid ascending on ties). */
   def nearest(v: ArrayData, n: Double, bankIdx: Int, topN: Int): ArrayData = {
+    require(bankIdx >= 0 && bankIdx < banks, s"bank $bankIdx outside 0..${banks - 1}")
     val off = bankIdx * k
     val keep = math.min(topN, k)
     val topCid = new Array[Long](keep)

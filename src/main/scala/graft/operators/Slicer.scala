@@ -1,7 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, EvalMode}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 import org.apache.spark.storage.StorageLevel
 
 import graft.plans.SchemaGraph
@@ -68,7 +76,39 @@ object Slicer {
       } else scopeState(spark) = (depth - 1, w, a)
     }
   }
+  /** One relation of the BFS: rows held on the driver (in their table's
+    * column types), or a DataFrame (`small` = fits a broadcast). */
+  private[operators] sealed trait Rel
+  private[operators] final case class Held(rows: Seq[Row]) extends Rel
+  private[operators] final case class Frame(df: DataFrame, small: Boolean) extends Rel
+
+  /** Spark's cast of one external value from `from` to `to`, evaluated on
+    * the driver (`mode` as in [[Cast]]; null in, null out). */
+  private def cast(from: DataType, to: DataType, mode: EvalMode.Value): Any => Any =
+    if (from == to) identity
+    else {
+      val c = Cast(BoundReference(0, from, nullable = true), to,
+        Option(SQLConf.get.sessionLocalTimeZone), mode)
+      val in = CatalystTypeConverters.createToCatalystConverter(from)
+      val out = CatalystTypeConverters.createToScalaConverter(to)
+      v => out(c.eval(InternalRow(in(v))))
+    }
+
+  /** Coerce a value into a column type as a join would compare it; null
+    * when the type cannot hold it. */
+  private[operators] def tryCast(from: DataType, to: DataType): Any => Any =
+    cast(from, to, EvalMode.TRY)
+
+  /** `cast(v as long)` with the session's semantics — the max a frame's
+    * action computes in Spark, for a frame built on the driver. */
+  private[operators] def castLong(from: DataType): Any => Any =
+    cast(from, LongType, EvalMode.fromSQLConf(SQLConf.get))
+
+  private[operators] def collectUpTo(c: Column, limit: Long): Column =
+    ColumnBridge.column(
+      CollectUpTo(ColumnBridge.expression(c), limit).toAggregateExpression())
 }
+
 
 /** Graph-guided subsetting — the Spark-native re-expression of the
   * reference's dump discovery loop (slice_db/dump_memory.py,
@@ -76,33 +116,49 @@ object Slicer {
   *
   * The reference walks the FK graph breadth-first, keeping every
   * discovered row ID in driver RAM (`_DiscoveryResult`, an IntSet per
-  * table) and issuing one SQL query per (segment, reference). That caps
-  * out at RAM; graft instead keeps the discovered key set of each table
-  * as a DataFrame and advances the whole frontier one BFS round at a
-  * time:
+  * table) and issuing one SQL query per (segment, reference). graft
+  * advances the whole frontier one BFS round at a time:
   *
   *   frontier FK values --forward ref--> parent keys  (child pulls parents)
   *   frontier keys --reverse ref--> child keys        (parent pulls children)
-  *   new keys = candidates ANTI JOIN discovered       (the IntSet dedup)
+  *   new keys = candidates minus discovered           (the IntSet dedup)
   *
-  * Scale posture (100 TB): nothing is ever collected to the driver; each
-  * round is a handful of semi/anti joins that shuffle on the FK columns.
-  * Rounds are bounded by the FK-graph diameter, not the data size, and a
-  * round costs exactly ONE Spark action (a fused count+max over every
-  * fresh frontier). Three things keep the per-round scan count minimal:
+  * Where the keys live: while a table has at most `broadcastKeyLimit`
+  * discovered rows, its key set is HELD on the driver as rows — the gate
+  * and bound under which a broadcast pulled it through the driver anyway.
+  * Past the limit its new generations stay distributed (persisted
+  * DataFrames, compacted every few rounds, shuffle anti-joins), so the
+  * driver's share of a 100 TB slice stays bounded. Measuring a fresh
+  * frame is one action: its count, max(first key cast to long) and, if
+  * it fits, its rows ([[CollectUpTo]]: each partition keeps at most its
+  * share of the table's remaining room, so the shuffle to the one
+  * reducer carries at most room + #partitions rows, and the driver never
+  * receives more than the limit). A held table's candidates are measured
+  * before deduplication; only if they overflow is the deduplicated frame
+  * measured by a second action. From held frontiers, FK value sets, set
+  * differences against held keys and forward hops onto an aux-free
+  * primary key are driver work; only a real scan launches a job — a
+  * semi-join of `loadTable` against the held values as a broadcast
+  * LocalRelation (the values stay in Spark: a JDBC source never receives
+  * them in its WHERE). A table may hold keys and later receive a
+  * distributed generation; its set differences then run in Spark. Rounds are bounded by the FK-graph diameter, not the data
+  * size. Three things keep the per-round scan count minimal:
   *
   *   - frontier frames are AUGMENTED with the FK columns the next round
-  *     needs, so expansion never re-reads the rows behind the frontier
-  *     (the r03 BFS re-scanned the frontier's own table every round);
-  *   - FK values aimed at an already-discovered table are anti-joined
-  *     against the seen keys FIRST, shrinking the re-discovery
-  *     semi-join's build side (under SPARK_GRAFT_SLICE_AQE=true, AQE
-  *     can then eliminate the scan at runtime; discovery disables AQE
-  *     by default, where the win is the smaller build side);
+  *     needs, so expansion never re-reads the rows behind the frontier;
+  *   - FK values aimed at an already-discovered table lose the seen keys
+  *     FIRST, so a re-discovery scan whose values are all seen is skipped
+  *     (held) or has an empty build side (distributed);
   *   - when an FK targets the parent's primary key and the parent needs
   *     no aux columns, the FK values ARE the discovered keys — the
   *     parent table is not scanned at all during discovery (the same
   *     FK-value semantics the reference's manifest counts).
+  *
+  * Held rows keep their table's own column types: FK values crossing a
+  * reference are try-cast to the target's column types (an int FK onto a
+  * bigint key becomes the bigint the join would compare; a value the
+  * target type cannot hold matches no row and drops), so a driver-side
+  * set difference drops exactly what the anti-join would.
   *
   * INTEGRITY CAVEAT (the forward no-scan shortcut): treating FK values
   * as discovered parent keys assumes referential integrity — true for
@@ -113,22 +169,24 @@ object Slicer {
   * rows than the manifest claims and restore-side validation fails
   * after the fact. Set SPARK_GRAFT_SLICE_TRUST_FK=false for sources of
   * unknown integrity: every forward candidate then validates through
-  * the same semi-join scan the reverse path always uses (one extra
-  * scan per parent table per round — correctness over speed).
+  * the same scan the reverse path always uses (one extra scan per
+  * parent table per round — correctness over speed).
   */
 final class Slicer(
     graph: SchemaGraph,
     loadTable: String => DataFrame,
     broadcastKeyLimit: Long = 1000000L) {
+  import Slicer.{Frame, Held, Rel}
 
   private def keyCols(t: String): Seq[String] = graph.table(t).key
 
   /** FK columns a frontier frame of `t` carries so the NEXT round can
-    * expand straight off the cached frontier. */
+    * expand straight off the frontier. */
   private def auxCols(t: String): Seq[String] =
     (graph.refsFrom(t).flatMap(_.columns) ++ graph.refsTo(t).flatMap(_.refColumns))
       .distinct.filterNot(keyCols(t).contains)
 
+  /** Key columns first: a held row's key is its prefix. */
   private def augCols(t: String): Seq[String] = keyCols(t) ++ auxCols(t)
 
   /** BFS to fixpoint; returns the discovered key set per table. */
@@ -150,20 +208,20 @@ final class Slicer(
     new SliceResult(graph, loadTable, keys, counts, maxes, broadcastKeyLimit)
   }
 
-  /** How many persisted key generations a table accumulates before they
-    * are compacted into one localCheckpoint'd frame. Generations are
+  /** How many distributed key generations a table accumulates before
+    * they are compacted into one localCheckpoint'd frame. Generations are
     * individually cached, so anti-joins against their lazy union stay
     * cheap; compaction only exists to bound plan width on FK graphs far
-    * deeper than any real schema. Between compactions a BFS round costs
-    * exactly ONE Spark action (the fused count+max) — per-round eager
-    * checkpoints measured 2-3x slower. */
+    * deeper than any real schema — per-round eager checkpoints measured
+    * 2-3x slower. */
   private val compactEvery = 8
 
   /** Discovery plus the exact key count and max(key) per table. Both
-    * fall out of the per-round termination test for free: the count
-    * gates broadcasts and IS the manifest (keys are the declared primary
-    * key, so key count == row count), the max IS the sequence capture —
-    * so manifest/sequences consumers cost zero extra Spark jobs.
+    * fall out of the per-frame action (or, for driver-built frames, the
+    * held rows): the count gates broadcasts and IS the manifest (keys
+    * are the declared primary key, so key count == row count), the max
+    * IS the sequence capture — so manifest/sequences consumers cost zero
+    * extra Spark jobs.
     *
     * @param priorKeys / @param priorCounts / @param priorMaxes a previous
     *   discovery's closed key state to extend incrementally */
@@ -174,10 +232,10 @@ final class Slicer(
       priorMaxes: Map[String, Long] = Map.empty)
       : (Map[String, DataFrame], Map[String, Long], Map[String, Long]) = {
     // scope shuffle width to the key traffic, not the session default:
-    // discovery shuffles key columns only (a reduction of the row data),
-    // and a BFS round chains several exchanges whose per-task overhead
-    // is the dominant cost once key sets are small relative to the
-    // cluster. Same knob pattern as ConnectedComponents; on a cluster
+    // distributed discovery shuffles key columns only (a reduction of the
+    // row data), and a round chains several exchanges whose per-task
+    // overhead is the dominant cost once key sets are small relative to
+    // the cluster. Same knob pattern as ConnectedComponents; on a cluster
     // size it to the expected key volume via the env var. The scope is
     // REFCOUNTED ([[Slicer.discoveryScope]]) so independent discoveries
     // may run concurrently (slice_diff overlaps its two root cohorts):
@@ -194,181 +252,269 @@ final class Slicer(
       priorCounts: Map[String, Long],
       priorMaxes: Map[String, Long])
       : (Map[String, DataFrame], Map[String, Long], Map[String, Long]) = {
-    // per-table KEY-ONLY generations (anti-join state + final output) and
-    // the persisted aug frames backing them (unpersisted on compaction)
-    var genKeys: Map[String, Vector[DataFrame]] =
-      priorKeys.map { case (t, k) => t -> Vector(k) }
+    val spark = SparkSession.active
+    val types = collection.concurrent.TrieMap.empty[(String, Seq[String]), StructType]
+    def typesOf(t: String, cols: Seq[String]): StructType =
+      types.getOrElseUpdate((t, cols), loadTable(t).select(cols.map(col): _*).schema)
+    def local(t: String, cols: Seq[String], rows: Iterable[Row]): DataFrame =
+      spark.createDataFrame(rows.toSeq.asJava, typesOf(t, cols))
+    def keyOf(t: String)(row: Row): Row = Row.fromSeq(row.toSeq.take(keyCols(t).size))
+
+    // per table: HELD key tuples (in the table's key types), DISTRIBUTED
+    // key generations and the persisted aug frames backing them
+    // (unpersisted on compaction)
+    val held = collection.mutable.Map.empty[String, collection.mutable.HashSet[Row]]
+    var spread = Map.empty[String, Vector[DataFrame]]
     var genBases = Map.empty[String, Vector[DataFrame]]
     var counts = Map.empty[String, Long].withDefaultValue(0L) ++ priorCounts
     var maxes = Map.empty[String, Long] ++ priorMaxes
-    var frontier = Map.empty[String, (DataFrame, Long)] // aug frame, count
+    var frontier = Map.empty[String, Rel]
+    priorKeys.foreach { case (t, k) => k.queryExecution.analyzed match {
+      case _: LocalRelation => // a held prior: collecting local data runs no job
+        held(t) = collection.mutable.HashSet.from(k.collect().toSeq.map(keyOf(t)))
+      case _ => spread += t -> Vector(k)
+    }}
     def seenOf(t: String): Option[DataFrame] =
-      genKeys.get(t).map(_.reduce(_ union _))
+      (held.get(t).filter(_.nonEmpty).map(local(t, keyCols(t), _)) ++
+        spread.getOrElse(t, Vector.empty)).reduceOption(_ union _)
+    def asFrame(t: String, cols: Seq[String], r: Rel): Frame = r match {
+      case Held(rows) => Frame(local(t, cols, rows), small = true)
+      case f: Frame   => f
+    }
+
+    /** Values of `cols` of `t`'s frontier, renamed to `tt`'s columns `to`:
+      * distinct, null-free, in `tt`'s column types. */
+    def valsOf(t: String, from: Rel, cols: Seq[String], tt: String, to: Seq[String]): Rel =
+      from match {
+        case Held(rows) =>
+          val idx = cols.map(augCols(t).indexOf)
+          val conv = typesOf(t, cols).zip(typesOf(tt, to))
+            .map { case (a, b) => Slicer.tryCast(a.dataType, b.dataType) }
+          Held(rows.iterator.map(r => idx.map(r.get))
+            .filterNot(_.contains(null))
+            .map(_.zip(conv).map { case (v, c) => c(v) })
+            .filterNot(_.contains(null))
+            .map(Row.fromSeq).distinct.toVector)
+        case Frame(df, small) =>
+          Frame(df.select(cols.map(col): _*).na.drop("any").distinct().toDF(to: _*), small)
+      }
+
+    /** Candidate aug rows of target `tt` reached through its columns `jc`
+      * carrying the FK value set `vals`; `forward` = a child frontier
+      * pulling its parents. */
+    def candidate(tt: String, jc: Seq[String], vals: Rel, forward: Boolean): Rel = {
+      val keyRef = jc == keyCols(tt) // join lands on the target's primary key
+      // keys already discovered can't be fresh: drop the seen keys FIRST
+      // — on the driver while every seen key of `tt` is held, else by an
+      // anti-join (AQE off, see discover(), the win is the semi-join's
+      // smaller build side; under SPARK_GRAFT_SLICE_AQE=true AQE can
+      // eliminate the re-discovery scan at runtime)
+      val fresh = if (!keyRef) vals else vals match {
+        case Held(rows) if !spread.contains(tt) =>
+          val seen = held.getOrElse(tt, collection.mutable.HashSet.empty[Row])
+          Held(rows.filterNot(seen))
+        case _ => seenOf(tt) match {
+          case None => vals
+          case Some(seen) =>
+            val Frame(v, small) = asFrame(tt, jc, vals)
+            Frame(v.join(if (counts(tt) <= broadcastKeyLimit) broadcast(seen) else seen,
+              jc, "left_anti"), small)
+        }
+      }
+      // FORWARD only, and only while FK values can be TRUSTED
+      // (Slicer.trustForwardKeys): FK values onto an aux-free PK ARE
+      // the candidate keys — no scan. This leans on referential
+      // integrity (an FK value names an existing parent row), which
+      // holds for an enforced-constraint source but NOT necessarily
+      // for lake data — see the class doc for the failure mode and
+      // the SPARK_GRAFT_SLICE_TRUST_FK opt-out. The shortcut must
+      // NEVER fire on reverse traversal regardless: integrity says
+      // nothing about a parent key existing in a child (a 1:1
+      // extension table keyed by the parent's key may cover only some
+      // parents), so reverse candidates always validate against a
+      // real scan of the child.
+      if (forward && keyRef && auxCols(tt).isEmpty && Slicer.trustForwardKeys) fresh
+      else fresh match {
+        case Held(vs) if vs.isEmpty => fresh // every value seen: no scan
+        case _ =>
+          // the scan: a semi-join against the values (held ones as a
+          // broadcast LocalRelation)
+          val Frame(v, small) = asFrame(tt, jc, fresh)
+          Frame(loadTable(tt).join(if (small) broadcast(v) else v, jc, "left_semi")
+            .select(augCols(tt).map(col): _*), small = false)
+      }
+    }
+
+    /** `rows` of a frame of `tt` (columns augCols(tt), types `schema`) in
+      * `tt`'s own column types; a row whose key the cast loses drops. */
+    def conform(tt: String, schema: StructType, rows: Seq[Row]): Seq[Row] = {
+      val conv = schema.zip(typesOf(tt, augCols(tt)))
+        .map { case (a, b) => Slicer.tryCast(a.dataType, b.dataType) }
+      val nk = keyCols(tt).size
+      rows.map(r => Row.fromSeq(conv.indices.map(i => if (r.isNullAt(i)) null else conv(i)(r.get(i)))))
+        .filterNot(r => (0 until nk).exists(r.isNullAt))
+    }
+
+    def maxKey(tt: String, rows: Seq[Row]): Option[Long] = {
+      val c = Slicer.castLong(typesOf(tt, keyCols(tt)).head.dataType)
+      rows.iterator.map(r => c(r.get(0))).collect { case v: Long => v }.maxOption
+    }
+
+    // frames persisted by this round's actions, registered for release
+    // after the round (see advance)
+    val persisted = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+
+    /** One action over a fresh frame: count, max(first key cast to
+      * long) and, while `tt` stays within broadcastKeyLimit discovered
+      * rows, the rows themselves (each partition ships at most its share
+      * of the room, see [[CollectUpTo]]). A frame too big to hold stays
+      * persisted for the next round to expand. */
+    def measure(tt: String, df: DataFrame): (Rel, Long, Option[Long]) = {
+      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
+      persisted.add(p)
+      val r = p.agg(count(lit(1)), max(col(keyCols(tt).head).cast("long")),
+          Slicer.collectUpTo(struct(p.columns.toSeq.map(col): _*),
+            broadcastKeyLimit - counts(tt)))
+        .collect().head
+      val n = r.getLong(0)
+      if (r.isNullAt(2))
+        (Frame(p, small = n <= broadcastKeyLimit), n, if (r.isNullAt(1)) None else Some(r.getLong(1)))
+      else {
+        p.unpersist(false)
+        val rows = conform(tt, p.schema, r.getSeq[Row](2))
+        (Held(rows), rows.size.toLong, maxKey(tt, rows))
+      }
+    }
+
+    /** `tt`'s fresh frontier from the round's candidates: the distinct
+      * candidate rows whose key is not yet discovered, with count and
+      * max. Driver work while every candidate and seen key of `tt` is
+      * held; otherwise one action on the candidate frames (a second,
+      * anti-joining in Spark, only if they turn out too big to hold). */
+    def settle(tt: String, cands: Seq[Rel]): (Rel, Long, Option[Long]) = {
+      val heldRows = cands.collect { case Held(rows) => rows }.flatten
+      val frames = cands.collect { case Frame(df, _) => df.select(augCols(tt).map(col): _*) }
+      def inSpark(dfs: Seq[DataFrame]): (Rel, Long, Option[Long]) = {
+        val cand = (dfs ++ Option.when(heldRows.nonEmpty)(local(tt, augCols(tt), heldRows)))
+          .reduce(_ union _).distinct()
+        measure(tt, seenOf(tt).fold(cand)(seen => cand.join(seen, keyCols(tt), "left_anti")))
+      }
+      def onDriver(rows: Seq[Row]): (Rel, Long, Option[Long]) = {
+        val seen = held.getOrElse(tt, collection.mutable.HashSet.empty[Row])
+        val fresh = rows.distinct.filterNot(r => seen(keyOf(tt)(r)))
+        val rel = if (counts(tt) + fresh.size <= broadcastKeyLimit) Held(fresh)
+          else asFrame(tt, augCols(tt), Held(fresh))
+        (rel, fresh.size.toLong, maxKey(tt, fresh))
+      }
+      if (spread.contains(tt)) inSpark(frames)
+      else if (frames.isEmpty) onDriver(heldRows)
+      else measure(tt, frames.reduce(_ union _)) match {
+        case (Held(rows), _, _) => onDriver(heldRows ++ rows)
+        case (big: Frame, _, _) =>
+          val out = inSpark(Seq(big.df))
+          big.df.unpersist(false)
+          out
+      }
+    }
 
     var round = 0
 
-    /** Persist fresh frontiers, materialize the round's count+max stats,
-      * fold the survivors into the discovered state. Round 15: one
-      * SMALL ACTION PER FRAME, run concurrently, instead of the r14
-      * single fused action — the fused plan was one job, but its
-      * broadcast builds (one per semi/anti join in the round's chains)
-      * ran as strictly SEQUENTIAL driver jobs, and the event-log
-      * timeline showed the round's wall dominated by the ~0.1-0.2 s
-      * planning gaps between those jobs, not by task time (guide §2.6:
-      * actions are only sequential because the driver calls them
-      * sequentially). The per-frame actions plan, build broadcasts and
-      * schedule concurrently on [[graft.Par]]'s bounded per-call pool,
-      * each under the job description `slice/round-<k>/<table>`; the
-      * per-table stats rows are identical. */
-    def ingest(fresh: Seq[(String, DataFrame)]): Unit = {
+    /** Settle every target's candidates into the next frontier and fold
+      * it into the discovered state. The targets' actions run side by
+      * side on [[graft.Par]]'s bounded per-call pool, each under the job
+      * description `slice/round-<k>/<table>` (actions are only
+      * sequential because a driver calls them sequentially; the planning
+      * gaps between them dominated the r14 round). */
+    def advance(cands: Seq[(String, Seq[Rel])]): Unit = {
       val t0 = System.nanoTime()
-      frontier = Map.empty
-      val persisted = fresh.map { case (t, df) =>
-        val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-        // session-lifetime discovery state is family-scoped: the cache
-        // manager holds persisted frames forever unless unpersisted, so
-        // every generation registers for release (double-unpersist from
-        // the compaction path below is a harmless no-op)
-        graft.CacheBook.register(p.sparkSession, "slice")(() => { p.unpersist(false); () })
-        t -> p
-      }
       val k = round
       round += 1
-      graft.Par.each(persisted) { case (t, df) =>
-        df.sparkSession.sparkContext.setJobDescription(s"slice/round-$k/$t")
-        val (n, mx) = countMaxOne(t, df)
-        (t, (df, n, mx))
-      }.foreach { case (t, (df, n, mx)) =>
-        if (n > 0) {
-          frontier += t -> (df, n)
-          counts += t -> (counts(t) + n)
-          mx.foreach(m => maxes += t -> math.max(maxes.getOrElse(t, Long.MinValue), m))
-          val bases = genBases.getOrElse(t, Vector.empty) :+ df
-          val keysV = genKeys.getOrElse(t, Vector.empty) :+
-            df.select(keyCols(t).map(col): _*)
-          if (keysV.size < compactEvery) {
-            genBases += t -> bases
-            genKeys += t -> keysV
-          } else {
-            // compact: one checkpointed frame replaces the generation
-            // stack, bounding plan width on very deep FK graphs. The
-            // live frontier frame stays persisted (the next round still
-            // expands it); it is released on the NEXT compaction.
-            val merged = keysV.reduce(_ union _).localCheckpoint(true)
-            graft.CacheBook.register(merged.sparkSession, "slice")(() =>
-              graft.CacheBook.unpersistCheckpoint(merged))
-            bases.filterNot(_ eq df).foreach(_.unpersist())
-            genBases += t -> Vector(df)
-            genKeys += t -> Vector(merged)
+      val settled =
+        try graft.Par.each(cands) { case (tt, rels) =>
+          spark.sparkContext.setJobDescription(s"slice/round-$k/$tt")
+          tt -> settle(tt, rels)
+        } finally {
+          // session-lifetime discovery state is family-scoped: the cache
+          // manager holds persisted frames forever unless unpersisted, so
+          // every generation registers for release (double-unpersist is a
+          // harmless no-op). Registered here, on the calling thread, where
+          // CacheBook's thread-local build context attaches them to a
+          // memo under construction.
+          persisted.asScala.foreach(p =>
+            graft.CacheBook.register(p.sparkSession, "slice")(() => { p.unpersist(false); () }))
+          persisted.clear()
+        }
+      frontier = Map.empty
+      settled.foreach {
+        case (tt, (rel, n, mx)) if n > 0 =>
+          frontier += tt -> rel
+          counts += tt -> (counts(tt) + n)
+          mx.foreach(m => maxes += tt -> math.max(maxes.getOrElse(tt, Long.MinValue), m))
+          rel match {
+            case Held(rows) =>
+              held.getOrElseUpdate(tt, collection.mutable.HashSet.empty) ++= rows.map(keyOf(tt))
+            case Frame(df, _) =>
+              val bases = genBases.getOrElse(tt, Vector.empty) :+ df
+              val keysV = spread.getOrElse(tt, Vector.empty) :+
+                df.select(keyCols(tt).map(col): _*)
+              if (keysV.size < compactEvery) {
+                genBases += tt -> bases
+                spread += tt -> keysV
+              } else {
+                // compact: one checkpointed frame replaces the generation
+                // stack, bounding plan width on very deep FK graphs. The
+                // live frontier frame stays persisted (the next round
+                // still expands it); it is released on the NEXT compaction.
+                val merged = keysV.reduce(_ union _).localCheckpoint(true)
+                graft.CacheBook.register(merged.sparkSession, "slice")(() =>
+                  graft.CacheBook.unpersistCheckpoint(merged))
+                bases.filterNot(_ eq df).foreach(_.unpersist())
+                genBases += tt -> Vector(df)
+                spread += tt -> Vector(merged)
+              }
           }
-        } else df.unpersist()
+        case (_, (Frame(df, _), _, _)) => df.unpersist()
+        case _ => ()
       }
       // operational visibility only; no behavior change
       if (sys.env.contains("GRAFT_SLICE_DEBUG"))
         System.err.println(f"[slicer] round: ${(System.nanoTime() - t0) / 1e9}%.2fs " +
-          s"fresh=${frontier.map { case (t, (_, n)) => s"$t:$n" }.mkString(",")}")
+          s"fresh=${settled.collect { case (t, (r, n, _)) if n > 0 =>
+            s"$t:$n${if (r.isInstanceOf[Held]) "(held)" else ""}" }.mkString(",")}")
     }
 
     // seed: root conditions (multi-root unions on the same table dedup
-    // through the same anti-join path as everything else); when
+    // through the same set difference as everything else); when
     // extending, seeds already covered by the prior slice drop out here
-    val seeds = roots.groupBy(_.table).map { case (t, rs) =>
+    advance(roots.groupBy(_.table).toSeq.map { case (t, rs) =>
       val cond = rs.map(r => s"(${r.condition})").mkString(" OR ")
-      val sel = loadTable(t).filter(expr(cond))
-        .select(augCols(t).map(col): _*).distinct()
-      t -> (seenOf(t) match {
-        case Some(seen) => sel.join(seen, keyCols(t), "left_anti")
-        case None       => sel
-      })
-    }
-    ingest(seeds.toSeq)
+      t -> Seq(Frame(loadTable(t).filter(expr(cond)).select(augCols(t).map(col): _*),
+        small = false))
+    })
 
     while (frontier.nonEmpty) {
-      /** Candidate aug frame for target `tt` reached through join
-        * columns `jc` carrying the (distinct, null-free) FK value set
-        * `vals`; `small` = the source frontier fits a broadcast;
-        * `forward` = a child frontier pulling its parents. */
-      def candidate(tt: String, jc: Seq[String], vals: DataFrame,
-          small: Boolean, forward: Boolean): DataFrame = {
-        val keyRef = jc == keyCols(tt) // join lands on the target's primary key
-        // keys already discovered can't be fresh: anti-join the value
-        // set against the seen keys FIRST — on the default path (AQE
-        // off, see discover()) this shrinks the semi-join's build side
-        // (often to empty, making the probe a hash-lookup no-op); only
-        // under SPARK_GRAFT_SLICE_AQE=true can AQE go further and
-        // eliminate the re-discovery scan outright at runtime
-        val fresh = if (keyRef) seenOf(tt) match {
-          case Some(seen) if counts(tt) <= broadcastKeyLimit =>
-            vals.join(broadcast(seen), jc, "left_anti")
-          case Some(seen) => vals.join(seen, jc, "left_anti")
-          case None       => vals
-        } else vals
-        // FORWARD only, and only while FK values can be TRUSTED
-        // (Slicer.trustForwardKeys): FK values onto an aux-free PK ARE
-        // the candidate keys — no scan. This leans on referential
-        // integrity (an FK value names an existing parent row), which
-        // holds for an enforced-constraint source but NOT necessarily
-        // for lake data — see the class doc for the failure mode and
-        // the SPARK_GRAFT_SLICE_TRUST_FK opt-out. The shortcut must
-        // NEVER fire on reverse traversal regardless: integrity says
-        // nothing about a parent key existing in a child (a 1:1
-        // extension table keyed by the parent's key may cover only some
-        // parents), so reverse candidates always validate against a
-        // real scan of the child.
-        if (forward && keyRef && auxCols(tt).isEmpty && Slicer.trustForwardKeys) fresh
-        else {
-          val build = if (small) broadcast(fresh) else fresh
-          loadTable(tt).join(build, jc, "left_semi")
-            .select(augCols(tt).map(col): _*)
-        }
-      }
-
       // gather candidate keys per adjacent table from every live frontier
-      val candidates = collection.mutable.Map.empty[String, Vector[DataFrame]]
-      frontier.foreach { case (t, (aug, n)) =>
-        val small = n <= broadcastKeyLimit
-        def valsOf(cols: Seq[String], renameTo: Seq[String]): DataFrame =
-          aug.select(cols.map(col): _*).na.drop("any").distinct()
-            .toDF(renameTo: _*)
+      val candidates = collection.mutable.LinkedHashMap.empty[String, Vector[Rel]]
+      def add(tt: String, c: Rel): Unit =
+        candidates(tt) = candidates.getOrElse(tt, Vector.empty) :+ c
+      frontier.foreach { case (t, rel) =>
         graph.refsFrom(t).foreach { r => // forward: child -> parent
-          val c = candidate(r.refTable, r.refColumns,
-            valsOf(r.columns, r.refColumns), small, forward = true)
-          candidates(r.refTable) = candidates.getOrElse(r.refTable, Vector.empty) :+ c
+          add(r.refTable, candidate(r.refTable, r.refColumns,
+            valsOf(t, rel, r.columns, r.refTable, r.refColumns), forward = true))
         }
         graph.refsTo(t).foreach { r => // reverse: parent -> children
-          val c = candidate(r.table, r.columns,
-            valsOf(r.refColumns, r.columns), small, forward = false)
-          candidates(r.table) = candidates.getOrElse(r.table, Vector.empty) :+ c
+          add(r.table, candidate(r.table, r.columns,
+            valsOf(t, rel, r.refColumns, r.table, r.columns), forward = false))
         }
       }
-
-      // one fused action per ROUND (not per table)
-      ingest(candidates.toSeq.map { case (tt, dfs) =>
-        val cand = dfs.map(_.select(augCols(tt).map(col): _*))
-          .reduce(_ union _).distinct()
-        tt -> (seenOf(tt) match {
-          case Some(seen) => cand.join(seen, keyCols(tt), "left_anti")
-          case None       => cand
-        })
-      })
+      advance(candidates.toSeq)
     }
-    (genKeys.map { case (t, v) => t -> v.reduce(_ union _) }, counts, maxes)
-  }
-
-  /** Count + max(first key, cast long) of one (persisted) frontier
-    * frame — the action each [[ingest]] future runs. The count gates
-    * broadcasts and IS the manifest; the max IS the sequence capture.
-    * A non-castable (e.g. string) key yields None. */
-  private def countMaxOne(t: String, df: DataFrame): (Long, Option[Long]) = {
-    val r = df.groupBy().agg(
-        count(lit(1)).as("n"),
-        max(col(keyCols(t).head).cast("long")).as("mx"))
-      .collect().head
-    (r.getLong(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))
+    val tables = held.collect { case (t, ks) if ks.nonEmpty => t }.toSet ++ spread.keySet
+    (tables.map(t => t -> seenOf(t).get).toMap, counts, maxes)
   }
 
   /** Run discovery ONCE; everything (rows, manifest, sequences) derives
-    * from the cached key sets and their already-known counts/maxes. */
+    * from the discovered key sets and their already-known counts/maxes. */
   def run(roots: Seq[SliceRoot]): SliceResult = {
     val (keys, counts, maxes) = discover(roots)
     new SliceResult(graph, loadTable, keys, counts, maxes, broadcastKeyLimit)
@@ -382,8 +528,9 @@ final class Slicer(
     run(roots).rows(table)
 }
 
-/** A completed discovery: per-table key sets (persisted/checkpointed small
-  * DataFrames of key columns only) plus the key counts/maxes the BFS
+/** A completed discovery: per-table key sets (DataFrames of key columns
+  * only: a LocalRelation of the driver-held keys, persisted or
+  * checkpointed distributed generations, or the union of both) plus the key counts/maxes the BFS
   * already measured. Row materialization is a single semi-join per table
   * against the full table — filter/column pushdown still reaches the scan
   * because keys are a separate tiny relation. Manifest and sequences are

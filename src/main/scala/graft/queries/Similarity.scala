@@ -1,6 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -313,7 +315,9 @@ object Similarity {
              CAST(sum(CAST(floor(xsub[CAST(i AS INT)] * 1000000.0) AS BIGINT)) AS DOUBLE)
                / (count(*) * 1000000.0) AS comp
            FROM pa$it, unnest(range(1, ${PqSub + 1})) AS t(i) GROUP BY m, code, i),
-         cb$it AS (SELECT m, code, list(comp ORDER BY i) AS csub FROM pm$it GROUP BY m, code)"""
+         cm$it AS (SELECT m, code, list(comp ORDER BY i) AS csub FROM pm$it GROUP BY m, code),
+         cb$it AS (SELECT $prev.m, $prev.code, coalesce(cm$it.csub, $prev.csub) AS csub
+           FROM $prev LEFT JOIN cm$it ON cm$it.m = $prev.m AND cm$it.code = $prev.code)"""
     }.mkString(",\n", ",\n", "")
 
   private def topk(joined: DataFrame): DataFrame = {
@@ -2827,10 +2831,60 @@ object Similarity {
         graft.CacheBook.unpersistCheckpoint(lutP)
         ()
       }
-      // cb is a broadcast-literal-sized frame (PqM*PqKsub rows) that
-      // the two persisted relations already embody — no third persist
+      // cb is local data (PqM*PqKsub rows, see pqLloyd) that the two
+      // persisted relations already embody — no third persist
       (codesP, lutP, cb)
     })) }.value
+  }
+
+  /** Nearest code of every sub-vector of `ex` (vec_id, m, xsub) under
+    * `codebook` (m, code, csub). Round 15: per-subspace L2 argmin as the
+    * constant-bank expression (one bank per m — the same PqM*PqKsub rows
+    * the old plan broadcast; squared distances accumulate in subL2's
+    * exact IEEE order, ties break code-asc as the window did). The
+    * former join + window materialized and sorted 8N×Ksub rows per
+    * encode pass — and the Lloyd rounds nested those plans. */
+  private def pqEncode(ex: DataFrame, codebook: DataFrame): DataFrame = {
+    val bank = graft.functions.NearestCentroids.l2Banks(
+      codebook.select("m", "code", "csub").collect().toSeq.map(r =>
+        (r.getInt(0), r.getInt(1).toLong, r.getSeq[Double](2).toArray)))
+    ex.select(col("vec_id"), col("m"),
+      element_at(graft.functions.NearestCentroids.nearest(
+        bank, col("xsub"), 1, lit(1.0), col("m")), 1)
+        .cast("int").as("code"),
+      col("xsub"))
+  }
+
+  /** `iters` Lloyd rounds of the PQ codebook `cb` (m, code, csub) over
+    * the sub-vectors `ex` (vec_id, m, xsub), same exact-mean contract as
+    * the IVF path (micro-unit BIGINT sums, one double division): assign
+    * every sub-vector to its nearest code by L2, recompute each
+    * sub-centroid as its cell's mean. A code that no sub-vector picks
+    * (two trainers sharing a sub-vector: ties go to the lower code)
+    * keeps its previous centroid, as in standard Lloyd, so every bank
+    * keeps all its codes and the next encode never sees a ragged
+    * codebook. Each round's codebook is collected (PqM*PqKsub rows) and
+    * returned as local data, so a later action over it re-runs no
+    * earlier Lloyd pass. */
+  private[graft] def pqLloyd(ex: DataFrame, cb0: DataFrame, iters: Int): DataFrame = {
+    val spark = ex.sparkSession
+    val schema = cb0.select("m", "code", "csub").schema
+    def local(rows: Seq[Row]): DataFrame = spark.createDataFrame(rows.asJava, schema)
+    val refined = (0 until iters).foldLeft(cb0.select("m", "code", "csub").collect().toSeq) {
+      (cb, _) =>
+        val fresh = pqEncode(ex, local(cb))
+          .select(col("m"), col("code"), posexplode(col("xsub")).as(Seq("pos", "x")))
+          .groupBy("m", "code", "pos")
+          .agg((sum(floor(col("x") * lit(1000000.0))).cast("double")
+            / (count(lit(1)) * lit(1000000.0))).as("comp"))
+          .groupBy("m", "code")
+          .agg(transform(array_sort(collect_list(struct(col("pos"), col("comp")))),
+            p => p.getField("comp")).as("csub"))
+          .collect().map(r => (r.getInt(0), r.getInt(1)) -> r.get(2)).toMap
+        cb.map(r => fresh.get((r.getInt(0), r.getInt(1)))
+          .fold(r)(csub => Row(r.get(0), r.get(1), csub)))
+    }
+    broadcast(local(refined))
   }
 
   private def pqModelBody(s: SparkSession,
@@ -2844,46 +2898,18 @@ object Similarity {
       // codebook: (m, code, csub) — PqM * PqKsub rows, broadcast
       val subStructs = (0 until PqM).map(m =>
         struct(lit(m).as("m"), slice(col("v"), m * PqSub + 1, PqSub).as("csub")))
-      var cb = broadcast(trainers
+      val cb0 = broadcast(trainers
         .select(col("code"), explode(array(subStructs: _*)).as("x"))
         .select(col("code"), col("x.m").as("m"), col("x.csub").as("csub")))
       val exSubs = (0 until PqM).map(m =>
         struct(lit(m).as("m"), slice(col("v"), m * PqSub + 1, PqSub).as("xsub")))
       val ex = e.select(col("vec_id"), explode(array(exSubs: _*)).as("x"))
         .select(col("vec_id"), col("x.m").as("m"), col("x.xsub").as("xsub"))
-      // round 15: per-subspace L2 argmin as the constant-bank expression
-      // (one bank per m — the same PqM*PqKsub rows the old plan
-      // broadcast; squared distances accumulate in subL2's exact IEEE
-      // order, ties break code-asc as the window did). The former join
-      // + window materialized and sorted 8N×Ksub rows per encode pass —
-      // and the Lloyd rounds nested those plans.
-      def encodeWith(codebook: DataFrame): DataFrame = {
-        val bank = graft.functions.NearestCentroids.l2Banks(
-          codebook.select("m", "code", "csub").collect().toSeq.map(r =>
-            (r.getInt(0), r.getInt(1).toLong, r.getSeq[Double](2).toArray)))
-        ex.select(col("vec_id"), col("m"),
-          element_at(graft.functions.NearestCentroids.nearest(
-            bank, col("xsub"), 1, lit(1.0), col("m")), 1)
-            .cast("int").as("code"),
-          col("xsub"))
-      }
-      // Lloyd refinement per subspace, same exact-mean contract as the
-      // IVF path (micro-unit BIGINT sums, one double division): assign
-      // every sub-vector to its nearest code by L2, recompute each
-      // sub-centroid as its cell's mean. The hash-draw seed gives the
-      // plan shape; these rounds give it the actual data distribution.
-      for (_ <- 0 until LloydIters) {
-        val means = encodeWith(cb)
-          .select(col("m"), col("code"), posexplode(col("xsub")).as(Seq("pos", "x")))
-          .groupBy("m", "code", "pos")
-          .agg((sum(floor(col("x") * lit(1000000.0))).cast("double")
-            / (count(lit(1)) * lit(1000000.0))).as("comp"))
-        cb = broadcast(means.groupBy("m", "code")
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("comp")))),
-            p => p.getField("comp")).as("csub")))
-      }
+      // the hash-draw seed gives the plan shape; Lloyd rounds give it the
+      // actual data distribution
+      val cb = pqLloyd(ex, cb0, LloydIters)
       // encode: nearest sub-centroid per (vector, subspace)
-      val codes = encodeWith(cb).select("vec_id", "m", "code")
+      val codes = pqEncode(ex, cb).select("vec_id", "m", "code")
       // ADC lookup table: per (query, subspace, code) integer micro-dot
       val lut = broadcast(e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q"), explode(array(exSubs: _*)).as("x"))

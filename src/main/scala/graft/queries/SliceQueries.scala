@@ -144,21 +144,17 @@ object SliceQueries {
     // shape a real scope change produces. Per table cost is one
     // key-set join; the A side reuses the memoized customer slice.
     // The two discoveries are INDEPENDENT (disjoint root cohorts, no
-    // shared mutable state), so they run CONCURRENTLY under the
-    // refcounted discovery profile (round 14: each is round-latency
-    // bound at width 8, so overlapping them back-fills the idle cores
-    // — guide §2.6); the diff readout then materializes inside the
+    // shared mutable state), so they run CONCURRENTLY as two
+    // graft.Par tasks under the refcounted discovery profile (round 14:
+    // each is round-latency bound at width 8, so overlapping them
+    // back-fills the idle cores — guide §2.6); the diff readout then materializes inside the
     // same pinned scope, one narrow action instead of ~30 width-32 AQE
     // query stages over key sets of ≤12k rows.
     "slice_diff" -> ((s, dir) => {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val fa = Future(custSlice(s, dir))
-      val fb = Future(slicer(s, dir)
-        .run(Seq(SliceRoot("customer", "c_custkey % 50 = 23"))))
-      val a = Await.result(fa, Duration.Inf)
-      val b = Await.result(fb, Duration.Inf)
+      val Seq(a, b) = graft.Par.each(Seq(
+          () => custSlice(s, dir),
+          () => slicer(s, dir).run(Seq(SliceRoot("customer", "c_custkey % 50 = 23")))))(
+        _())
       val g = SchemaGraph.tpch
       val frames = g.tables.map(_.id).sorted.map { t =>
         val kc = g.table(t).key

@@ -105,4 +105,12 @@ class NearestCentroidsSpec extends SparkSpec {
     // cosines: 0.6, 0.8, 1.4/sqrt(2)≈0.9899 → order 3, 2, 1
     assert(got.toSeq == Seq(3L, 2L, 1L))
   }
+
+  test("a bank selector outside the codebook fails loudly") {
+    val bank = NearestCentroids.l2Banks(Seq((0, 0L, Array(0.0)), (1, 0L, Array(1.0))))
+    val v = new org.apache.spark.sql.catalyst.util.GenericArrayData(Array[Any](0.5))
+    assert(bank.nearest(v, 1.0, 1, 1).toLongArray().toSeq == Seq(0L))
+    intercept[IllegalArgumentException](bank.nearest(v, 1.0, 2, 1))
+    intercept[IllegalArgumentException](bank.nearest(v, 1.0, -1, 1))
+  }
 }

@@ -38,4 +38,24 @@ class PqDistortionSpec extends SparkSpec {
     for ((m, _, _, mean) <- got)
       assert(mean < energies(m), s"m=$m distortion $mean >= energy ${energies(m)}")
   }
+
+  test("Lloyd keeps a code no sub-vector picks: duplicate trainer sub-vectors stay unragged") {
+    import spark.implicits._
+    // codes 0 and 1 share their subspace-0 sub-vector, so every tie there
+    // goes to code 0 and code 1 gets no assignees in subspace 0 only;
+    // dropping it would leave banks of 2 and 3 codes
+    val cb0 = Seq(
+      (0, 0, Seq(0.0, 0.0)), (0, 1, Seq(0.0, 0.0)), (0, 2, Seq(10.0, 10.0)),
+      (1, 0, Seq(0.0, 0.0)), (1, 1, Seq(5.0, 5.0)), (1, 2, Seq(10.0, 10.0)))
+      .toDF("m", "code", "csub")
+    val ex = Seq(
+      (1L, 0, Seq(0.0, 1.0)), (2L, 0, Seq(1.0, 0.0)), (3L, 0, Seq(10.0, 9.0)), (4L, 0, Seq(9.0, 10.0)),
+      (1L, 1, Seq(0.0, 1.0)), (2L, 1, Seq(5.0, 6.0)), (3L, 1, Seq(10.0, 9.0)), (4L, 1, Seq(6.0, 5.0)))
+      .toDF("vec_id", "m", "xsub")
+    val cb = Similarity.pqLloyd(ex, cb0, 2).as[(Int, Int, Seq[Double])].collect()
+      .map { case (m, code, csub) => (m, code) -> csub }.toMap
+    assert(cb.keySet == (for (m <- 0 to 1; c <- 0 to 2) yield (m, c)).toSet, "a bank lost a code")
+    assert(cb((0, 1)) == Seq(0.0, 0.0), "an empty code keeps its previous centroid")
+    assert(cb((0, 0)) == Seq(0.5, 0.5) && cb((1, 1)) == Seq(5.5, 5.5), "assigned codes move to their means")
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 
 import graft.operators.{SliceRoot, Slicer}
 import graft.plans.{Reference, SchemaGraph, TableDef}
@@ -24,6 +24,67 @@ class SlicerSpec extends SparkSpec {
     "grandchild" -> Seq((100, 10), (101, 12)).toDF("gid", "cid"))
 
   private def slicer(g: SchemaGraph = graph) = new Slicer(g, tables(_))
+
+  /** broadcastKeyLimit settings that exercise both key-set homes: 0 keeps
+    * every frame distributed, 2 holds the first rows of a table on the
+    * driver and spreads the rest, the default holds everything here. */
+  private val Limits = Seq(0L, 2L, 1000000L)
+
+  /** Key values as the naive closure compares them: integral widened to
+    * long (an int FK names the same row as a bigint key). */
+  private def norm(v: Any): Any = v match {
+    case i: Int   => i.toLong
+    case s: Short => s.toLong
+    case b: Byte  => b.toLong
+    case x        => x
+  }
+
+  /** Naive driver-side fixpoint over collected rows: starting from the
+    * root rows, add every row a forward reference's values name and
+    * every row whose FK a reverse reference's values match, until
+    * nothing changes. Returns each reached table's key tuples. */
+  private def naiveClosure(g: SchemaGraph, data: Map[String, DataFrame],
+      root: String, pick: Row => Boolean): Map[String, Set[Seq[Any]]] = {
+    val rows = data.map { case (t, df) => t -> df.collect().toSeq }
+    def vals(r: Row, cols: Seq[String]): Seq[Any] = cols.map(c => norm(r.get(r.fieldIndex(c))))
+    def reach(from: Set[Row], cols: Seq[String], to: String, toCols: Seq[String]): Set[Row] = {
+      val vs = from.map(vals(_, cols)).filterNot(_.contains(null))
+      rows(to).filter(r => vs(vals(r, toCols))).toSet
+    }
+    var keep = rows.map { case (t, rs) => t -> (if (t == root) rs.filter(pick).toSet else Set.empty[Row]) }
+    var changed = true
+    while (changed) {
+      val next = g.references.foldLeft(keep) { (k, ref) =>
+        val fwd = if (ref.forward) reach(k(ref.table), ref.columns, ref.refTable, ref.refColumns)
+          else Set.empty[Row]
+        val rev = if (ref.reverse) reach(k(ref.refTable), ref.refColumns, ref.table, ref.columns)
+          else Set.empty[Row]
+        k.updated(ref.refTable, k(ref.refTable) ++ fwd).updated(ref.table, k(ref.table) ++ rev)
+      }
+      changed = next != keep
+      keep = next
+    }
+    keep.collect { case (t, rs) if rs.nonEmpty => t -> rs.map(vals(_, g.table(t).key)) }
+  }
+
+  /** The Slicer at every limit reaches exactly the naive closure, with
+    * its key counts and its maxes (first key column cast to long). */
+  private def assertNaive(g: SchemaGraph, data: Map[String, DataFrame],
+      root: SliceRoot, pick: Row => Boolean): Unit = {
+    val want = naiveClosure(g, data, root.table, pick)
+    for (limit <- Limits) {
+      val r = new Slicer(g, data(_), limit).run(Seq(root))
+      val got = r.keys.map { case (t, k) => t -> k.collect().map(_.toSeq.map(norm)).toSet }
+      assert(got == want, s"limit $limit: keys")
+      assert(r.keyCounts.filter(_._2 > 0) == want.map { case (t, ks) => t -> ks.size.toLong },
+        s"limit $limit: counts")
+      val maxes = want.map { case (t, ks) => t -> ks.map(_.head match {
+        case s: String => s.trim.toLong
+        case v         => v.asInstanceOf[Long]
+      }).max }
+      assert(r.keyMaxes == maxes, s"limit $limit: maxes")
+    }
+  }
 
   test("forward slice pulls parents only") {
     val fwd = graph.copy(references = graph.references.map(_.copy(reverse = false)))
@@ -72,10 +133,12 @@ class SlicerSpec extends SparkSpec {
     val chainTables: Map[String, DataFrame] = (0 until n).map { i =>
       s"t$i" -> Seq((i, i + 1)).toDF("id", "nxt")
     }.toMap
-    val r = new Slicer(chainGraph, chainTables(_)).run(Seq(SliceRoot("t0", "id = 0")))
-    assert(r.keys.keySet == (0 until n).map(i => s"t$i").toSet)
-    (0 until n).foreach { i =>
-      assert(r.rows(s"t$i").select("id").as[Int].collect().toSeq == Seq(i), s"t$i")
+    for (limit <- Limits) {
+      val r = new Slicer(chainGraph, chainTables(_), limit).run(Seq(SliceRoot("t0", "id = 0")))
+      assert(r.keys.keySet == (0 until n).map(i => s"t$i").toSet, s"limit $limit")
+      (0 until n).foreach { i =>
+        assert(r.rows(s"t$i").select("id").as[Int].collect().toSeq == Seq(i), s"t$i limit $limit")
+      }
     }
   }
 
@@ -158,50 +221,139 @@ class SlicerSpec extends SparkSpec {
   }
 
   test("discovery equals a naive driver-side fixpoint on random FK-consistent data") {
-    // randomized equivalence: the distributed BFS (aug frontiers,
-    // pre-anti-joins, no-scan PK candidates, fused count+max) must
-    // reach exactly the closure a trivial in-memory fixpoint computes,
-    // with matching counts and maxes, on arbitrary FK-consistent data
+    // randomized equivalence: the BFS (aug frontiers, pre-anti-joins,
+    // no-scan PK candidates, held and distributed key sets) must reach
+    // exactly the closure a trivial in-memory fixpoint computes, with
+    // matching counts and maxes, on arbitrary FK-consistent data
     val rnd = new scala.util.Random(42)
     for (trial <- 1 to 4) {
       val nP = 2 + rnd.nextInt(4)
       val nC = 3 + rnd.nextInt(6)
       val nG = 3 + rnd.nextInt(8)
-      val parents = (1 to nP).map(i => (i, s"p$i"))
-      val children = (1 to nC).map(i => (10 + i, 1 + rnd.nextInt(nP)))
-      val grand = (1 to nG).map(i => (100 + i, 11 + rnd.nextInt(nC)))
       val tbls: Map[String, DataFrame] = Map(
-        "parent" -> parents.toDF("pid", "name"),
-        "child" -> children.toDF("cid", "pid"),
-        "grandchild" -> grand.toDF("gid", "cid"))
+        "parent" -> (1 to nP).map(i => (i, s"p$i")).toDF("pid", "name"),
+        "child" -> (1 to nC).map(i => (10 + i, 1 + rnd.nextInt(nP))).toDF("cid", "pid"),
+        "grandchild" -> (1 to nG).map(i => (100 + i, 11 + rnd.nextInt(nC))).toDF("gid", "cid"))
       val rootMax = 1 + rnd.nextInt(nP)
-      val r = new Slicer(graph, tbls(_))
-        .run(Seq(SliceRoot("parent", s"pid <= $rootMax")))
-
-      var keep = Map(
-        "parent" -> parents.map(_._1).filter(_ <= rootMax).toSet,
-        "child" -> Set.empty[Int], "grandchild" -> Set.empty[Int])
-      var changed = true
-      while (changed) {
-        val next = Map(
-          "parent" -> (keep("parent") ++
-            children.filter(c => keep("child")(c._1)).map(_._2)),
-          "child" -> (children.filter(c => keep("parent")(c._2)).map(_._1).toSet ++
-            grand.filter(g => keep("grandchild")(g._1)).map(_._2)),
-          "grandchild" -> grand.filter(g => keep("child")(g._2)).map(_._1).toSet)
-        changed = next != keep
-        keep = next
-      }
-
-      for ((t, keyCol) <- Seq("parent" -> "pid", "child" -> "cid", "grandchild" -> "gid")) {
-        val got = r.keys.get(t)
-          .map(_.select(keyCol).as[Int].collect().toSet).getOrElse(Set.empty[Int])
-        assert(got == keep(t), s"trial $trial: $t keys")
-        assert(r.keyCounts.getOrElse(t, 0L) == keep(t).size.toLong, s"trial $trial: $t count")
-        if (keep(t).nonEmpty)
-          assert(r.keyMaxes(t) == keep(t).max.toLong, s"trial $trial: $t max")
+      withClue(s"trial $trial: ") {
+        assertNaive(graph, tbls, SliceRoot("parent", s"pid <= $rootMax"), _.getInt(0) <= rootMax)
       }
     }
+  }
+
+  test("a table held on the driver later receives a distributed generation") {
+    // a(1) pulls b's 3 children (past limit 2: distributed); their
+    // forward-only other_a values pull 3 more a keys, which no longer fit
+    // a's limit either, so a holds {1} and spreads {2, 3, 4}; later
+    // candidates for a and b then drop seen keys in Spark
+    val g = SchemaGraph(
+      tables = Seq(TableDef("a", Seq("id")), TableDef("b", Seq("id"))),
+      references = Seq(
+        Reference("ba", "b", Seq("a_id"), "a", Seq("id")),
+        Reference("bo", "b", Seq("other_a"), "a", Seq("id"), reverse = false)))
+    val data: Map[String, DataFrame] = Map(
+      "a" -> (1 to 8).map(i => (i, s"a$i")).toDF("id", "name"),
+      "b" -> Seq((10, 1, 2), (11, 1, 3), (12, 1, 4), (20, 2, 1), (21, 5, 1), (22, 6, 7))
+        .toDF("id", "a_id", "other_a"))
+    assertNaive(g, data, SliceRoot("a", "id = 1"), _.getInt(0) == 1)
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Union}
+    val keysA = new Slicer(g, data(_), 2L).run(Seq(SliceRoot("a", "id = 1"))).keys("a")
+    keysA.queryExecution.analyzed match {
+      case u: Union =>
+        assert(u.children.exists(_.isInstanceOf[LocalRelation]), "no held generation")
+        assert(u.children.exists(!_.isInstanceOf[LocalRelation]), "no distributed generation")
+      case p => fail(s"a's keys are one generation: $p")
+    }
+  }
+
+  test("CollectUpTo keeps at most each partition's share of the limit") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import graft.operators.CollectUpTo
+    def upTo(df: DataFrame, limit: Long): Option[Seq[Long]] = {
+      val r = df.agg(ColumnBridge.column(
+        CollectUpTo(ColumnBridge.expression(col("id")), limit).toAggregateExpression())).head()
+      if (r.isNullAt(0)) None else Some(r.getSeq[Long](0).sorted)
+    }
+    // 4 partitions of 3 rows: each within its share ceil(12 / 4) = 3
+    val even = spark.range(0, 12, 1, 4).toDF()
+    assert(upTo(even, 12) == Some(0L until 12L))
+    assert(upTo(even, 11).isEmpty, "12 rows passed a limit of 11")
+    // 9 rows, within the limit, but one partition of 8 is past its share
+    // of 3: it ships only its count, so the whole result is null
+    val skewed = spark.range(0, 8, 1, 1).union(spark.range(8, 9, 1, 3)).toDF()
+    assert(upTo(skewed, 12).isEmpty, "a partition kept more than its share")
+    assert(upTo(skewed, 32) == Some(0L until 9L))
+  }
+
+  test("adversarial: null FK values are never keys and never match") {
+    val g = SchemaGraph(
+      tables = Seq(TableDef("p", Seq("pid")), TableDef("c", Seq("cid"))),
+      references = Seq(Reference("cp", "c", Seq("pid"), "p", Seq("pid"))))
+    val data: Map[String, DataFrame] = Map(
+      "p" -> Seq((1, "x"), (2, "y"), (3, "z")).toDF("pid", "name"),
+      "c" -> Seq((10, Some(1)), (11, None), (12, Some(2)), (13, None))
+        .toDF("cid", "pid"))
+    assertNaive(g, data, SliceRoot("c", "cid >= 10"), _ => true)
+    assertNaive(g, data, SliceRoot("p", "pid = 1"), _.getInt(0) == 1)
+  }
+
+  test("adversarial: an empty root discovers nothing") {
+    for (limit <- Limits) {
+      val r = new Slicer(graph, tables(_), limit).run(Seq(SliceRoot("parent", "pid < 0")))
+      assert(r.keys.isEmpty && r.keyCounts.values.forall(_ == 0L), s"limit $limit")
+      assert(r.rows("parent").count() == 0L && r.manifest.count() == 0L, s"limit $limit")
+    }
+  }
+
+  test("adversarial: a composite key reached through a two-column FK") {
+    val g = SchemaGraph(
+      tables = Seq(TableDef("p", Seq("a", "b")), TableDef("c", Seq("cid"))),
+      references = Seq(Reference("cp", "c", Seq("pa", "pb"), "p", Seq("a", "b"))))
+    val data: Map[String, DataFrame] = Map(
+      "p" -> Seq((1, 1, "x"), (1, 2, "y"), (2, 1, "z")).toDF("a", "b", "name"),
+      "c" -> Seq((10, 1, 1), (11, 1, 2), (12, 2, 1), (13, 1, 1)).toDF("cid", "pa", "pb"))
+    assertNaive(g, data, SliceRoot("p", "a = 1 AND b = 2"), r => r.getInt(0) == 1 && r.getInt(1) == 2)
+    assertNaive(g, data, SliceRoot("c", "cid = 12"), _.getInt(0) == 12)
+  }
+
+  test("adversarial: a two-table FK cycle walked both ways") {
+    val g = SchemaGraph(
+      tables = Seq(TableDef("a", Seq("id")), TableDef("b", Seq("id"))),
+      references = Seq(
+        Reference("ab", "a", Seq("bid"), "b", Seq("id")),
+        Reference("ba", "b", Seq("aid"), "a", Seq("id"))))
+    val data: Map[String, DataFrame] = Map(
+      "a" -> Seq((1, Some(10)), (2, Some(11)), (3, None), (4, Some(12))).toDF("id", "bid"),
+      "b" -> Seq((10, Some(2)), (11, Some(1)), (12, Some(3)), (13, None)).toDF("id", "aid"))
+    assertNaive(g, data, SliceRoot("a", "id = 1"), _.getInt(0) == 1)
+    assertNaive(g, data, SliceRoot("b", "id = 12"), _.getInt(0) == 12)
+  }
+
+  test("adversarial: an int FK onto a bigint key dedups against the key") {
+    // reverse scans find children by the int column; their FK values
+    // come back as ints and must drop against the bigint keys already
+    // seen, or the parent's count inflates
+    val g = SchemaGraph(
+      tables = Seq(TableDef("p", Seq("pid")), TableDef("c", Seq("cid"))),
+      references = Seq(Reference("cp", "c", Seq("pid"), "p", Seq("pid"))))
+    val data: Map[String, DataFrame] = Map(
+      "p" -> Seq((1L, "x"), (2L, "y"), (3L, "z")).toDF("pid", "name"),
+      "c" -> Seq((10, 1), (11, 1), (12, 2)).toDF("cid", "pid"))
+    assertNaive(g, data, SliceRoot("p", "pid = 1"), _.getLong(0) == 1L)
+    assertNaive(g, data, SliceRoot("c", "cid = 12"), _.getInt(0) == 12)
+  }
+
+  test("adversarial: a string key's max follows cast(key as long)") {
+    // s is reached only through the no-scan forward hop, so its max is
+    // computed from held values: as strings "9" > "100"; as longs 100
+    val g = SchemaGraph(
+      tables = Seq(TableDef("c", Seq("cid")), TableDef("s", Seq("sid"))),
+      references = Seq(Reference("cs", "c", Seq("sid"), "s", Seq("sid"), reverse = false)))
+    val data: Map[String, DataFrame] = Map(
+      "c" -> Seq((1, "9"), (2, "10"), (3, "100"), (4, "9")).toDF("cid", "sid"),
+      "s" -> Seq("9", "10", "100", "7").toDF("sid"))
+    assertNaive(g, data, SliceRoot("c", "cid >= 1"), _ => true)
   }
 
   test("manifest counts rows, not key tuples, for non-unique keys") {
