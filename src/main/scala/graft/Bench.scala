@@ -26,7 +26,7 @@ import org.apache.spark.sql.SparkSession
   * the first (honest) sample; `retries`/`retryCpuSec` carry the warm
   * second sample. A transient contention spike shows a fast retry; a
   * real regression stays slow twice. `retryKind` qualifies each retry
-  * PRECISELY (round 12): the warm retry runs under a CacheBook touch
+  * PRECISELY (round 12): the warm retry runs under a CacheBook memo-access
   * trace, and it is "cache-read" iff it actually READ at least one
   * named memo that was live when it started (fast-retry then proves
   * nothing about a regression), "clean" otherwise. `retryTouched`

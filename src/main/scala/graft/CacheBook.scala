@@ -3,49 +3,41 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Lifecycle registry for memoized/persisted relations.
+/** Lifecycle registry for memoized and persisted relations — the one
+  * memo mechanism of the query families.
   *
-  * Several query families memoize expensive relations per (session,
-  * corpus) — the dedup shingle/pair/label stack, the shared customer
-  * slice, the similarity bucketed table. Memoization is what makes a
-  * family of related queries pay the build once, but a cache with no
+  * A family builds its expensive relations once per (session, corpus)
+  * and shares them with every query that reads them; a cache with no
   * release is an executor-memory leak across corpora in a long-lived
-  * session (and in the bench itself, which runs every query in one JVM:
-  * the block store only grows through the run, and the pressure taxes
-  * every later query).
+  * session. Two calls cover every site:
   *
-  * Every site that persists or checkpoints a long-lived relation
-  * registers a release thunk here under a SCOPE (the query-family
-  * prefix: "d", "s", "slice", "x"). [[Bench]] releases each scope as
-  * soon as its last consumer family has run; any caller can
-  * [[releaseAll]] between corpora. Thunks both unpersist the blocks AND
-  * evict the owning memo-map entry, so a later call rebuilds from
-  * source instead of recomputing through a dead checkpoint (an
-  * unpersisted localCheckpoint has no lineage to recompute from —
-  * a stale handle would fail, not just slow down).
+  *  - [[memo]] — a relation (or scalar, or artifact path) that stays
+  *    warm ACROSS query invocations. One build per key, even under
+  *    concurrent callers; two keys build concurrently; a build that
+  *    throws is retried by the next caller. Once the build succeeds the
+  *    memo registers a NAMED release under its (scope, name) that evicts
+  *    the cell, frees every frame the build kept and runs `onRelease`.
+  *  - [[keep]] — registers the release of one persisted or checkpointed
+  *    frame's blocks and returns the frame. Inside a memo build of the
+  *    same (session, scope) the release attaches to the memo's name;
+  *    elsewhere it is anonymous per-call state, freed only when its
+  *    scope is.
   *
-  * NAMED memos + touch tracing (round 12): map-backed memo cells —
-  * state that stays warm ACROSS query invocations — additionally
-  * register under a NAME and report every access via [[touch]]. That
-  * gives the bench two things the scope alone could not:
+  * Scopes are the query-family prefixes ("d", "s", "slice", "x", ...).
+  * [[Bench]] releases a scope as soon as its last consumer family has
+  * run, and any caller can [[releaseAll]] between corpora. Release both
+  * frees the blocks and evicts the cell, so a later call rebuilds from
+  * source instead of reading through a dead checkpoint (an unpersisted
+  * localCheckpoint has no lineage to recompute from).
   *
-  *  1. a PRECISE warm-retry classifier — a retry is "cache-read" iff
-  *     its traced touch set intersects the memos that were live when
-  *     it started, not merely "some cache existed somewhere in the
-  *     family" (the r11 over-label that mislabeled retries whose warm
-  *     state never covered their expensive subtree);
-  *  2. a PER-MEMO clean-retry release ([[releaseNamed]]) — only the
-  *     memos the retried query actually touched are dropped and then
-  *     rebuilt (and re-registered) by the clean re-run itself, so a
-  *     forced flake on one entry can no longer void the whole family
-  *     scope and cascade first-touch rebuild costs through every
-  *     later same-family entry (the r9-r11 driver-bench distortion).
-  *
-  * Anonymous (unnamed) registrations — per-call persists and
-  * checkpoints that are rebuilt fresh on every invocation — are NOT
-  * warm state and stay exactly as before: released only at the family
-  * boundary / releaseAll. [[releaseNamed]] never runs them.
+  * Names serve the bench's warm retry: every memo access is recorded by
+  * [[traced]], [[liveNamed]] says which memos were warm before a retry,
+  * and [[releaseNamed]] drops exactly the memos the retried query read,
+  * with the frames their builds kept, leaving every other memo standing.
+  * A failed build registers nothing: its kept frames are freed on the
+  * spot, so no phantom name outlives it.
   */
 object CacheBook {
   private final case class Entry(name: String, thunk: () => Unit)
@@ -53,67 +45,120 @@ object CacheBook {
   private val book =
     mutable.Map.empty[(SparkSession, String), mutable.ListBuffer[Entry]]
 
-  // Active touch trace (at most one; the bench is the only tracer and
-  // runs queries serially). A plain shared buffer — NOT a ThreadLocal —
-  // because family builds fan out on futures (d_build, Verify's pool)
-  // and those builds' touches belong to the traced query.
+  /** Per-key build-once cell. The map monitor is held only to INSTALL a
+    * cell; the build runs under the cell's own lazy-val lock, so two
+    * keys build concurrently while one key builds exactly once. A build
+    * that throws leaves the cell uninitialized and the next caller
+    * retries. */
+  private final class Cell(f: () => Any) { lazy val value: Any = f() }
+
+  private val cells = mutable.Map.empty[(SparkSession, String, String, Any), Cell]
+
+  // Active memo-access trace (at most one; the bench is the only tracer
+  // and runs queries serially). A plain shared buffer — NOT a
+  // ThreadLocal — because family builds fan out on driver threads and
+  // those builds' accesses belong to the traced query.
   private var traceBuf: mutable.LinkedHashSet[(String, String)] = null
 
-  // Build context: while a NAMED memo's build runs (see [[building]]),
-  // anonymous registrations in the same (session, scope) attach to the
-  // building name — the memo's per-call build-side persists/checkpoints
-  // (Slicer key frames, beamWalk round checkpoints, body-local persists)
-  // then release WITH the memo on a releaseNamed, instead of lingering
-  // to the family boundary while the clean retry builds a second
-  // generation on top. Thread-local: concurrent fan-out builds
-  // (d_build's futures) each carry their own context on their own
-  // thread.
-  private val buildCtx = new ThreadLocal[List[(SparkSession, String, String)]] {
-    override def initialValue(): List[(SparkSession, String, String)] = Nil
+  /** A named build in progress: the releases registered on its thread
+    * for the same (session, scope) collect here until it succeeds. Only
+    * that thread ever sees it. */
+  private final class Build(val s: SparkSession, val scope: String, val name: String) {
+    val kept = mutable.ListBuffer.empty[Entry]
   }
 
-  /** Run a named memo's BUILD under its attachment context. */
-  def building[T](s: SparkSession, scope: String, name: String)(body: => T): T = {
-    buildCtx.set((s, scope, name) :: buildCtx.get())
-    try body finally buildCtx.set(buildCtx.get().tail)
+  // Thread-local: concurrent builds each carry their own context on
+  // their own thread.
+  private val buildCtx = new ThreadLocal[List[Build]] {
+    override def initialValue(): List[Build] = Nil
   }
+
+  /** The value memoized under (scope, name, key) on `s`, built by
+    * `build` on first use. See the object doc for the cell and release
+    * contract; `onRelease` frees what the value itself holds outside
+    * the block store (a store directory, an artifact path). */
+  def memo[T](s: SparkSession, scope: String, name: String, key: Any)(
+      build: => T): T =
+    memo(s, scope, name, key, (_: T) => ())(build)
+
+  /** [[memo]] whose release also runs `onRelease` on the value. */
+  def memo[T](s: SparkSession, scope: String, name: String, key: Any,
+      onRelease: T => Unit)(build: => T): T = {
+    synchronized { if (traceBuf != null) traceBuf += ((scope, name)) }
+    val k = (s, scope, name, key)
+    val fresh = new Cell(() => {
+      val (v, kept) = attached(s, scope, name)(build)
+      val evict = Entry(name, () => {
+        synchronized { cells.remove(k) }
+        onRelease(v)
+      })
+      add(s, scope, evict :: kept)
+      v
+    })
+    synchronized { cells.getOrElseUpdate(k, fresh) }.value.asInstanceOf[T]
+  }
+
+  /** Register the release of `df`'s blocks under `scope` and return
+    * `df`. Pass the frame `persist` or `localCheckpoint` (eager or
+    * lazy) returned: a checkpoint frame has its checkpointed RDD freed,
+    * any other frame is unpersisted. */
+  def keep(s: SparkSession, scope: String)(df: DataFrame): DataFrame = {
+    val free: () => Unit = df.queryExecution.logical match {
+      case lr: LogicalRDD => () => { lr.rdd.unpersist(false); () }
+      case _ => () => { df.unpersist(false); () }
+    }
+    register(s, scope)(free)
+    df
+  }
+
+  /** Run `body` as the build of the named memo (scope, name): releases
+    * registered on this thread for the same (session, scope) attach to
+    * the name once `body` returns, and are run at once if it throws. */
+  private[graft] def building[T](s: SparkSession, scope: String, name: String)(
+      body: => T): T = {
+    val (v, kept) = attached(s, scope, name)(body)
+    add(s, scope, kept)
+    v
+  }
+
+  private def attached[T](s: SparkSession, scope: String, name: String)(
+      body: => T): (T, List[Entry]) = {
+    val b = new Build(s, scope, name)
+    buildCtx.set(b :: buildCtx.get())
+    try (body, b.kept.toList)
+    catch { case e: Throwable => runAll(b.kept.toList); throw e }
+    finally buildCtx.set(buildCtx.get().tail)
+  }
+
+  private def add(s: SparkSession, scope: String, es: List[Entry]): Unit =
+    if (es.nonEmpty) synchronized {
+      book.getOrElseUpdate((s, scope), mutable.ListBuffer.empty) ++= es
+    }
+
+  private def runAll(es: List[Entry]): Unit =
+    es.foreach(e => try e.thunk() catch { case _: Throwable => () })
 
   /** Register an ANONYMOUS release thunk for `scope` on `s` — per-call
-    * persists/checkpoints with no cross-invocation warm state. Inside a
-    * [[building]] block for the same (session, scope) the thunk attaches
-    * to the building memo's name instead (see above). The thunk must be
-    * idempotent (release may race a session-wide releaseAll). */
-  def register(s: SparkSession, scope: String)(thunk: () => Unit): Unit = {
-    val name = buildCtx.get().collectFirst {
-      case (bs, bscope, n) if (bs eq s) && bscope == scope => n
-    }.getOrElse("")
-    synchronized {
-      book.getOrElseUpdate((s, scope), mutable.ListBuffer.empty) += Entry(name, thunk)
+    * state with no cross-invocation warmth. Inside a named build for the
+    * same (session, scope) it attaches to the build's name. The thunk
+    * must be idempotent (release may race a session-wide releaseAll). */
+  def register(s: SparkSession, scope: String)(thunk: () => Unit): Unit =
+    buildCtx.get().find(b => (b.s eq s) && b.scope == scope) match {
+      case Some(b) => b.kept += Entry(b.name, thunk); ()
+      case None => add(s, scope, List(Entry("", thunk)))
     }
-    ()
-  }
 
-  /** Register a NAMED release thunk — map-backed memo state that stays
-    * warm across invocations. Callers pair this with a [[touch]] at
-    * every accessor entry so the bench can trace which memos a query
-    * read. Several thunks may share one name (a memo plus the helper
-    * persists its build pinned); [[releaseNamed]] runs them together. */
+  /** Register a NAMED release thunk directly. Several thunks may share
+    * one name; [[releaseNamed]] runs them together. */
   def register(s: SparkSession, scope: String, name: String)(
       thunk: () => Unit): Unit = {
     require(name.nonEmpty, "named registration requires a non-empty name")
-    synchronized {
-      book.getOrElseUpdate((s, scope), mutable.ListBuffer.empty) += Entry(name, thunk)
-    }
+    add(s, scope, List(Entry(name, thunk)))
   }
 
-  /** Record a memo ACCESS (hit or miss — the accessor calls this before
-    * consulting its map). No-op unless a [[traced]] block is active. */
-  def touch(s: SparkSession, scope: String, name: String): Unit =
-    synchronized { if (traceBuf != null) { traceBuf += ((scope, name)); () } }
-
-  /** Run `body` with touch tracing active; returns (result, touched
-    * (scope, name) pairs in first-touch order). Not reentrant — the
-    * bench runs queries serially and is the only caller. */
+  /** Run `body` with memo-access tracing active; returns (result,
+    * accessed (scope, name) pairs in first-access order). Not reentrant
+    * — the bench runs queries serially and is the only caller. */
   def traced[T](body: => T): (T, Seq[(String, String)]) = {
     val buf = mutable.LinkedHashSet.empty[(String, String)]
     synchronized {
@@ -126,12 +171,8 @@ object CacheBook {
 
   /** Run and drop every thunk registered for (session, scope) — named
     * and anonymous alike (the family-boundary release). */
-  def release(s: SparkSession, scope: String): Unit = {
-    val thunks = synchronized {
-      book.remove((s, scope)).map(_.toList).getOrElse(Nil)
-    }
-    thunks.foreach(e => try e.thunk() catch { case _: Throwable => () })
-  }
+  def release(s: SparkSession, scope: String): Unit =
+    runAll(synchronized { book.remove((s, scope)).map(_.toList).getOrElse(Nil) })
 
   /** Run and drop ONLY the named entries in `names` ((scope, name)
     * pairs), leaving every other registration — in the same scopes and
@@ -140,16 +181,15 @@ object CacheBook {
     * re-registers them, so no other query's warm state moves. */
   def releaseNamed(s: SparkSession, names: Set[(String, String)]): Unit = {
     if (names.isEmpty) return
-    val thunks = synchronized {
+    runAll(synchronized {
       val out = mutable.ListBuffer.empty[Entry]
       for (((sess, scope), es) <- book if sess eq s) {
-        val (hit, keep) = es.partition(e => e.name.nonEmpty && names((scope, e.name)))
+        val (hit, rest) = es.partition(e => e.name.nonEmpty && names((scope, e.name)))
         out ++= hit
-        es.clear(); es ++= keep
+        es.clear(); es ++= rest
       }
       out.toList
-    }
-    thunks.foreach(e => try e.thunk() catch { case _: Throwable => () })
+    })
   }
 
   /** Release every scope registered on the session. */
@@ -171,13 +211,12 @@ object CacheBook {
   }
 
   // ---- memo build plans ------------------------------------------------
-  // Since round 14 the family memos EAGERLY localCheckpoint (plan
-  // truncation — consumers read a LogicalRDD leaf instead of re-planning
-  // and re-codegening the build subtree). That makes the build's plan
-  // invisible to consumers, so the plan-shape invariants (PlanShapeSpec,
-  // AnnIndexStoreSpec) would lose their teeth: every memo build records
-  // its FORMATTED executed plan here, keyed like the release thunks, and
-  // the specs assert over query plan + touched build plans.
+  // The family memos eagerly localCheckpoint (plan truncation — consumers
+  // read a LogicalRDD leaf instead of re-planning and re-codegening the
+  // build subtree). That hides the build's plan from consumers, so the
+  // plan-shape invariants (PlanShapeSpec, AnnIndexStoreSpec) would lose
+  // their teeth: memo builds record their FORMATTED executed plan here,
+  // and the specs assert over query plan + touched build plans.
   private val buildPlans =
     mutable.Map.empty[(SparkSession, String, String), String]
 
@@ -208,14 +247,13 @@ object CacheBook {
     df
   }
 
-  /** Free the block-store data behind an EAGER `localCheckpoint(true)`
-    * frame: the checkpointed RDD hides under the plan's LogicalRDD
-    * leaves (plain `unpersist()` on the Dataset does nothing — the
-    * cache manager never saw it). Safe on non-checkpoint plans (no
-    * LogicalRDD leaf, no-op). */
+  /** Free the block-store data behind a `localCheckpoint` frame: the
+    * checkpointed RDD hides under the plan's LogicalRDD leaves (plain
+    * `unpersist()` on the Dataset does nothing — the cache manager never
+    * saw it). Safe on non-checkpoint plans (no LogicalRDD leaf, no-op). */
   def unpersistCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case lr: LogicalRDD => lr.rdd.unpersist(false)
       case _ => ()
     }
 }

@@ -71,10 +71,7 @@ object BoundedPercentile {
     * materialization instead of re-running the upstream pipeline per
     * pass (q_mad's per-user aggregate was re-computed ~5-6× before). */
   def memoInput(df: DataFrame, scope: String): DataFrame = {
-    val cp = df.localCheckpoint(true)
-    graft.CacheBook.register(cp.sparkSession, scope)(
-      () => graft.CacheBook.unpersistCheckpoint(cp))
-    cp
+    graft.CacheBook.keep(df.sparkSession, scope)(df.localCheckpoint(true))
   }
 
   /** @param df      input relation (pass a materialized one — see the

@@ -440,8 +440,7 @@ final class Slicer(
           // harmless no-op). Registered here, on the calling thread, where
           // CacheBook's thread-local build context attaches them to a
           // memo under construction.
-          persisted.asScala.foreach(p =>
-            graft.CacheBook.register(p.sparkSession, "slice")(() => { p.unpersist(false); () }))
+          persisted.asScala.foreach(p => graft.CacheBook.keep(p.sparkSession, "slice")(p))
           persisted.clear()
         }
       frontier = Map.empty
@@ -466,8 +465,7 @@ final class Slicer(
                 // live frontier frame stays persisted (the next round
                 // still expands it); it is released on the NEXT compaction.
                 val merged = keysV.reduce(_ union _).localCheckpoint(true)
-                graft.CacheBook.register(merged.sparkSession, "slice")(() =>
-                  graft.CacheBook.unpersistCheckpoint(merged))
+                graft.CacheBook.keep(merged.sparkSession, "slice")(merged)
                 bases.filterNot(_ eq df).foreach(_.unpersist())
                 genBases += tt -> Vector(df)
                 spread += tt -> Vector(merged)

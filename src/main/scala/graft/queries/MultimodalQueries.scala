@@ -30,19 +30,14 @@ object MultimodalQueries {
     // build-size counts (plus the boundary) the oracle recomputes.
     "m_build" -> ((s, dir) => {
       import s.implicits._
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      // independent decode pipelines overlap on futures (each memo is a
-      // Once cell); counts over eager checkpoints are block-read cheap
-      val tF = Future(mNewThreshold(s, dir))
-      val phF = Future(phashChunks(s, dir).count())
-      val afF = Future(audioFp(s, dir).count())
-      val ssF = Future(sceneSigs(s, dir).count())
-      Seq(("audio_fp_rows", Await.result(afF, Duration.Inf)),
-        ("phash_rows", Await.result(phF, Duration.Inf)),
-        ("scene_sigs", Await.result(ssF, Duration.Inf)),
-        ("tnew", Await.result(tF, Duration.Inf)))
+      // independent decode pipelines overlap on graft.Par (each memo is
+      // a build-once cell); counts over eager checkpoints are block-read
+      // cheap
+      graft.Par.each(Seq[() => (String, Long)](
+        () => "audio_fp_rows" -> audioFp(s, dir).count(),
+        () => "phash_rows" -> phashChunks(s, dir).count(),
+        () => "scene_sigs" -> sceneSigs(s, dir).count(),
+        () => "tnew" -> mNewThreshold(s, dir)))(_())
         .toDF("item", "n").orderBy("item")
     }),
 
@@ -367,31 +362,19 @@ object MultimodalQueries {
     })
   )
 
-  private val mTnewCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[Long]]
-
   /** The m-family's nightly boundary (last 20% of underlying doc ids =
     * tonight's batch), ONE memoized scalar action shared by m_phash_inc
     * and m_scene_dedup_inc (each builder used to run its own head() at
     * plan-construction time — the r12 nit). The twin-id guard lives
     * here too: the +100000 twin convention is only sound below it. */
-  private def mNewThreshold(s: SparkSession, dir: String): Long = {
-    graft.CacheBook.touch(s, "m", "tnew")
-    synchronized { mTnewCache.getOrElseUpdate((s, dir), new graft.Once(() => {
-      graft.CacheBook.register(s, "m", "tnew") { () =>
-        MultimodalQueries.synchronized { mTnewCache.remove((s, dir)) }
-        ()
-      }
+  private def mNewThreshold(s: SparkSession, dir: String): Long =
+    graft.CacheBook.memo(s, "m", "tnew", dir) {
       val maxId = Tables.load(s, dir, "documents")
         .agg(max("doc_id")).head().getLong(0)
       require(maxId < 100000L,
         s"twin id convention requires base doc_id < 100000, got max $maxId")
       maxId * 4 / 5
-    })) }.value
-  }
-
-  private val phashCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[org.apache.spark.sql.DataFrame]]
+    }
 
   /** Memoized twin-corpus hash-chunk relation ((doc_id, c0..c3) × 2N —
     * each doc's synthetic PNG + its one-pixel-retouched twin, through
@@ -400,48 +383,24 @@ object MultimodalQueries {
     * subtree is the whole ImageIO pipeline, so it materializes once per
     * (session, corpus) as the named memo m/phash_chunks (m_build prices
     * it). */
-  private def phashChunks(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "m", "phash_chunks")
-    synchronized { phashCache.getOrElseUpdate((s, dir), new graft.Once(() =>
-      graft.CacheBook.building(s, "m", "phash_chunks") {
-        import s.implicits._
-        val ph = Multimodal.phashNearCorpus(
-          Tables.load(s, dir, "documents").select(col("doc_id")).as[Long])
-          .toDF().localCheckpoint(true)
-        graft.CacheBook.register(s, "m", "phash_chunks") { () =>
-          MultimodalQueries.synchronized { phashCache.remove((s, dir)) }
-          graft.CacheBook.unpersistCheckpoint(ph)
-          ()
-        }
-        ph
-      })) }.value
-  }
-
-  private val audioFpCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[org.apache.spark.sql.DataFrame]]
+  private def phashChunks(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "m", "phash_chunks", dir) {
+      import s.implicits._
+      graft.CacheBook.keep(s, "m")(Multimodal.phashNearCorpus(
+        Tables.load(s, dir, "documents").select(col("doc_id")).as[Long])
+        .toDF().localCheckpoint(true))
+    }
 
   /** Memoized twin-corpus audio fingerprint relation (same shape as
     * [[phashChunks]], WAV encode→decode→energy-delta fingerprint) —
     * the named memo m/audio_fp behind m_audio_near. */
-  private def audioFp(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "m", "audio_fp")
-    synchronized { audioFpCache.getOrElseUpdate((s, dir), new graft.Once(() =>
-      graft.CacheBook.building(s, "m", "audio_fp") {
-        import s.implicits._
-        val fp = Multimodal.audioFpCorpus(
-          Tables.load(s, dir, "documents").select(col("doc_id")).as[Long])
-          .toDF().localCheckpoint(true)
-        graft.CacheBook.register(s, "m", "audio_fp") { () =>
-          MultimodalQueries.synchronized { audioFpCache.remove((s, dir)) }
-          graft.CacheBook.unpersistCheckpoint(fp)
-          ()
-        }
-        fp
-      })) }.value
-  }
-
-  private val sceneSigCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[org.apache.spark.sql.DataFrame]]
+  private def audioFp(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "m", "audio_fp", dir) {
+      import s.implicits._
+      graft.CacheBook.keep(s, "m")(Multimodal.audioFpCorpus(
+        Tables.load(s, dir, "documents").select(col("doc_id")).as[Long])
+        .toDF().localCheckpoint(true))
+    }
 
   /** Memoized per-scene keyframe fingerprint relation
     * ((video*1000 + scene_id), c0..c3), shared by m_scene_dedup and
@@ -455,11 +414,8 @@ object MultimodalQueries {
     * decode + 5.7M-patch-md5 + window pipeline (uncheckpointed it
     * recomputed per reference: 37 cpu-s for a ~7 cpu-s fingerprint
     * stage — the round-12 review catch). */
-  private def sceneSigs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    graft.CacheBook.touch(s, "m", "scene_sigs")
-    synchronized {
-      sceneSigCache.getOrElseUpdate((s, dir), new graft.Once(() =>
-        graft.CacheBook.building(s, "m", "scene_sigs") {
+  private def sceneSigs(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "m", "scene_sigs", dir) {
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("doc_id").orderBy("frame_idx")
       // materialize the DECODED level relation once: the twin union
@@ -467,11 +423,9 @@ object MultimodalQueries {
       // from real JPEG decode (round 13) a lazy double reference would
       // run the container-parse + decode pipeline twice (measured:
       // 37.8 -> ~22 cpu-s on m_scene_dedup at sf0.1)
-      val lv0 = Multimodal.frameLevels(
+      val lv0 = graft.CacheBook.keep(s, "m")(Multimodal.frameLevels(
         Multimodal.blobs(s, Tables.load(s, dir, "documents"))).toDF()
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "m")(() =>
-        graft.CacheBook.unpersistCheckpoint(lv0))
+        .localCheckpoint(true))
       // twin = the SAME frame stream re-tagged (+100000): scenes align
       // exactly, so near-dup pairs are decided at the keyframe layer
       val lv = lv0.unionByName(lv0.select((col("doc_id") + 100000L).as("doc_id"),
@@ -512,17 +466,11 @@ object MultimodalQueries {
       val sigs = bits.groupBy("doc_id", "scene_id")
         .agg(chunkAggs.head, chunkAggs.tail: _*)
       // flatten (video, scene) into one band id (scene_id < 64 << 1000)
-      val sid = sigs.select((col("doc_id") * 1000 + col("scene_id")).as("doc_id"),
-        col("c0"), col("c1"), col("c2"), col("c3"))
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "m", "scene_sigs") { () =>
-        MultimodalQueries.synchronized { sceneSigCache.remove((s, dir)) }
-        graft.CacheBook.unpersistCheckpoint(sid)
-        ()
-      }
-      sid
-    })) }.value
-  }
+      graft.CacheBook.keep(s, "m")(
+        sigs.select((col("doc_id") * 1000 + col("scene_id")).as("doc_id"),
+          col("c0"), col("c1"), col("c2"), col("c3"))
+          .localCheckpoint(true))
+    }
 
   /** The shared 4×16-bit-chunk near-dup pipeline behind m_phash_near
     * and m_audio_near: collapse identical-chunk groups to a

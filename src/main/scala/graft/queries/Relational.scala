@@ -2026,26 +2026,9 @@ object Relational {
   // for extension). Named family memos, the d/x/s convention: built
   // once per (session, corpus), eager-checkpointed (truncated plans),
   // released with the "q" scope at family end.
-  private val qMemoCache =
-    collection.mutable.Map.empty[(SparkSession, String, String), graft.Once[DataFrame]]
-  private def memoQ(name: String)(
-      body: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => {
-      graft.CacheBook.touch(s, "q", s"q:$name")
-      Relational.synchronized {
-        qMemoCache.getOrElseUpdate((s, dir, name), new graft.Once(() =>
-          graft.CacheBook.building(s, "q", s"q:$name") {
-            val r = graft.CacheBook.recordBuildPlan(s, "q", s"q:$name")(
-              body(s, dir)).localCheckpoint(true)
-            graft.CacheBook.register(s, "q", s"q:$name") { () =>
-              Relational.synchronized { qMemoCache.remove((s, dir, name)) }
-              graft.CacheBook.unpersistCheckpoint(r)
-              ()
-            }
-            r
-          }))
-      }.value
-    }
+  private def qFrame(s: SparkSession, name: String)(df: DataFrame): DataFrame =
+    graft.CacheBook.keep(s, "q")(
+      graft.CacheBook.recordBuildPlan(s, "q", name)(df).localCheckpoint(true))
 
   /** Sorted distinct brand dictionary (round 15): the brand domain is
     * dimension-bounded (25 values in TPC-H at ANY corpus scale), so the
@@ -2055,21 +2038,11 @@ object Relational {
     * sort on positions equals the string comparison because the
     * dictionary is sorted. Readouts decode via element_at on the same
     * literal. One tiny distinct per (session, corpus), q-scoped. */
-  private val brandDictCache =
-    collection.mutable.Map.empty[(SparkSession, String), graft.Once[Array[String]]]
-  private def brandDict(s: SparkSession, dir: String): Array[String] = {
-    graft.CacheBook.touch(s, "q", "q:brand_dict")
-    Relational.synchronized {
-      brandDictCache.getOrElseUpdate((s, dir), new graft.Once(() => {
-        graft.CacheBook.register(s, "q", "q:brand_dict") { () =>
-          Relational.synchronized { brandDictCache.remove((s, dir)) }
-          ()
-        }
-        t(s, dir, "part").select("p_brand").distinct().orderBy("p_brand")
-          .collect().map(_.getString(0))
-      }))
-    }.value
-  }
+  private def brandDict(s: SparkSession, dir: String): Array[String] =
+    graft.CacheBook.memo(s, "q", "q:brand_dict", dir) {
+      t(s, dir, "part").select("p_brand").distinct().orderBy("p_brand")
+        .collect().map(_.getString(0))
+    }
   /** Decode a 1-based dictionary position column back to the brand. */
   private def brandOf(s: SparkSession, dir: String)(bid: org.apache.spark.sql.Column) =
     element_at(lit(brandDict(s, dir)), bid)
@@ -2085,8 +2058,8 @@ object Relational {
     * basket-bounded, so the row width is bounded at any corpus scale.
     * Round 15: elements are dictionary POSITIONS ([[brandDict]]) —
     * int sort order == string sort order on the sorted dictionary. */
-  private def basketObArr: (SparkSession, String) => DataFrame =
-    memoQ("basket_ob_arr") { (s, dir) =>
+  private def basketObArr(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "q", "q:basket_ob_arr", dir)(qFrame(s, "q:basket_ob_arr") {
       t(s, dir, "lineitem")
         .join(broadcast(t(s, dir, "part").select("p_partkey", "p_brand")),
           col("l_partkey") === col("p_partkey"))
@@ -2094,7 +2067,7 @@ object Relational {
           array_position(lit(brandDict(s, dir)), col("p_brand"))
             .cast("int").as("brand"))
         .groupBy("o").agg(sort_array(array_distinct(collect_list("brand"))).as("bs"))
-    }
+    })
 
   /** Distinct (order, brand-position) rows — the exploded view of
     * [[basketObArr]] (same multiset as the old distinct: per-order
@@ -2109,20 +2082,20 @@ object Relational {
     * two Generate stages (posexplode + slice-explode), all native
     * codegen expressions — the former nested transform() lambdas
     * evaluated interpreted per row (guide §4.1). */
-  private def basketPairRows: (SparkSession, String) => DataFrame =
-    memoQ("basket_pair_rows") { (s, dir) =>
+  private def basketPairRows(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "q", "q:basket_pair_rows", dir)(qFrame(s, "q:basket_pair_rows") {
       basketObArr(s, dir)
         .select(col("o"), col("bs"), posexplode(col("bs")).as(Seq("i", "ba")))
         .select(col("o"), col("ba"),
           explode(expr("slice(bs, i + 2, size(bs))")).as("bb"))
-    }
+    })
 
   /** Frequent pairs: (ba, bb, sup) at the >=3 support bar. */
-  private def basketPairSup: (SparkSession, String) => DataFrame =
-    memoQ("basket_sup") { (s, dir) =>
+  private def basketPairSup(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "q", "q:basket_sup", dir)(qFrame(s, "q:basket_sup") {
       basketPairRows(s, dir).groupBy("ba", "bb").agg(count(lit(1)).as("sup"))
         .filter(col("sup") >= 3)
-    }
+    })
 
   /** q_basket_triples' counting stage: per-order pair rows prefix-
     * pruned against the broadcast candidate set, extended by the third

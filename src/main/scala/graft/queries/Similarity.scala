@@ -91,21 +91,10 @@ object Similarity {
       "the data-derived centroid count — scale-experiment mode; oracle " +
       "hash-matches are NOT expected under an override"))
 
-  private val vecCountCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[Long]]
-
   /** Memoized corpus vector count — one bounded scalar action feeding
     * every derived-K site (the newDocThreshold convention). */
-  private[graft] def vecCount(s: SparkSession, dir: String): Long = {
-    graft.CacheBook.touch(s, "s", "vec_count")
-    synchronized { vecCountCache.getOrElseUpdate((s, dir), new graft.Once(() => {
-      graft.CacheBook.register(s, "s", "vec_count") { () =>
-        Similarity.synchronized { vecCountCache.remove((s, dir)) }
-        ()
-      }
-      vecs(s, dir).count()
-    })) }.value
-  }
+  private[graft] def vecCount(s: SparkSession, dir: String): Long =
+    graft.CacheBook.memo(s, "s", "vec_count", dir)(vecs(s, dir).count())
 
   /** Derived centroid count for the corpus-level IVF index. */
   private[graft] def nCentroids(s: SparkSession, dir: String): Int =
@@ -261,7 +250,9 @@ object Similarity {
       // rounds' plans re-ran every earlier round's assignment inside
       // the next broadcast build; the per-round collect evaluates each
       // round exactly once (K≈√N rows to the driver, the same rows the
-      // broadcast shipped)
+      // broadcast shipped). A null vector or norm yields a null cid (a
+      // null-cid group below) where the old inner broadcast join dropped
+      // the row; corpus vectors are never null.
       val assigned = e.select(
           element_at(graft.functions.NearestCentroids.nearest(
             collectCosineBank(cents), col("v"), 1, col("n")), 1).as("cid"),
@@ -383,10 +374,7 @@ object Similarity {
             .distinct()
           beam = cosRerank(e, qs, expanded).filter(col("brn") <= width)
             .select("q", "vec_id")
-          val cp = beam.localCheckpoint(true)
-          graft.CacheBook.register(s, "s")(() =>
-            graft.CacheBook.unpersistCheckpoint(cp))
-          beam = cp
+          beam = graft.CacheBook.keep(s, "s")(beam.localCheckpoint(true))
         }
         beam
       } finally { s.conf.set(key, prev); s.conf.set(aqeKey, prevA) }
@@ -430,20 +418,11 @@ object Similarity {
             .distinct()
           beam = rerank(expanded).filter(col("brn") <= col("w"))
             .select("w", "q", "vec_id")
-          val cp = beam.localCheckpoint(true)
-          graft.CacheBook.register(s, "s")(() =>
-            graft.CacheBook.unpersistCheckpoint(cp))
-          beam = cp
+          beam = graft.CacheBook.keep(s, "s")(beam.localCheckpoint(true))
         }
         beam
       } finally { s.conf.set(key, prev); s.conf.set(aqeKey, prevA) }
     }
-
-  private val bfCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[DataFrame]]
-
-  private val sigCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[DataFrame]]
 
   /** ONE shared signature-augmented corpus projection — vecs plus the
     * two 32-bit sign-signature halves (s1, s2) AND the Matryoshka
@@ -454,92 +433,50 @@ object Similarity {
     * three derived columns costs 24 bytes/row over the vectors and
     * follows the buildIvfIndex single-cache discipline. Released with
     * the "s" family scope. */
-  private def sigBase(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "s", "sig_base")
-    synchronized { sigCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+  private def sigBase(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "s", "sig_base", dir) {
       // EAGER localCheckpoint, not persist (the item-1 plan tax): the
       // BQ/MRL consumers re-planned and re-codegen'd the signature
       // projection behind the InMemoryRelation on every action.
-      val e = graft.CacheBook.recordBuildPlan(s, "s", "sig_base")(
+      graft.CacheBook.keep(s, "s")(graft.CacheBook.recordBuildPlan(s, "s", "sig_base")(
         vecs(s, dir)
           .withColumn("s1", bqSig(col("v"), 0))
           .withColumn("s2", bqSig(col("v"), 32))
           .withColumn("pn", sqrt(prefixDot(col("v"), col("v"), MrlDim))))
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "s", "sig_base") { () =>
-        Similarity.synchronized { sigCache.remove((s, dir)) }
-        graft.CacheBook.unpersistCheckpoint(e)
-        ()
-      }
-      e
-    })) }.value
-  }
-
-  private val annCache = collection.mutable
-    .Map.empty[(SparkSession, String, String), graft.Once[DataFrame]]
-
-  /** Memoize an ANN query's K*NQueries-row result per (session, corpus,
-    * name), released with the "s" family scope. The recall evals each
-    * re-ran their sibling probe pipeline end-to-end (locally ~0.2 s of
-    * redundancy, but in a contended window every extra multi-job
-    * pipeline multiplies) — with the result memoized, s_*_recall is one
-    * join of two cached 25-row frames, and each probe pipeline runs
-    * exactly once per session however many entries consume it. */
-  private def memoAnn(name: String)(
-      body: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => {
-      graft.CacheBook.touch(s, "s", s"ann:$name")
-      synchronized {
-        annCache.getOrElseUpdate((s, dir, name), new graft.Once(() =>
-          graft.CacheBook.building(s, "s", s"ann:$name") {
-          // EAGER localCheckpoint, not persist (round 14): a persisted
-          // memo keeps its full logical plan, so every CONSUMER re-plans
-          // and re-CODEGENS the whole build subtree — Janino compilation
-          // of the inlined multi-join lineage measured 10-20 cpu-s per
-          // first task on the wedge queries (recs=64, cpu=16 s stages in
-          // the event log), dwarfing their actual data work. The
-          // checkpoint truncates the memo to a LogicalRDD leaf: same
-          // rows, same blocks, postcard-sized consumer plans.
-          val r = graft.CacheBook.recordBuildPlan(s, "s", s"ann:$name")(
-            body(s, dir)).localCheckpoint(true)
-          graft.CacheBook.register(s, "s", s"ann:$name") { () =>
-            Similarity.synchronized { annCache.remove((s, dir, name)) }
-            graft.CacheBook.unpersistCheckpoint(r)
-            ()
-          }
-          r
-        }))
-      }.value
+        .localCheckpoint(true))
     }
-  // (the building(...) wrapper above attaches the body's per-call
-  // anonymous registrations — beamWalk checkpoints, body-local
-  // persists — to this memo's name, so a clean-retry releaseNamed
-  // frees them with the memo instead of leaking them to family end)
+
+  /** Storage of a memoized ANN result (the K*NQueries-row frame each
+    * s_* entry memoizes under "ann:<entry>", so the recall evals join
+    * two cached 25-row frames instead of re-running the sibling probe
+    * pipeline): the build plan is recorded under `name`, then the frame
+    * is EAGERLY localCheckpointed, not persisted — a persisted memo
+    * keeps its full logical plan, so every CONSUMER re-plans and
+    * re-CODEGENS the whole build subtree (Janino compilation of the
+    * inlined multi-join lineage measured 10-20 cpu-s per first task on
+    * the wedge queries, dwarfing their actual data work). The
+    * checkpoint truncates the memo to a LogicalRDD leaf: same rows,
+    * same blocks, postcard-sized consumer plans. */
+  private def annFrame(s: SparkSession, name: String)(df: DataFrame): DataFrame =
+    graft.CacheBook.keep(s, "s")(
+      graft.CacheBook.recordBuildPlan(s, "s", name)(df).localCheckpoint(true))
 
   /** Memoized brute-force cosine top-k — the ground-truth ranking. Five
     * recall queries compare an ANN path against this same baseline, so
     * it materializes once per (session, corpus) (computing ground truth
     * once and reusing it across evals is the standard ANN-benchmark
     * shape); released with the "s" family scope. */
-  private def bfTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.CacheBook.touch(s, "s", "bf_topk")
-    synchronized { bfCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+  private def bfTopk(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "s", "bf_topk", dir) {
       val e = vecs(s, dir)
       val q = broadcast(e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q"), col("v").as("qv"), col("n").as("qn")))
-      val r = graft.CacheBook.recordBuildPlan(s, "s", "bf_topk")(
+      graft.CacheBook.keep(s, "s")(graft.CacheBook.recordBuildPlan(s, "s", "bf_topk")(
         topk(q.join(e, col("vec_id") =!= col("q"))
           .select(col("q"), col("vec_id"),
             VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos"))))
-        .localCheckpoint(true) // truncated plan for the 5 recall readers
-      graft.CacheBook.register(s, "s", "bf_topk") { () =>
-        Similarity.synchronized { bfCache.remove((s, dir)) }
-        graft.CacheBook.unpersistCheckpoint(r)
-        ()
-      }
-      r
-    })) }.value
-  }
+        .localCheckpoint(true)) // truncated plan for the 5 recall readers
+    }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] =
       Map[String, (SparkSession, String) => DataFrame](
@@ -555,30 +492,27 @@ object Similarity {
     // for the persisted artifact this stands for). Returns the IVF
     // cell histogram, which the oracle recomputes exactly.
     "s_index_build" -> ((s, dir) => {
-      // the four builds are independent and each memoizes under its own
-      // Once cell — fan them out so the build entry's wall-clock is the
-      // slowest build, not the sum
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val builds = Seq(
-        Future(buildIvfIndex(s, dir, refine = false)),
-        Future(buildIvfIndex(s, dir, refine = true)),
-        Future { pqModel(s, dir); () },
-        Future(bfTopk(s, dir)),
+      // the builds are independent and each memoizes under its own
+      // cell — fan them out on graft.Par (bounded; its threads inherit
+      // the session and local properties) so the build entry's
+      // wall-clock is the slowest build, not the sum
+      graft.Par.each(Seq[() => Any](
+        () => buildIvfIndex(s, dir, refine = false),
+        () => buildIvfIndex(s, dir, refine = true),
+        () => pqModel(s, dir),
+        () => bfTopk(s, dir),
         // the persisted-artifact write too: s_ivf_store_probe then
         // measures the PRODUCTION probe (pointer resolve + pruned cell
         // scan), not the nightly write it stands downstream of
-        Future { ivfStorePath(s, dir); () },
+        () => ivfStorePath(s, dir),
         // the standing TOKEN index (8N-row explode + draw + O(8N·K)
         // assignment + partitioned write): s_maxsim_tok then prices
         // the production probe, not a hidden rebuild
-        Future { tokIndexPath(s, dir); () },
+        () => tokIndexPath(s, dir),
         // the KNN graph + its edges⋈deg relation (graphEd forces the
         // graph build): s_knn_graph / s_nn_descent / s_graph_rank then
         // price memo-read + their own joins, not a hidden graph build
-        Future { graphEd(s, dir); () })
-      builds.foreach(Await.result(_, Duration.Inf))
+        () => graphEd(s, dir)))(_())
       val (_, assigned) = buildIvfIndex(s, dir, refine = false)
       assigned.groupBy("cid").agg(count(lit(1)).as("n_vecs")).orderBy("cid")
     }),
@@ -591,12 +525,12 @@ object Similarity {
     // single-probe ~0 on weakly-clustered corpora. Bucketed table
     // persisted: the 8x64-term signature projection runs once per row,
     // not once per join side.
-    "s_lsh_ann" -> memoAnn("s_lsh_ann")((s, dir) => {
-      val e = graft.CacheBook.materialize(
-        vecs(s, dir).withColumn("bucket", VecOps.lshBucket(col("v")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    "s_lsh_ann" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_lsh_ann", dir)(
+      annFrame(s, "ann:s_lsh_ann") {
       // per-call persist (probe + candidate sides) — family-scoped release
-      graft.CacheBook.register(s, "s")(() => { e.unpersist(false); () })
+      val e = graft.CacheBook.keep(s, "s")(graft.CacheBook.materialize(
+        vecs(s, dir).withColumn("bucket", VecOps.lshBucket(col("v")))
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
       val probeBuckets = array(
         col("qbucket") +: (0 until VecOps.NPlanes).map(b =>
           col("qbucket").bitwiseXOR(lit(1 << b))): _*)
@@ -607,7 +541,7 @@ object Similarity {
       topk(q.join(e, Seq("bucket")).filter(col("vec_id") =!= col("q"))
         .select(col("q"), col("vec_id"),
           VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos")))
-    }),
+    })),
 
     // int8-quantized cosine top-k: each vector scales to [-127,127] by
     // its max-abs and floors to integers — 4x smaller vectors, and the
@@ -621,11 +555,10 @@ object Similarity {
       val qv = org.apache.spark.sql.graftbridge.ColumnBridge.column(
         graft.functions.Int8Quantize(
           org.apache.spark.sql.graftbridge.ColumnBridge.expression(col("v"))))
-      val e = graft.CacheBook.materialize(
+      val e = graft.CacheBook.keep(s, "s")(graft.CacheBook.materialize(
         vecs(s, dir).select(col("vec_id"), qv.as("qv"))
           .withColumn("qn", sqrt(VecOps.dot(col("qv"), col("qv"))))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      graft.CacheBook.register(s, "s")(() => { e.unpersist(false); () })
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
       val q = broadcast(e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q"), col("qv").as("qqv"), col("qn").as("qqn")))
       topk(q.join(e, col("vec_id") =!= col("q"))
@@ -644,7 +577,8 @@ object Similarity {
     // never ride through the coarse window; the rescore joins them
     // back. Hamming ties break on vec_id, so the candidate set — and
     // therefore the final ranking — is deterministic cross-engine.
-    "s_bq_topk" -> memoAnn("s_bq_topk")((s, dir) => {
+    "s_bq_topk" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_bq_topk", dir)(
+      annFrame(s, "ann:s_bq_topk") {
       val e = sigBase(s, dir) // shared sig-augmented base — one cache, not one per entry
       val q = broadcast(e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q"), col("v").as("qv"), col("n").as("qn"),
@@ -661,7 +595,7 @@ object Similarity {
         .join(q.select(col("q"), col("qv"), col("qn")), "q")
         .select(col("q"), col("vec_id"),
           VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos")))
-    }),
+    })),
 
     "s_bq_recall" -> recallOf("s_bq_topk"),
 
@@ -673,7 +607,8 @@ object Similarity {
     // RescoreC survivors. Same slim candidate frame + join-back shape
     // as s_bq_topk; prefix cosines use the same unrolled IEEE chain as
     // every other cosine here, so the coarse cut is bit-exact too.
-    "s_mrl_topk" -> memoAnn("s_mrl_topk")((s, dir) => {
+    "s_mrl_topk" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_mrl_topk", dir)(
+      annFrame(s, "ann:s_mrl_topk") {
       val e = sigBase(s, dir) // shared sig-augmented base — one cache, not one per entry
       val q = broadcast(e.filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q"), col("v").as("qv"), col("n").as("qn"),
@@ -689,7 +624,7 @@ object Similarity {
         .join(q.select(col("q"), col("qv"), col("qn")), "q")
         .select(col("q"), col("vec_id"),
           VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos")))
-    }),
+    })),
 
     "s_mrl_recall" -> recallOf("s_mrl_topk"),
 
@@ -706,7 +641,8 @@ object Similarity {
     // come off the shared sigBase cache. Hamming ties break on vec_id,
     // so the candidate set and final ranking stay deterministic
     // cross-engine.
-    "s_ivf_bq" -> memoAnn("s_ivf_bq")((s, dir) => {
+    "s_ivf_bq" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_ivf_bq", dir)(
+      annFrame(s, "ann:s_ivf_bq") {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val sigCells = assigned.select(col("vec_id"), col("cid"),
         bqSig(col("v"), 0).as("s1"), bqSig(col("v"), 32).as("s2"))
@@ -730,7 +666,7 @@ object Similarity {
         .join(qs, "q")
         .select(col("q"), col("vec_id"),
           VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos")))
-    }),
+    })),
 
     // recall@K of the cell-bounded BQ pass vs brute force — priced next
     // to s_bq_recall so the IVF bound's accuracy cost is a read-off.
@@ -743,7 +679,8 @@ object Similarity {
     // sigBase cache, and the exact full-dim cosine rescores the
     // RescoreC survivors. Same slim (q, vec_id) candidate frame as
     // s_ivf_bq — full vectors join back only for the rescore.
-    "s_ivf_mrl" -> memoAnn("s_ivf_mrl")((s, dir) => {
+    "s_ivf_mrl" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_ivf_mrl", dir)(
+      annFrame(s, "ann:s_ivf_mrl") {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val pn = sigBase(s, dir).select(col("vec_id"), col("pn"))
       val e = vecs(s, dir)
@@ -766,7 +703,7 @@ object Similarity {
         .join(qs, "q")
         .select(col("q"), col("vec_id"),
           VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos")))
-    }),
+    })),
 
     "s_ivf_mrl_recall" -> recallOf("s_ivf_mrl"),
 
@@ -782,7 +719,8 @@ object Similarity {
     // (greatest() selections over unrolled IEEE dot chains, floored to
     // micro-units and summed as BIGINT — row-local, order-free, exact
     // cross-engine), and only (q, vec_id, ms) crosses the top-K window.
-    "s_maxsim" -> memoAnn("s_maxsim")((s, dir) => {
+    "s_maxsim" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_maxsim", dir)(
+      annFrame(s, "ann:s_maxsim") {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val e = vecs(s, dir)
       val w = Window.partitionBy("q").orderBy(col("ms").desc, col("vec_id").asc)
@@ -794,7 +732,7 @@ object Similarity {
         .filter(col("rn") <= K)
         .select(col("q"), col("vec_id"), col("ms").as("maxsim_micro"), col("rn"))
         .orderBy("q", "rn")
-    }),
+    })),
 
     // PER-TOKEN retrieval + MaxSim rerank — the ColBERT-faithful
     // architecture that CLOSES s_maxsim_recall's measured blind spot:
@@ -814,7 +752,8 @@ object Similarity {
     // s_index_build): this entry is the PRODUCTION probe — pointer
     // resolve, broadcast centroid scoring, partition-PRUNED cell scan
     // (only the ≤ NQ·8·np probed cell directories are read), rerank.
-    "s_maxsim_tok" -> memoAnn("s_maxsim_tok")((s, dir) => {
+    "s_maxsim_tok" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_maxsim_tok", dir)(
+      annFrame(s, "ann:s_maxsim_tok") {
       val e = vecs(s, dir)
       val path = tokIndexPath(s, dir)
       val (cents0, _) = graft.sources.AnnIndexStore.read(s, path)
@@ -849,7 +788,7 @@ object Similarity {
         .filter(col("rn") <= K)
         .select(col("q"), col("vec_id"), col("ms").as("maxsim_micro"), col("rn"))
         .orderBy("q", "rn")
-    }),
+    })),
 
     // INCREMENTAL token-index upsert — the s_ivf_upsert convention on
     // the token index, completing its lifecycle (build → store → probe
@@ -862,7 +801,8 @@ object Similarity {
     // full one-shot recompute over old-drawn centroids — per-token
     // argmax is independent, so the gate itself proves merged ==
     // rebuild.
-    "s_tok_upsert" -> memoAnn("s_tok_upsert")((s, dir) => {
+    "s_tok_upsert" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_tok_upsert", dir)(
+      annFrame(s, "ann:s_tok_upsert") {
       val e = vecs(s, dir)
       val (tNew, kOldTok, cents, standing) = tokOldIndex(s, dir)
       val cb = broadcast(cents)
@@ -893,7 +833,7 @@ object Similarity {
         .filter(col("rn") <= K)
         .select(col("q"), col("vec_id"), col("ms").as("maxsim_micro"), col("rn"))
         .orderBy("q", "rn")
-    }),
+    })),
 
     // upsert recall vs the same brute-force multi-vector truth — the
     // merged index answers to the SAME bar as the from-scratch one
@@ -939,7 +879,8 @@ object Similarity {
     // reps·NProbe·cell-population — never all-pairs, and never
     // replica-inflated; the replica screen itself is bucket-bounded
     // (expected bucket population N/2^NPlanes).
-    "s_dbscan" -> memoAnn("s_dbscan")((s, dir) => {
+    "s_dbscan" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_dbscan", dir)(
+      annFrame(s, "ann:s_dbscan") {
       val e0 = vecs(s, dir)
       val twin = e0.select((col("vec_id") + 100000L).as("vec_id"), col("label"),
           concat(array(element_at(col("v"), 1) + 0.05),
@@ -947,10 +888,8 @@ object Similarity {
         .withColumn("n", VecOps.norm(col("v")))
       // the twin corpus feeds the bucket self-join (both sides), the
       // rep projection and the final expand — materialize once
-      val e = e0.unionByName(twin).select("vec_id", "v", "n")
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "s")(() =>
-        graft.CacheBook.unpersistCheckpoint(e))
+      val e = graft.CacheBook.keep(s, "s")(e0.unionByName(twin).select("vec_id", "v", "n")
+        .localCheckpoint(true))
       // replica screen: BANDED same-bucket candidates (4 bands × 16
       // planes — each band's 2^16 bucket space keeps the in-bucket
       // pair term tiny while a ≥0.99 pair almost surely shares at
@@ -985,10 +924,8 @@ object Similarity {
         .select(col("vec_id"), coalesce(col("rep"), col("vec_id")).as("rep"))
       val mult = rmap.groupBy("rep").agg(count(lit(1)).as("m"))
       // the representative corpus (vec_id, v, n, m) — what DBSCAN sees
-      val reps = e.join(mult.withColumnRenamed("rep", "vec_id"), "vec_id")
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "s")(() =>
-        graft.CacheBook.unpersistCheckpoint(reps))
+      val reps = graft.CacheBook.keep(s, "s")(
+        e.join(mult.withColumnRenamed("rep", "vec_id"), "vec_id").localCheckpoint(true))
       val k = kFor(reps.count())
       // ONE reps-grain top-NProbe pass serves BOTH the assignment
       // (rn = 1) and the probe set (rn ≤ NProbe) — the constant-bank
@@ -997,15 +934,15 @@ object Similarity {
       val bank = collectCosineBank(reps
         .orderBy(md5(col("vec_id").cast("string")), col("vec_id")).limit(k)
         .select(col("vec_id").as("cid"), col("v").as("cv"), col("n").as("cn")))
-      val ranked = reps
+      // a null vector or norm gets a null probe array, which posexplode
+      // drops — the row the old inner broadcast join dropped too
+      val ranked = graft.CacheBook.keep(s, "s")(reps
         .select(col("vec_id"), col("v"), col("n"),
           posexplode(graft.functions.NearestCentroids.nearest(
             bank, col("v"), math.max(1, NProbe), col("n"))).as(Seq("pos", "cid")))
         .select(col("vec_id"), col("v"), col("n"), col("cid"),
           (col("pos") + 1).as("rn"))
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "s")(() =>
-        graft.CacheBook.unpersistCheckpoint(ranked))
+        .localCheckpoint(true))
       val assigned = ranked.filter(col("rn") === 1)
         .select("vec_id", "v", "n", "cid")
       val probes = ranked
@@ -1021,8 +958,7 @@ object Similarity {
         .filter(col("cm") >= DbEpsMicro)
         .select("src", "nbr")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheBook.materialize(pairs)
-      graft.CacheBook.register(s, "s")(() => { pairs.unpersist(false); () })
+      graft.CacheBook.keep(s, "s")(graft.CacheBook.materialize(pairs))
       val nbrMass = pairs.join(mult.withColumnRenamed("rep", "nbr"), "nbr")
         .groupBy("src").agg(sum("m").as("nm"))
       val deg = reps.select(col("vec_id").as("src"), col("m"))
@@ -1056,7 +992,7 @@ object Similarity {
       rmap.join(repOut, "rep")
         .select(col("vec_id"), col("deg"), col("role"), col("cluster"))
         .orderBy("vec_id")
-    }),
+    })),
 
     // DBSCAN eps TUNING CURVE — the s_probe_sweep discipline on the
     // radius graph (the r12 verdict item: every other cut line here is
@@ -1073,7 +1009,9 @@ object Similarity {
     "s_dbscan_sweep" -> ((s, dir) => {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val e = vecs(s, dir)
-      // constant-bank top-NProbe expression — see [[collectCosineBank]]
+      // constant-bank top-NProbe expression — see [[collectCosineBank]];
+      // a null vector or norm gets a null probe array, which explode
+      // drops — the row the old inner broadcast join dropped too
       val probes = e.select(col("vec_id").as("src"), col("v").as("qv"),
         col("n").as("qn"),
         explode(graft.functions.NearestCentroids.nearest(
@@ -1090,8 +1028,7 @@ object Similarity {
         .select(col("src"), col("nbr"),
           explode(filter(bandArr, b => col("cm") >= b)).as("eps"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      graft.CacheBook.materialize(bp)
-      graft.CacheBook.register(s, "s")(() => { bp.unpersist(false); () })
+      graft.CacheBook.keep(s, "s")(graft.CacheBook.materialize(bp))
       val core = bp.groupBy("eps", "src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= DbMinPts).select("eps", "src")
       val border = bp
@@ -1124,7 +1061,8 @@ object Similarity {
     // 2 rounds. Output: top-PprK per seed among strictly-positive
     // scores (both engines gate pr > 0 BEFORE ranking, so sparse-vs-
     // dense formulations cannot disagree on tail rows).
-    "s_ppr" -> memoAnn("s_ppr")((s, dir) => {
+    "s_ppr" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_ppr", dir)(
+      annFrame(s, "ann:s_ppr") {
       val ed = graphEd(s, dir)
       val restart = vecs(s, dir).filter(col("vec_id") < NQueries)
         .select(col("vec_id").as("q"), col("vec_id"), lit(150000L).as("dpr"))
@@ -1140,9 +1078,7 @@ object Similarity {
           .groupBy("q", "vec_id").agg(sum("dpr").as("pr"))
           .filter(col("pr") > 0)
         if (i % 2 == 0 && i < PprIters) {
-          val cp = pr.localCheckpoint(true)
-          graft.CacheBook.register(s, "s")(() => graft.CacheBook.unpersistCheckpoint(cp))
-          pr = cp
+          pr = graft.CacheBook.keep(s, "s")(pr.localCheckpoint(true))
         }
       }
       val w = Window.partitionBy("q").orderBy(col("pr").desc, col("vec_id").asc)
@@ -1150,7 +1086,7 @@ object Similarity {
         .filter(col("rn") <= PprK)
         .select("q", "vec_id", "pr", "rn")
         .orderBy("q", "rn")
-    }),
+    })),
 
     // ANN evaluation: recall@K of the LSH index vs the brute-force
     // baseline, per query. Both rankings are bit-exact deterministic, so
@@ -1227,7 +1163,8 @@ object Similarity {
     // bounded broadcast and cell population ~sqrt(N) — the measured
     // r12 curvature fix (a modulo sample's centroid set grows linearly
     // and the assignment quadratically — the r03 scale defect).
-    "s_ivf_ann" -> memoAnn("s_ivf_ann")((s, dir) => ivfAnn(s, dir, refine = false)),
+    "s_ivf_ann" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_ivf_ann", dir)(
+      annFrame(s, "ann:s_ivf_ann")(ivfAnn(s, dir, refine = false)))),
 
     // SIMPLIFIED SILHOUETTE per IVF cell — the clustering-quality audit
     // of the standing index (s_index_health counts cell populations;
@@ -1300,7 +1237,8 @@ object Similarity {
     // iters x nprobe), while on naturally-clustered data it is the
     // standard production choice. Both variants answer to oracles; the
     // two recall evals price them side by side.
-    "s_ivf_kmeans" -> memoAnn("s_ivf_kmeans")((s, dir) => ivfAnn(s, dir, refine = true)),
+    "s_ivf_kmeans" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_ivf_kmeans", dir)(
+      annFrame(s, "ann:s_ivf_kmeans")(ivfAnn(s, dir, refine = true)))),
 
     "s_ivf_kmeans_recall" -> recallOf("s_ivf_kmeans"),
 
@@ -1316,10 +1254,11 @@ object Similarity {
     // IvfUpsertSpec proves merged == from-scratch rebuild against the
     // same centroids (per-vector argmax is independent), so nightly
     // upserts never drift from a rebuild.
-    "s_ivf_upsert" -> memoAnn("s_ivf_upsert")((s, dir) => {
+    "s_ivf_upsert" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_ivf_upsert", dir)(
+      annFrame(s, "ann:s_ivf_upsert") {
       val (tNew, seed) = oldSeed(s, dir)
       queryIvf(s, dir, seed, upsertAssign(vecs(s, dir), seed, tNew))
-    }),
+    })),
 
     "s_ivf_upsert_recall" -> recallOf("s_ivf_upsert"),
 
@@ -1373,7 +1312,8 @@ object Similarity {
     // starves the probed cells and wants either more probes or a
     // pre-filtered per-label index — s_filtered_recall prices exactly
     // that starvation against the filtered brute force.
-    "s_filtered_ann" -> memoAnn("s_filtered_ann")((s, dir) => {
+    "s_filtered_ann" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_filtered_ann", dir)(
+      annFrame(s, "ann:s_filtered_ann") {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val e = vecs(s, dir)
       val probes = probeCells(e, broadcast(cents))
@@ -1381,7 +1321,7 @@ object Similarity {
         .filter(col("vec_id") =!= col("q"))
         .select(col("q"), col("vec_id"),
           VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos")))
-    }),
+    })),
 
     // recall vs the FILTERED brute force (the unfiltered baseline would
     // undercount: ground truth under a predicate is the best matching
@@ -1414,7 +1354,8 @@ object Similarity {
     // decision is integer-exact cross-engine (a cos within 1e-16 of τ
     // must land on the same side in both engines). τ sits above the
     // corpus's p99 cosine — selective, as a dedup/match radius is.
-    "s_range_search" -> memoAnn("s_range_search")((s, dir) => {
+    "s_range_search" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_range_search", dir)(
+      annFrame(s, "ann:s_range_search") {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val probes = probeCells(vecs(s, dir), broadcast(cents))
       probes.join(assigned, "cid")
@@ -1423,7 +1364,7 @@ object Similarity {
           VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos"))
         .filter(floor(col("cos") * lit(1000000.0)).cast("long") >= RangeTauMicro)
         .orderBy("q", "vec_id")
-    }),
+    })),
 
     // recall of the IVF range search vs the RADIUS-filtered brute
     // force (ground truth under a radius is every in-radius row). A
@@ -1792,10 +1733,7 @@ object Similarity {
         sel = sel.unionByName(pick)
         // bound plan depth: the next round reads sel twice (center
         // attach + anti-join) — uncheckpointed the plan nests per round
-        val cp = sel.localCheckpoint(true)
-        graft.CacheBook.register(s, "s")(() =>
-          graft.CacheBook.unpersistCheckpoint(cp))
-        sel = cp
+        sel = graft.CacheBook.keep(s, "s")(sel.localCheckpoint(true))
       }
       sel.orderBy("round")
     })
@@ -1803,7 +1741,8 @@ object Similarity {
     // eta-expansion through a lambda: pqAnnBody/ivfpqAnnBody are vals
     // declared below this map (object init order would capture null
     // otherwise)
-    "s_pq_ann" -> memoAnn("s_pq_ann")((s, dir) => pqAnnBody(s, dir)),
+    "s_pq_ann" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_pq_ann", dir)(
+      annFrame(s, "ann:s_pq_ann")(pqAnnBody(s, dir)))),
     "s_pq_recall" -> recallOf("s_pq_ann"),
 
     // PQ DISTORTION audit — the reconstruction-error half of the PQ
@@ -1842,7 +1781,8 @@ object Similarity {
     // index s_ivf_ann prices; scores from the same Lloyd-refined
     // codebook s_pq_ann prices; the recall query prices the composed
     // loss against brute force.
-    "s_ivfpq_ann" -> memoAnn("s_ivfpq_ann")((s, dir) => ivfpqAnnBody(s, dir)),
+    "s_ivfpq_ann" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_ivfpq_ann", dir)(
+      annFrame(s, "ann:s_ivfpq_ann")(ivfpqAnnBody(s, dir)))),
     "s_ivfpq_recall" -> recallOf("s_ivfpq_ann"),
 
     // the persisted-artifact probe — what a 100 TB query session
@@ -1960,10 +1900,7 @@ object Similarity {
         // compact lineage every round (each round's plan nests the
         // previous graph twice in the 2-hop self-join — unchecked the
         // plan grows exponentially in rounds); blocks release with "s"
-        val cp = g.localCheckpoint(true)
-        graft.CacheBook.register(s, "s")(() =>
-          graft.CacheBook.unpersistCheckpoint(cp))
-        g = cp
+        g = graft.CacheBook.keep(s, "s")(g.localCheckpoint(true))
         curves += recallAt(r, g)
       }
       curves.reduce(_ unionByName _).orderBy("iter", "q")
@@ -1982,7 +1919,8 @@ object Similarity {
     // point of graph ANN at scale (IVF probes scan whole cells; the
     // walk touches only edges). Navigability on this weakly-clustered
     // corpus is priced by s_graph_search_recall against brute force.
-    "s_graph_search" -> memoAnn("s_graph_search")((s, dir) => {
+    "s_graph_search" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_graph_search", dir)(
+      annFrame(s, "ann:s_graph_search") {
       val e = vecs(s, dir)
       val gexp = knnGraph(s, dir).select(col("src").as("vec_id"), col("nbr"))
       val qs = broadcast(e.filter(col("vec_id") < NQueries)
@@ -1996,7 +1934,7 @@ object Similarity {
         qs.select("q").join(seeds), SearchRounds, SearchBeam)
       topk(cosRerank(e, qs, beam.filter(col("vec_id") =!= col("q")))
         .select("q", "vec_id", "cos"))
-    }),
+    })),
 
     // recall@K of the graph walk vs the same brute-force baseline —
     // prices the navigable-graph trade next to the IVF/LSH/PQ paths.
@@ -2051,7 +1989,8 @@ object Similarity {
     // from the MEMOIZED layer-0 graph by two semi-joins (no second
     // graph build). Recall priced by s_hnsw_search_recall next to the flat
     // walk — same rounds, better-seeded.
-    "s_hnsw_search" -> memoAnn("s_hnsw_search")((s, dir) => {
+    "s_hnsw_search" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_hnsw_search", dir)(
+      annFrame(s, "ann:s_hnsw_search") {
       val e = vecs(s, dir)
       val g0 = knnGraph(s, dir).select(col("src").as("vec_id"), col("nbr"))
       val prom = e.filter(md5(col("vec_id").cast("string")) < lit(HnswPromote))
@@ -2068,7 +2007,7 @@ object Similarity {
       val beam = beamWalk(s, e, qs, g0, entries, SearchRounds, SearchBeam)
       topk(cosRerank(e, qs, beam.filter(col("vec_id") =!= col("q")))
         .select("q", "vec_id", "cos"))
-    }),
+    })),
 
     "s_hnsw_search_recall" -> recallOf("s_hnsw_search"),
 
@@ -2095,7 +2034,8 @@ object Similarity {
     // the base graph builds cell-bounded like knnGraph. The delta
     // query frame broadcasts like the NQueries frame (bounded by the
     // nightly window, not the corpus).
-    "s_graph_upsert" -> memoAnn("s_graph_upsert")((s, dir) => {
+    "s_graph_upsert" -> ((s, dir) => graft.CacheBook.memo(s, "s", "ann:s_graph_upsert", dir)(
+      annFrame(s, "ann:s_graph_upsert") {
       val e = vecs(s, dir)
       val (tNew, _) = oldSeed(s, dir)
       val eOld = e.filter(col("vec_id") < tNew)
@@ -2134,7 +2074,7 @@ object Similarity {
         qs.select("q").join(seeds), SearchRounds, SearchBeam)
       topk(cosRerank(e, qs, beam.filter(col("vec_id") =!= col("q")))
         .select("q", "vec_id", "cos"))
-    }),
+    })),
 
     "s_graph_upsert_recall" -> recallOf("s_graph_upsert"),
 
@@ -2159,7 +2099,7 @@ object Similarity {
       // candidate pool: top-MmrPool by exact cosine, ranked on the
       // MICRO-unit score (identical rank keys in both engines)
       val wPool = Window.partitionBy("q").orderBy(col("relm").desc, col("vec_id").asc)
-      val pool = qs.join(e, col("vec_id") =!= col("q"))
+      val pool = graft.CacheBook.keep(s, "s")(qs.join(e, col("vec_id") =!= col("q"))
         .select(col("q"), col("vec_id"),
           floor(VecOps.cosine(col("qv"), col("v"), col("qn"), col("n"))
             * lit(1000000.0)).cast("long").as("relm"))
@@ -2169,13 +2109,11 @@ object Similarity {
         // eager CHECKPOINT (round 14 OPT): every greedy round's three
         // relations re-planned the corpus cosine subtree behind a
         // persist; the NQueries*MmrPool-row leaf truncates it
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "s")(() =>
-        graft.CacheBook.unpersistCheckpoint(pool))
+        .localCheckpoint(true))
       // within-pool pairwise similarities: equi-join on q, MmrPool² rows
       // per query, corpus-independent — every greedy round reads this
       val pv = pool.join(e.select(col("vec_id"), col("v"), col("n")), "vec_id")
-      val pairs = pv.select(col("q"), col("vec_id").as("a"),
+      val pairs = graft.CacheBook.keep(s, "s")(pv.select(col("q"), col("vec_id").as("a"),
           col("v").as("av"), col("n").as("an"))
         .join(pv.select(col("q"), col("vec_id").as("b"),
           col("v").as("bv"), col("n").as("bn")), "q")
@@ -2183,9 +2121,7 @@ object Similarity {
         .select(col("q"), col("a"), col("b"),
           floor(VecOps.cosine(col("av"), col("bv"), col("an"), col("bn"))
             * lit(1000000.0)).cast("long").as("simm"))
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "s")(() =>
-        graft.CacheBook.unpersistCheckpoint(pairs))
+        .localCheckpoint(true))
       val wSel = Window.partitionBy("q").orderBy(col("mmr").desc, col("vec_id").asc)
       // the greedy loop runs over <=NQueries*MmrPool-row relations —
       // pinned narrow width + AQE-off (round 14 OPT: the CC/BFS loop
@@ -2216,10 +2152,7 @@ object Similarity {
             sel = sel.unionByName(pick)
             // bound plan depth: next round references sel in the anti-join
             // AND the redundancy join — unchecked the plan grows ~3^rounds
-            val cp = sel.localCheckpoint(true)
-            graft.CacheBook.register(s, "s")(() =>
-              graft.CacheBook.unpersistCheckpoint(cp))
-            sel = cp
+            sel = graft.CacheBook.keep(s, "s")(sel.localCheckpoint(true))
           }
         }
       }
@@ -2258,9 +2191,7 @@ object Similarity {
         // compaction discipline): plan depth stays bounded however many
         // iterations a workload configures; blocks release with "s".
         if (i % 2 == 0 && i < RankIters) {
-          val cp = pr.localCheckpoint(true)
-          graft.CacheBook.register(s, "s")(() => graft.CacheBook.unpersistCheckpoint(cp))
-          pr = cp
+          pr = graft.CacheBook.keep(s, "s")(pr.localCheckpoint(true))
         }
       }
       pr.orderBy("vec_id")
@@ -2283,8 +2214,8 @@ object Similarity {
       // r7 driver retry proved the explode→distinct→overlap→window
       // pipeline was re-running per call): K*NQueries rows persisted
       // once per (session, corpus), released with the "s" scope.
-      val lex = memoAnn("s_lex_topk")((s2, d2) => {
-        val dw = Tables.load(s2, d2, "documents")
+      val lex = graft.CacheBook.memo(s, "s", "ann:s_lex_topk", dir)(annFrame(s, "ann:s_lex_topk") {
+        val dw = Tables.load(s, dir, "documents")
           .select(col("doc_id").as("id"), explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) > 0).distinct()
         val qw = broadcast(dw.filter(col("id") < NQueries)
@@ -2294,7 +2225,7 @@ object Similarity {
         val wl = Window.partitionBy("q").orderBy(col("ov").desc, col("id").asc)
         overlap.withColumn("lex_rn", row_number().over(wl))
           .filter(col("lex_rn") <= K).select("q", "id", "lex_rn")
-      })(s, dir)
+      })
       val vec = bfTopk(s, dir)
         .select(col("q"), col("vec_id").as("id"), col("rn").as("vec_rn"))
       val fused = lex.join(vec, Seq("q", "id"), "full")
@@ -2436,8 +2367,8 @@ object Similarity {
     * paths; memoized so the two recall entries share one build. */
   private def maxSimRecallOf(annName: String): (SparkSession, String) => DataFrame =
     (s, dir) => {
-      val bf = memoAnn("maxsim_bf")((s2, d2) => {
-        val e = vecs(s2, d2)
+      val bf = graft.CacheBook.memo(s, "s", "ann:maxsim_bf", dir)(annFrame(s, "ann:maxsim_bf") {
+        val e = vecs(s, dir)
         val qs = broadcast(e.filter(col("vec_id") < NQueries)
           .select(col("vec_id").as("q"), col("v").as("qv")))
         val wb = Window.partitionBy("q").orderBy(col("ms").desc, col("vec_id").asc)
@@ -2447,7 +2378,7 @@ object Similarity {
           .withColumn("rn", row_number().over(wb))
           .filter(col("rn") <= K)
           .select("q", "vec_id")
-      })(s, dir)
+      })
       recallAgainst(bf, s, dir, annName)
     }
 
@@ -2455,9 +2386,6 @@ object Similarity {
     * baseline — exact integer ratio, both rankings deterministic. */
   private def recallOf(annName: String): (SparkSession, String) => DataFrame =
     (s, dir) => recallAgainst(bfTopk(s, dir).select("q", "vec_id"), s, dir, annName)
-
-  private val storeCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[String]]
 
   /** Write the (unrefined) IVF index as a standing AnnIndexStore
     * artifact once per (session, corpus) — the temp-dir stand-in for
@@ -2532,7 +2460,9 @@ object Similarity {
     val bank = graft.functions.NearestCentroids.dotBank(
       cents.select("cid", "cv").collect().toSeq.map(r =>
         (r.getLong(0), r.getSeq[Double](1).toArray)))
-    // width anchor — see [[assignWidth]]
+    // width anchor — see [[assignWidth]]. A null token slice yields a
+    // null cid (the row is kept) where the old inner broadcast join
+    // dropped it; token slices of corpus vectors are never null.
     toks.repartition(assignWidth(toks.sparkSession), col("vec_id"), col("t"))
       .select(col("vec_id"),
         sqrt(subDot(col("tv"), col("tv"))).as("n"), col("tv").as("v"),
@@ -2540,49 +2470,37 @@ object Similarity {
           bank, col("tv"), 1), 1).as("cid"))
   }
 
-  private val tokOldCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[(Long, Int, DataFrame, DataFrame)]]
-
   /** The OLD-token standing index — last night's artifact in the
     * nightly-delta convention, shared by s_tok_upsert (batch upsert)
     * and st_tok_ingest (streaming probe-on-ingest): (tNew boundary,
     * the old-population-derived K, the K-row centroid table, the
     * standing cells = old tokens assigned). Both relations persist +
     * materialize once per (session, corpus); released with "s". */
-  private[graft] def tokOldIndex(s: SparkSession, dir: String): (Long, Int, DataFrame, DataFrame) = {
-    graft.CacheBook.touch(s, "s", "tok_old")
-    synchronized { tokOldCache.getOrElseUpdate((s, dir), new graft.Once(() =>
-      graft.CacheBook.building(s, "s", "tok_old") {
-        val e = vecs(s, dir)
-        val (tNew, _) = oldSeed(s, dir)
-        val oldToks = toksOf(e.filter(col("vec_id") < tNew))
-        // K derives from the OLD token population (the count the
-        // nightly build saw), override-aware like every draw site
-        val kOldTok = centroidOverride.map { k => overrideWarned; k }
-          .getOrElse(kFor(PqM.toLong * e.filter(col("vec_id") < tNew).count()))
-        // EAGER localCheckpoints, not persists (the item-1 plan tax):
-        // behind a persist every consumer of the standing cells
-        // (s_tok_upsert's merge, st_tok_ingest's stream-static join)
-        // re-planned and re-codegen'd the toksOf-explode + assignment
-        // subtree per action; the checkpoint truncates both relations
-        // to LogicalRDD leaves. Build shape stays auditable via the
-        // recorded build plan (PlanShapeSpec discipline).
-        val cents = graft.CacheBook.recordBuildPlan(s, "s", "tok_old")(
-          tokCentroids(oldToks, kOldTok)).localCheckpoint(true)
-        val standing = graft.CacheBook.recordBuildPlan(s, "s", "tok_old:cells")(
-          tokAssign(oldToks, cents)).localCheckpoint(true)
-        graft.CacheBook.register(s, "s", "tok_old") { () =>
-          Similarity.synchronized { tokOldCache.remove((s, dir)) }
-          graft.CacheBook.unpersistCheckpoint(cents)
-          graft.CacheBook.unpersistCheckpoint(standing)
-          ()
-        }
-        (tNew, kOldTok, cents, standing)
-      })) }.value
-  }
-
-  private val tokStoreCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[String]]
+  private[graft] def tokOldIndex(s: SparkSession,
+      dir: String): (Long, Int, DataFrame, DataFrame) =
+    graft.CacheBook.memo(s, "s", "tok_old", dir) {
+      val e = vecs(s, dir)
+      val (tNew, _) = oldSeed(s, dir)
+      val oldToks = toksOf(e.filter(col("vec_id") < tNew))
+      // K derives from the OLD token population (the count the
+      // nightly build saw), override-aware like every draw site
+      val kOldTok = centroidOverride.map { k => overrideWarned; k }
+        .getOrElse(kFor(PqM.toLong * e.filter(col("vec_id") < tNew).count()))
+      // EAGER localCheckpoints, not persists (the item-1 plan tax):
+      // behind a persist every consumer of the standing cells
+      // (s_tok_upsert's merge, st_tok_ingest's stream-static join)
+      // re-planned and re-codegen'd the toksOf-explode + assignment
+      // subtree per action; the checkpoint truncates both relations
+      // to LogicalRDD leaves. Build shape stays auditable via the
+      // recorded build plan (PlanShapeSpec discipline).
+      val cents = graft.CacheBook.keep(s, "s")(
+        graft.CacheBook.recordBuildPlan(s, "s", "tok_old")(
+          tokCentroids(oldToks, kOldTok)).localCheckpoint(true))
+      val standing = graft.CacheBook.keep(s, "s")(
+        graft.CacheBook.recordBuildPlan(s, "s", "tok_old:cells")(
+          tokAssign(oldToks, cents)).localCheckpoint(true))
+      (tNew, kOldTok, cents, standing)
+    }
 
   /** STANDING token-level MaxSim index (the r12 "missing #2"): token
     * centroids + cid-partitioned token cells persisted through
@@ -2596,49 +2514,32 @@ object Similarity {
     * (priced in s_index_build), and s_tok_upsert extends it with a
     * delta batch. Cells carry (vec_id, v = the 8-dim token slice,
     * n = its norm, cid), so in-cell scoring needs no corpus join. */
-  private def tokIndexPath(s: SparkSession, dir: String): String = {
-    graft.CacheBook.touch(s, "s", "tok_index")
-    synchronized {
-      tokStoreCache.getOrElseUpdate((s, dir), new graft.Once(() =>
-        graft.CacheBook.building(s, "s", "tok_index") {
-          val toks = toksOf(vecs(s, dir))
-          val cents = tokCentroids(toks, nCentroidsTok(s, dir))
-            .withColumn("cn", sqrt(subDot(col("cv"), col("cv"))))
-          val cells = tokAssign(toks, cents.select("cid", "cv"))
-          val path = java.nio.file.Files.createTempDirectory("graft-tok-store").toString
-          graft.sources.AnnIndexStore.write(path, cents, cells)
-          graft.CacheBook.register(s, "s", "tok_index") { () =>
-            Similarity.synchronized { tokStoreCache.remove((s, dir)) }
-            val p = new org.apache.hadoop.fs.Path(path)
-            p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-            ()
-          }
-          path
-        })) }.value
-  }
+  private def tokIndexPath(s: SparkSession, dir: String): String =
+    graft.CacheBook.memo(s, "s", "tok_index", dir, deleteStore(s)) {
+      val toks = toksOf(vecs(s, dir))
+      val cents = tokCentroids(toks, nCentroidsTok(s, dir))
+        .withColumn("cn", sqrt(subDot(col("cv"), col("cv"))))
+      val cells = tokAssign(toks, cents.select("cid", "cv"))
+      val path = java.nio.file.Files.createTempDirectory("graft-tok-store").toString
+      graft.sources.AnnIndexStore.write(path, cents, cells)
+      path
+    }
 
-  private def ivfStorePath(s: SparkSession, dir: String): String = {
-    graft.CacheBook.touch(s, "s", "ivf_store")
-    synchronized {
-    storeCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+  private def ivfStorePath(s: SparkSession, dir: String): String =
+    graft.CacheBook.memo(s, "s", "ivf_store", dir, deleteStore(s)) {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)
       val path = java.nio.file.Files.createTempDirectory("graft-ivf-store").toString
       graft.sources.AnnIndexStore.write(path, cents, assigned)
-      graft.CacheBook.register(s, "s", "ivf_store") { () =>
-        Similarity.synchronized { storeCache.remove((s, dir)) }
-        // Hadoop delete, not java.io: the store path is a filesystem
-        // URI in production (hdfs://, s3a://)
-        val p = new org.apache.hadoop.fs.Path(path)
-        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
-        ()
-      }
       path
-    }))
-  }.value
-  }
+    }
 
-  private val ivfCache = collection.mutable
-    .Map.empty[(SparkSession, String, Boolean), graft.Once[(DataFrame, DataFrame)]]
+  /** Release of a memoized store artifact: Hadoop delete, not java.io —
+    * the store path is a filesystem URI in production (hdfs://, s3a://). */
+  private def deleteStore(s: SparkSession)(path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+    ()
+  }
 
   /** Build-once half of the IVF index: (centroid table (cid, cv, cn),
     * cell-assigned vector table (vec_id, v, n, cid)). Persist both with
@@ -2652,10 +2553,8 @@ object Similarity {
     * the same assignment — in one session the O(N*K) build runs once,
     * not three times. */
   def buildIvfIndex(s: SparkSession, dir: String,
-      refine: Boolean = false): (DataFrame, DataFrame) = {
-    graft.CacheBook.touch(s, "s", s"ivf:$refine")
-    synchronized {
-    ivfCache.getOrElseUpdate((s, dir, refine), new graft.Once(() => {
+      refine: Boolean = false): (DataFrame, DataFrame) =
+    graft.CacheBook.memo(s, "s", s"ivf:$refine", dir) {
       val e = vecs(s, dir)
       val seed = e
         .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
@@ -2668,14 +2567,16 @@ object Similarity {
       // behind a persist every IVF probe (s_ivf_ann, s_filtered_ann,
       // the sweep/upsert/health entries) re-planned and re-codegen'd
       // the corpus×K assignment subtree per action.
-      val cents0 = graft.CacheBook.recordBuildPlan(s, "s", s"ivf:$refine")(
-        if (refine) refineCentroids(e, seed) else seed).localCheckpoint(true)
+      val cents0 = graft.CacheBook.keep(s, "s")(
+        graft.CacheBook.recordBuildPlan(s, "s", s"ivf:$refine")(
+          if (refine) refineCentroids(e, seed) else seed).localCheckpoint(true))
       val cents = broadcast(cents0)
       // constant-bank argmax expression (see [[collectCosineBank]]):
       // the old plan joined the broadcast K rows and window-sorted the
       // full N×K relation to keep one row per vector
       val bank = collectCosineBank(cents0)
-      val assigned = graft.CacheBook.recordBuildPlan(s, "s", s"ivf:$refine:cells")(
+      val assigned = graft.CacheBook.keep(s, "s")(
+        graft.CacheBook.recordBuildPlan(s, "s", s"ivf:$refine:cells")(
         e.repartition(assignWidth(s), col("vec_id"))
         // label rides in the cell relation (and thus the persisted
         // cells parquet): the in-memory analog of storing filterable
@@ -2684,17 +2585,9 @@ object Similarity {
         .select(col("vec_id"), col("label"), col("v"), col("n"),
           element_at(graft.functions.NearestCentroids.nearest(
             bank, col("v"), 1, col("n")), 1).as("cid")))
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "s", s"ivf:$refine") { () =>
-        Similarity.synchronized { ivfCache.remove((s, dir, refine)) }
-        graft.CacheBook.unpersistCheckpoint(assigned)
-        graft.CacheBook.unpersistCheckpoint(cents0)
-        ()
-      }
+        .localCheckpoint(true))
       (cents, assigned)
-    }))
-  }.value
-  }
+    }
 
   /** Query-many half: probe the NProbe nearest cells per query, exact
     * search within. `cents`/`assigned` may be freshly built or reloaded
@@ -2710,9 +2603,6 @@ object Similarity {
           VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos")))
   }
 
-  private val seedCache = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[(Long, DataFrame)]]
-
   /** The nightly-delta convention shared by s_ivf_upsert and the
     * streaming probe-on-ingest (st_ann_ingest): new batch = last 20%
     * of vec_ids, standing centroid draw sees only pre-batch vectors.
@@ -2720,9 +2610,8 @@ object Similarity {
     * — its lineage is a full-corpus md5 sort that every broadcast
     * consumer (probe, old assignment, delta assignment) would
     * otherwise re-run (the buildIvfIndex cents0 discipline). */
-  private[graft] def oldSeed(s: SparkSession, dir: String): (Long, DataFrame) = {
-    graft.CacheBook.touch(s, "s", "old_seed")
-    synchronized { seedCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+  private[graft] def oldSeed(s: SparkSession, dir: String): (Long, DataFrame) =
+    graft.CacheBook.memo(s, "s", "old_seed", dir) {
       val e = vecs(s, dir)
       val tNew = e.agg(max("vec_id")).head().getLong(0) * 4 / 5
       // the standing index predates the batch, so its K derives from
@@ -2731,20 +2620,15 @@ object Similarity {
         .getOrElse(kFor(e.filter(col("vec_id") < tNew).count()))
       // eager localCheckpoint, not persist: the K-row seed's lineage is
       // a full-corpus md5 sort, re-planned per consumer behind a persist
-      val seed = graft.CacheBook.recordBuildPlan(s, "s", "old_seed")(
-        e.filter(col("vec_id") < tNew)
-          .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-          .limit(kOld)
-          .select(col("vec_id").as("cid"), col("v").as("cv"), col("n").as("cn")))
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "s", "old_seed") { () =>
-        Similarity.synchronized { seedCache.remove((s, dir)) }
-        graft.CacheBook.unpersistCheckpoint(seed)
-        ()
-      }
+      val seed = graft.CacheBook.keep(s, "s")(
+        graft.CacheBook.recordBuildPlan(s, "s", "old_seed")(
+          e.filter(col("vec_id") < tNew)
+            .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
+            .limit(kOld)
+            .select(col("vec_id").as("cid"), col("v").as("cv"), col("n").as("cn")))
+          .localCheckpoint(true))
       (tNew, seed)
-    })) }.value
-  }
+    }
 
   /** Assign a vector frame to a standing centroid table (argmax cosine,
     * cid tie-break) — the per-vector-independent kernel shared by the
@@ -2800,9 +2684,6 @@ object Similarity {
   // O(N * M * Ksub) against a constant broadcast; scoring is a linear
   // scan of the code table (compose with IVF cells for sub-linear
   // search — this query prices the PQ term alone).
-  private val pqCache = collection.mutable
-    .Map.empty[(SparkSession, String),
-      graft.Once[(DataFrame, DataFrame, DataFrame)]]
 
   /** PQ model pieces — (per-vector codes, per-query integer micro
     * LUT, refined codebook) — shared by s_pq_ann (full code-table
@@ -2812,30 +2693,22 @@ object Similarity {
     * family scope: the Lloyd loop + encoding is the expensive half of
     * every PQ query. */
   private def pqModel(s: SparkSession,
-      dir: String): (DataFrame, DataFrame, DataFrame) = {
-    graft.CacheBook.touch(s, "s", "pq_model")
-    synchronized { pqCache.getOrElseUpdate((s, dir), new graft.Once(() => {
+      dir: String): (DataFrame, DataFrame, DataFrame) =
+    graft.CacheBook.memo(s, "s", "pq_model", dir) {
       val (codes, lut, cb) = pqModelBody(s, dir)
       // EAGER localCheckpoints, not persists (the item-1 plan tax):
       // the codes/LUT lineage is the whole Lloyd loop + encoding, and
       // behind a persist every PQ consumer (s_pq_ann's code-table
       // scan, s_ivfpq_ann, s_pq_distortion) re-planned and re-codegen'd
       // it per action — s_pq_ann priced 6.8 cpu-s for a 0.96 s probe.
-      val codesP = graft.CacheBook.recordBuildPlan(s, "s", "pq_model")(
-        codes).localCheckpoint(true)
-      val lutP = graft.CacheBook.recordBuildPlan(s, "s", "pq_model:lut")(
-        lut).localCheckpoint(true)
-      graft.CacheBook.register(s, "s", "pq_model") { () =>
-        Similarity.synchronized { pqCache.remove((s, dir)) }
-        graft.CacheBook.unpersistCheckpoint(codesP)
-        graft.CacheBook.unpersistCheckpoint(lutP)
-        ()
-      }
+      val codesP = graft.CacheBook.keep(s, "s")(
+        graft.CacheBook.recordBuildPlan(s, "s", "pq_model")(codes).localCheckpoint(true))
+      val lutP = graft.CacheBook.keep(s, "s")(
+        graft.CacheBook.recordBuildPlan(s, "s", "pq_model:lut")(lut).localCheckpoint(true))
       // cb is local data (PqM*PqKsub rows, see pqLloyd) that the two
       // persisted relations already embody — no third persist
       (codesP, lutP, cb)
-    })) }.value
-  }
+    }
 
   /** Nearest code of every sub-vector of `ex` (vec_id, m, xsub) under
     * `codebook` (m, code, csub). Round 15: per-subspace L2 argmin as the
@@ -2992,7 +2865,8 @@ object Similarity {
     * and s_graph_rank, and fanned into s_index_build's build list so the
     * graph consumers price probe-only cost, not a hidden build. */
   private def knnGraph(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_knn_graph")((s2, d2) => knnGraphBody(s2, d2))(s, dir)
+    graft.CacheBook.memo(s, "s", "ann:s_knn_graph", dir)(
+      annFrame(s, "ann:s_knn_graph")(knnGraphBody(s, dir)))
 
   /** Memoized STANDING graph for the upsert path: the knnGraphBody
     * shape restricted to the pre-batch corpus, with the cells drawn
@@ -3003,9 +2877,9 @@ object Similarity {
     * graph the search entries walk; this is the graph that EXISTED
     * before tonight's batch, which the upsert extends. */
   private def knnBase(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_knn_base")((s2, d2) => {
-      val (tNew, seed) = oldSeed(s2, d2)
-      val eOld = vecs(s2, d2).filter(col("vec_id") < tNew)
+    graft.CacheBook.memo(s, "s", "ann:s_knn_base", dir)(annFrame(s, "ann:s_knn_base") {
+      val (tNew, seed) = oldSeed(s, dir)
+      val eOld = vecs(s, dir).filter(col("vec_id") < tNew)
       // constant-bank top-NProbe expression — see [[collectCosineBank]]
       val probes = eOld.select(col("vec_id").as("src"), col("v").as("qv"),
         col("n").as("qn"),
@@ -3020,17 +2894,17 @@ object Similarity {
         .withColumn("rn", row_number().over(wk))
         .filter(col("rn") <= KnnK)
         .select("src", "nbr", "cos")
-    })(s, dir)
+    })
 
   /** Memoized edges⋈deg relation behind s_graph_rank: one deg
     * aggregation per session, persisted, released with the "s" scope.
     * Built in s_index_build's fan-out (it forces [[knnGraph]] too), so
     * the rank query's cost is RankIters join+agg rounds, nothing else. */
   private def graphEd(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_graph_ed")((s2, d2) => {
-      val edges = knnGraph(s2, d2).select("src", "nbr")
+    graft.CacheBook.memo(s, "s", "ann:s_graph_ed", dir)(annFrame(s, "ann:s_graph_ed") {
+      val edges = knnGraph(s, dir).select("src", "nbr")
       edges.join(edges.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-    })(s, dir)
+    })
 
   /** Memoized canonical UNDIRECTED KNN edge list (u < w) — round 14
     * OPT: s_triangle_count, s_modularity, s_link_pred and
@@ -3038,20 +2912,21 @@ object Similarity {
     * relation (four resident duplicates, four canonical projections);
     * one checkpointed memo per (session, corpus) serves all four. */
   private def knnUnd(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_knn_und")((s2, d2) => graft.operators.TriangleCount
-      .canonical(knnGraph(s2, d2).select("src", "nbr")))(s, dir)
+    graft.CacheBook.memo(s, "s", "ann:s_knn_und", dir)(
+      annFrame(s, "ann:s_knn_und")(graft.operators.TriangleCount
+      .canonical(knnGraph(s, dir).select("src", "nbr"))))
 
   /** Memoized per-node degree over [[knnUnd]] — s_link_pred's jaccard
     * denominators and the Adamic–Adar wedge weights read the same
     * relation. Identical to grouping the bidirectional edge expansion:
     * each undirected edge contributes one u- and one w-appearance. */
   private def knnUndDeg(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_knn_und_deg")((s2, d2) => {
-      val und = knnUnd(s2, d2)
+    graft.CacheBook.memo(s, "s", "ann:s_knn_und_deg", dir)(annFrame(s, "ann:s_knn_und_deg") {
+      val und = knnUnd(s, dir)
       und.select(col("u").as("src"))
         .unionByName(und.select(col("w").as("src")))
         .groupBy("src").agg(count(lit(1)).as("deg"))
-    })(s, dir)
+    })
 
   /** Memoized 2-hop wedge aggregate (a, b, common, aa_ppm), a < b —
     * round 14 OPT: s_link_pred and s_adamic_adar each ran the SAME
@@ -3063,11 +2938,11 @@ object Similarity {
     * preserves wedge rows exactly; aa_ppm = the degree-weighted sum).
     * Wedge work stays degree-bounded (O(N·deg²) on the KnnK graph). */
   private def wedgeAgg(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_wedge_agg")((s2, d2) => {
-      val und = knnUnd(s2, d2)
+    graft.CacheBook.memo(s, "s", "ann:s_wedge_agg", dir)(annFrame(s, "ann:s_wedge_agg") {
+      val und = knnUnd(s, dir)
       val ed = und.select(col("u").as("src"), col("w").as("nbr"))
         .unionByName(und.select(col("w").as("src"), col("u").as("nbr")))
-      val deg = knnUndDeg(s2, d2)
+      val deg = knnUndDeg(s, dir)
       ed.as("e1").join(ed.as("e2"),
           col("e1.nbr") === col("e2.src") && col("e1.src") < col("e2.nbr"))
         .select(col("e1.src").as("a"), col("e1.nbr").as("z"),
@@ -3078,19 +2953,19 @@ object Similarity {
           (least(col("deg"), lit(64L)) - 1).cast("int")))
         .groupBy("a", "b")
         .agg(count(lit(1)).as("common"), sum("w").as("aa_ppm"))
-    })(s, dir)
+    })
 
   /** Memoized LPA community labels — the LabelProp trajectory runs
     * once per session; s_label_prop reads the communities and
     * s_modularity scores the same partition (two consumers of one
     * loop, the stars_labels discipline). */
   private def lpaLabels(s: SparkSession, dir: String): DataFrame =
-    memoAnn("s_lpa_labels")((s2, d2) => {
+    graft.CacheBook.memo(s, "s", "ann:s_lpa_labels", dir)(annFrame(s, "ann:s_lpa_labels") {
       val und = graft.operators.TriangleCount
-        .canonical(knnGraph(s2, d2).select("src", "nbr"))
+        .canonical(knnGraph(s, dir).select("src", "nbr"))
       graft.operators.LabelProp.run(und, LpaIters,
-        thunk => graft.CacheBook.register(s2, "s")(thunk))
-    })(s, dir)
+        thunk => graft.CacheBook.register(s, "s")(thunk))
+    })
 
   private val ivfpqAnnBody: (SparkSession, String) => DataFrame = ((s, dir) => {
       val (cents, assigned) = buildIvfIndex(s, dir, refine = false)

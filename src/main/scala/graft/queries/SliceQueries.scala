@@ -24,27 +24,11 @@ object SliceQueries {
   /** Five queries read the same customer-root slice; discovery runs once
     * per (session, dir) and the persisted key sets are shared (the keys
     * are already cached DataFrames, so this memo only avoids re-running
-    * the BFS actions, it holds no row data). */
-  private val custSlices =
-    collection.mutable.Map.empty[(SparkSession, String), graft.operators.SliceResult]
-  private def custSlice(s: SparkSession, dir: String): graft.operators.SliceResult = {
-    graft.CacheBook.touch(s, "slice", "cust_slice")
-    custSlices.synchronized {
-      custSlices.getOrElseUpdate((s, dir), {
-        // evicted together with the Slicer-registered key frames: after a
-        // "slice"-scope release the compacted checkpoints are gone, so a
-        // stale SliceResult handle must not survive the frames it wraps
-        graft.CacheBook.register(s, "slice", "cust_slice")(() =>
-          { custSlices.synchronized { custSlices.remove((s, dir)) }; () })
-        // building(...): the Slicer's per-run anonymous key-frame
-        // registrations attach to this memo's name, so a clean-retry
-        // releaseNamed frees the frames WITH the stale SliceResult
-        graft.CacheBook.building(s, "slice", "cust_slice") {
-          slicer(s, dir).run(custRoots)
-        }
-      })
-    }
-  }
+    * the BFS actions, it holds no row data). The Slicer's key frames are
+    * kept under "slice" on this thread, so they attach to the memo: a
+    * release frees them WITH the SliceResult that wraps them. */
+  private def custSlice(s: SparkSession, dir: String): graft.operators.SliceResult =
+    graft.CacheBook.memo(s, "slice", "cust_slice", dir)(slicer(s, dir).run(custRoots))
   // DuckDB mirrors of each hop of the custRoots discovery
   private val custSql = "SELECT c_custkey FROM customer WHERE c_custkey % 50 = 7"
   private val ordSql  = s"SELECT o_orderkey FROM orders WHERE o_custkey IN ($custSql)"
@@ -179,11 +163,9 @@ object SliceQueries {
       // one |tables|-row readout: materialize it while the narrow
       // profile is still pinned (the caller's action would otherwise
       // re-plan the 9 join subtrees at session width)
-      val out = graft.operators.Slicer.pinned(s) {
+      val out = graft.CacheBook.keep(s, "slice")(graft.operators.Slicer.pinned(s) {
         frames.reduce(_ unionByName _).localCheckpoint(true)
-      }
-      graft.CacheBook.register(s, "slice")(() =>
-        graft.CacheBook.unpersistCheckpoint(out))
+      })
       out.orderBy("table_id")
     }),
 

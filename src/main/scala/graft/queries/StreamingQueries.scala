@@ -74,9 +74,7 @@ object StreamingQueries {
       // eager localCheckpoint, not persist: the stream-static join
       // re-plans per micro-batch, and behind a persist each batch
       // re-codegen'd the old-corpus assignment subtree
-      val standing = S.assignTo(old, seed).localCheckpoint(true)
-      graft.CacheBook.register(s, "s")(() =>
-        graft.CacheBook.unpersistCheckpoint(standing))
+      val standing = graft.CacheBook.keep(s, "s")(S.assignTo(old, seed).localCheckpoint(true))
       val newVecs = s.readStream.schema(StreamingOps.embRawSchema)
         .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
         .filter(col("vec_id") >= tNew)
@@ -451,11 +449,9 @@ object StreamingQueries {
       require(maxId < 100000L,
         s"twin id convention requires base doc_id < 100000, got max $maxId")
       val tNew = maxId * 4 / 5
-      val standing = graft.operators.Multimodal.phashNearCorpus(
+      val standing = graft.CacheBook.keep(s, "st")(graft.operators.Multimodal.phashNearCorpus(
           docsT.filter(col("doc_id") < tNew).select(col("doc_id")).as[Long])
-        .toDF().localCheckpoint(true)
-      graft.CacheBook.register(s, "st")(() =>
-        graft.CacheBook.unpersistCheckpoint(standing))
+        .toDF().localCheckpoint(true))
       val hk = Seq("c0", "c1", "c2", "c3")
       def bandsOf(df: org.apache.spark.sql.DataFrame) =
         df.select(col("doc_id") +: hk.map(col) :+

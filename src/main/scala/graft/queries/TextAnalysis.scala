@@ -58,102 +58,82 @@ object TextAnalysis {
              len(list_filter(w, x -> x IN ('le','et','les')))) AS g
          FROM (SELECT *, string_split(text, ' ') AS w FROM documents))"""
 
-  /** Memoize a text-family one-time build per (session, corpus) —
-    * persisted MEMORY_AND_DISK, materialized once, released with the
-    * "x" family scope (the memoAnn pattern). x_build prices these
-    * builds explicitly so the probe queries that reuse them measure
-    * probe cost, not whichever build they touch first. */
-  private val xCache = collection.mutable
-    .Map.empty[(SparkSession, String, String), graft.Once[DataFrame]]
-  private def memoX(name: String)(
-      body: (SparkSession, String) => DataFrame): (SparkSession, String) => DataFrame =
-    (s, dir) => {
-      graft.CacheBook.touch(s, "x", s"x:$name")
-      TextAnalysis.synchronized {
-        xCache.getOrElseUpdate((s, dir, name), new graft.Once(() =>
-          graft.CacheBook.building(s, "x", s"x:$name") {
-          // EAGER localCheckpoint, not persist (round 14): a persisted
-          // memo keeps its plan, so every consumer re-plans and
-          // re-codegens the build subtree (the memoAnn Janino finding);
-          // the checkpoint truncates it to a LogicalRDD leaf.
-          val r = graft.CacheBook.recordBuildPlan(s, "x", s"x:$name")(
-            body(s, dir)).localCheckpoint(true)
-          graft.CacheBook.register(s, "x", s"x:$name") { () =>
-            TextAnalysis.synchronized { xCache.remove((s, dir, name)) }
-            graft.CacheBook.unpersistCheckpoint(r)
-            ()
-          }
-          r
-        }))
-      }.value
-    }
+  /** Storage of a text-family memo (one-time builds memoized per
+    * (session, corpus) under "x:<name>" and released with the "x"
+    * family scope; x_build prices them so the probe queries that reuse
+    * them measure probe cost): the build plan is recorded under `name`,
+    * then the frame is EAGERLY localCheckpointed, not persisted — a
+    * persisted memo keeps its plan, so every consumer re-plans and
+    * re-codegens the build subtree (the ANN-memo Janino finding). */
+  private def xFrame(s: SparkSession, name: String)(df: DataFrame): DataFrame =
+    graft.CacheBook.keep(s, "x")(
+      graft.CacheBook.recordBuildPlan(s, "x", name)(df).localCheckpoint(true))
 
   /** Corpus bigram occurrences — BOTH sides of x_lm_score's salted
     * count join consume this relation. */
-  private def lmGrams: (SparkSession, String) => DataFrame = memoX("lm_grams") {
-    (s, dir) =>
+  private def lmGrams(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "x", "x:lm_grams", dir)(xFrame(s, "x:lm_grams") {
       docs(s, dir).repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), explode(shingles(wordsCol, 2)).as("bg"))
-  }
+    })
 
   /** Per-doc LM-score accumulators (doc_id, nb, sx) — the salted
     * Zipf-skewed bigram-count join (count side replicates 8-fold like
     * x_top_terms' df join; never broadcast — the bigram table grows
     * with the corpus) runs ONCE per (session, corpus): x_lm_score and
     * x_ccnet_buckets both read this relation; x_build prices it. */
-  private def lmScores: (SparkSession, String) => DataFrame = memoX("lm_scores") {
-    (s, dir) =>
+  private def lmScores(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "x", "x:lm_scores", dir)(xFrame(s, "x:lm_scores") {
       val grams = lmGrams(s, dir)
       val cnt = grams.groupBy("bg").agg(count(lit(1)).as("c"))
       graft.operators.SkewJoin.salted(grams, cnt, key = "bg", uniqueCol = "doc_id")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("nb"), sum(expr("1000000 div c")).as("sx"))
-  }
+    })
 
   /** (doc_id, 48-bit span hash) stride-1 windows — x_dup_spans' probe
     * and df sides. */
-  private def spanRel: (SparkSession, String) => DataFrame = memoX("spans") {
-    (s, dir) =>
+  private def spanRel(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "x", "x:spans", dir)(xFrame(s, "x:spans") {
       docs(s, dir).repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"), explode(shingleHashes(wordsCol, SpanW)).as("span"))
-  }
+    })
 
   /** (doc_id, pos, line) segments — x_line_dedup's probe and df sides. */
-  private def lineRel: (SparkSession, String) => DataFrame = memoX("lines") {
-    (s, dir) => linesOf(docs(s, dir))
-  }
+  private def lineRel(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "x", "x:lines", dir)(xFrame(s, "x:lines") {
+      linesOf(docs(s, dir))
+    })
 
   /** Encoded distinct-word vocab (word -> token count under the learned
     * merges) — x_bpe_encode's salted join side; forces bpeMerges. */
-  private def bpeWtok: (SparkSession, String) => DataFrame = memoX("bpe_wtok") {
-    (s, dir) =>
+  private def bpeWtok(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "x", "x:bpe_wtok", dir)(xFrame(s, "x:bpe_wtok") {
       bpeWordTokens(
         docs(s, dir).select(explode(wordsCol).as("w"))
           .filter(length(col("w")) > 0).distinct(),
         bpeMerges(s, dir))
-  }
+    })
 
   /** Per-doc DSIR importance scores (doc_id, n_feats, dsir_micro) —
     * the x_dsir gate reads it and x_dsir_sample draws from it, so the
     * hashed-feature explode + weight build runs once per (session,
     * corpus); priced by x_build's fan-out like the other memos. */
-  private def dsirScores: (SparkSession, String) => DataFrame = memoX("dsir") {
-    (s, dir) =>
+  private def dsirScores(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "x", "x:dsir", dir)(xFrame(s, "x:dsir") {
       // EAGER localCheckpoint, not persist (the item-1/11 plan-tax, one
       // more instance found by stage attribution this session: behind a
       // persist both in-build consumers — the fused bucket counts and
       // the probe join — re-planned and re-CODEGEN'd the 2×ShingleHashes
       // explode subtree; two 32-task stages burned 8.6+9.7 cpu-s on 64
       // output records doing Janino work, ~20% of x_build's cpu)
-      val feats = docs(s, dir)
+      val feats = graft.CacheBook.keep(s, "x")(docs(s, dir)
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"),
           explode(concat(shingleHashes(wordsCol, 1), shingleHashes(wordsCol, 2)))
             .as("h"))
         .select(col("doc_id"), pmod(col("h"), lit(DsirBuckets.toLong)).as("b"))
-        .localCheckpoint(true)
-      graft.CacheBook.register(s, "x", "x:dsir")(() =>
-        graft.CacheBook.unpersistCheckpoint(feats))
+        .localCheckpoint(true))
       // ONE pass over the feature relation serves BOTH sides' bucket
       // counts (was: two full groupBy passes, one per side — measured
       // ~2x the cpu of the fused aggregate at sf0.1). Buckets seen only
@@ -190,7 +170,7 @@ object TextAnalysis {
         .select(col("doc_id"), col("nf").cast("int").as("n_feats"),
           expr("""(CAST(swq AS DECIMAL(38,0)) * 1000000000
             + CAST(swr AS DECIMAL(38,0))) div nf""").as("dsir_micro"))
-  }
+    })
 
   /** Strided word windows as ONE codegen loop per row — spec-identical
     * to `transform(sequence(...), i => concat_ws(" ", slice(words,
@@ -260,28 +240,20 @@ object TextAnalysis {
     // identically on both sides).
     "x_build" -> ((s, dir) => {
       import s.implicits._
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      import scala.concurrent.duration.Duration
-      val bgF = Future(lmGrams(s, dir).select("bg").distinct().count())
-      val spF = Future(spanRel(s, dir).select("span").distinct().count())
-      val lnF = Future(lineRel(s, dir).select("line").distinct().count())
-      val bpF = Future(bpeWtok(s, dir).count())
-      val dsF = Future(dsirScores(s, dir).count())
-      val lsF = Future(lmScores(s, dir).count())
-      // the qclf scorer memo joined the family in round 14 (x_qclf and
-      // x_qclf_auc share it) — force it on the fan-out too so x_qclf
-      // prices a probe, not the hashed-ngram build; memoX materializes
-      // eagerly, so no count (and no output row) is needed
-      val qcF = Future { qclfScored(s, dir); () }
-      val (nBg, nSp, nLn, nBp, nDs, nLs) = (
-        Await.result(bgF, Duration.Inf), Await.result(spF, Duration.Inf),
-        Await.result(lnF, Duration.Inf), Await.result(bpF, Duration.Inf),
-        Await.result(dsF, Duration.Inf), Await.result(lsF, Duration.Inf))
-      Await.result(qcF, Duration.Inf)
-      Seq(("bigram_kinds", nBg), ("bpe_vocab", nBp),
-        ("dsir_docs", nDs), ("line_kinds", nLn), ("lm_docs", nLs),
-        ("span_kinds", nSp))
+      // on graft.Par: bounded, and its threads inherit the session and
+      // local properties
+      graft.Par.each(Seq[() => Seq[(String, Long)]](
+        () => Seq("bigram_kinds" -> lmGrams(s, dir).select("bg").distinct().count()),
+        () => Seq("span_kinds" -> spanRel(s, dir).select("span").distinct().count()),
+        () => Seq("line_kinds" -> lineRel(s, dir).select("line").distinct().count()),
+        () => Seq("bpe_vocab" -> bpeWtok(s, dir).count()),
+        () => Seq("dsir_docs" -> dsirScores(s, dir).count()),
+        () => Seq("lm_docs" -> lmScores(s, dir).count()),
+        // the qclf scorer memo joined the family in round 14 (x_qclf and
+        // x_qclf_auc share it) — force it on the fan-out too so x_qclf
+        // prices a probe, not the hashed-ngram build; the memo
+        // materializes eagerly, so no count (and no output row) is needed
+        () => { qclfScored(s, dir); Nil }))(_()).flatten
         .toDF("item", "n").orderBy("item")
     }),
 
@@ -1223,8 +1195,8 @@ object TextAnalysis {
     * (~8 cpu-s apiece, the two entries' whole cost); the scorer now
     * materializes once per (session, corpus) and the eval reads the
     * |docs|-row checkpoint. */
-  private def qclfScored: (SparkSession, String) => DataFrame =
-    memoX("qclf_scored") { (s, dir) =>
+  private def qclfScored(s: SparkSession, dir: String): DataFrame =
+    graft.CacheBook.memo(s, "x", "x:qclf_scored", dir)(xFrame(s, "x:qclf_scored") {
       docs(s, dir)
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("doc_id"),
@@ -1237,7 +1209,7 @@ object TextAnalysis {
         .agg(count(lit(1)).as("nf"), sum("wm").as("sw"))
         .select(col("doc_id"), col("nf").cast("int").as("n_feats"),
           expr("sw div nf").as("qclf_micro"))
-    }
+    })
 
   private[graft] val qclfWeights: Array[Long] = {
     val boosted = stopwords
@@ -1346,20 +1318,10 @@ object TextAnalysis {
     * the k iterated argmax jobs once. The cell holds a driver-side Seq
     * (metadata, like the argmax rows it came from), so release is just
     * the map entry. */
-  private val bpeMemo = collection.mutable
-    .Map.empty[(SparkSession, String), graft.Once[Seq[(String, String, Long)]]]
-  private def bpeMerges(s: SparkSession, dir: String): Seq[(String, String, Long)] = {
-    graft.CacheBook.touch(s, "x", "bpe_merges")
-    TextAnalysis.synchronized {
-      bpeMemo.getOrElseUpdate((s, dir), {
-        graft.CacheBook.register(s, "x", "bpe_merges") { () =>
-          TextAnalysis.synchronized { bpeMemo.remove((s, dir)) }
-          ()
-        }
-        new graft.Once(() => graft.operators.BpeVocab.learn(docs(s, dir), "text", 10))
-      })
-    }.value
-  }
+  private def bpeMerges(s: SparkSession, dir: String): Seq[(String, String, Long)] =
+    graft.CacheBook.memo(s, "x", "bpe_merges", dir) {
+      graft.operators.BpeVocab.learn(docs(s, dir), "text", 10)
+    }
 
   /** Separator character wrapping each BPE symbol in the string-encoded
     * form — absent from the corpus, so replace() on the wrapped pair

@@ -65,14 +65,12 @@ object CuratePipeline {
     // line-dedup readers then re-read blocks instead of re-running
     // quality -> md5 -> window from the scan per reference.
     val wH = org.apache.spark.sql.expressions.Window.partitionBy("h")
-    val exact = langKept.withColumn("h",
+    val exact = graft.CacheBook.keep(spark, "curate")(langKept.withColumn("h",
         md5(trim(lower(regexp_replace(col("text"), "\\s+", " "))).cast("binary")))
       .withColumn("keep_id", min("doc_id").over(wH))
       .filter(col("doc_id") === col("keep_id"))
       .drop("h", "keep_id")
-      .localCheckpoint(false)
-    graft.CacheBook.register(spark, "curate")(
-      () => graft.CacheBook.unpersistCheckpoint(exact))
+      .localCheckpoint(false))
     stages += "after_exact_dedup" -> exact.count()
 
     // 3b. line-level boilerplate strip (C4-style, the x_line_dedup
@@ -82,7 +80,7 @@ object CuratePipeline {
     // out entirely. Runs after exact dedup so a doc's own exact
     // copies don't inflate its lines' document frequency.
     val cleaned = graft.queries.TextAnalysis.lineDedup(exact)
-    val lineDeduped = exact.drop("text")
+    val lineDeduped = graft.CacheBook.keep(spark, "curate")(exact.drop("text")
       .join(cleaned.filter(col("n_kept") > 0)
         .select(col("doc_id"), col("cleaned").as("text")), "doc_id")
       // n_chars must describe the text the row now carries, not the
@@ -96,9 +94,7 @@ object CuratePipeline {
       // pipeline writes its post-cleaning staging parquet; in-session
       // the local checkpoint is that staging artifact. LAZY: the stage
       // count is the materializing action (one job, not two).
-      .localCheckpoint(false)
-    graft.CacheBook.register(spark, "curate")(
-      () => graft.CacheBook.unpersistCheckpoint(lineDeduped))
+      .localCheckpoint(false))
     stages += "after_line_dedup" -> lineDeduped.count()
 
     // 4. near-dedup: the ONE LSH implementation (Dedup.lshPairs —
@@ -129,10 +125,8 @@ object CuratePipeline {
     // decontamination probe side, its anti-join, and the image-dedup
     // semi-join) — materialized once here, they re-read blocks instead
     // of replaying the near-dedup anti-join chain per action.
-    val near0 = lineDeduped.join(dupIds, Seq("doc_id"), "left_anti")
-      .localCheckpoint(false)
-    graft.CacheBook.register(spark, "curate")(
-      () => graft.CacheBook.unpersistCheckpoint(near0))
+    val near0 = graft.CacheBook.keep(spark, "curate")(
+      lineDeduped.join(dupIds, Seq("doc_id"), "left_anti").localCheckpoint(false))
     stages += "after_near_dedup" -> near0.count()
 
     // 4b'. eval-set DECONTAMINATION (when a benchmark corpus is
@@ -153,11 +147,9 @@ object CuratePipeline {
         // whole pipeline-so-far twice (both band sides) — checkpoint
         // it so the downstream count/strip/export actions re-read a
         // materialized set instead of re-running near-dedup per action
-        val leaked = graft.queries.Dedup
+        val leaked = graft.CacheBook.keep(spark, "curate")(graft.queries.Dedup
           .contaminatedIds(poolSh, benchSh, minJac = 0.5)
-          .localCheckpoint(true)
-        graft.CacheBook.register(spark, "curate")(
-          () => graft.CacheBook.unpersistCheckpoint(leaked))
+          .localCheckpoint(true))
         val kept = near0.join(leaked, Seq("doc_id"), "left_anti")
         stages += "after_decontaminate" -> kept.count()
         kept
@@ -180,18 +172,16 @@ object CuratePipeline {
       // it so every downstream action (stage counts, span strip's two
       // references, export) re-reads ids instead of re-decoding the
       // corpus (the `leaked` discipline above)
-      val keepImg = ph.groupBy("phash").agg(min("doc_id").as("doc_id"))
-        .select("doc_id").localCheckpoint(true)
-      graft.CacheBook.register(spark, "curate")(
-        () => graft.CacheBook.unpersistCheckpoint(keepImg))
+      val keepImg = graft.CacheBook.keep(spark, "curate")(
+        ph.groupBy("phash").agg(min("doc_id").as("doc_id"))
+          .select("doc_id").localCheckpoint(true))
       // checkpoint the surviving corpus: span strip walks it several
       // times (spans + words + the reassembly join) and each walk would
       // otherwise replay the dedup/decontam anti-join chain. LAZY: the
       // stage count below materializes it.
-      near.join(keepImg, Seq("doc_id"), "left_semi").localCheckpoint(false)
+      graft.CacheBook.keep(spark, "curate")(
+        near.join(keepImg, Seq("doc_id"), "left_semi").localCheckpoint(false))
     }
-    graft.CacheBook.register(spark, "curate")(
-      () => graft.CacheBook.unpersistCheckpoint(imgDeduped))
     stages += "after_image_dedup" -> imgDeduped.count()
 
     // 4b. exact-substring strip (the x_span_strip contract) AFTER
@@ -217,18 +207,17 @@ object CuratePipeline {
     // monotonic-growth mode CacheBook exists to prevent. The
     // checkpoint cuts the curated frame's lineage first, so the
     // release can't force a rebuild downstream.
-    val curated = stripped.withColumn("n_tokens", size(split(col("text"), " ")))
-      .localCheckpoint(false) // lazy: the stage count materializes it
-    stages += "after_span_strip" -> curated.count()
-    if (releaseDedupCaches) graft.CacheBook.release(spark, "d")
-    // the curated frame's own checkpoint blocks are the caller's to
-    // release: register them under the "curate" scope so a long-lived
-    // session running curate() nightly frees each run's blocks with
+    // The curated frame's own checkpoint blocks are the caller's to
+    // release: kept under the "curate" scope so a long-lived session
+    // running curate() nightly frees each run's blocks with
     // CacheBook.release(spark, "curate") once the export lands —
     // otherwise one checkpoint RDD accumulates per run (the same
-    // monotonic-growth mode the release above exists to prevent)
-    graft.CacheBook.register(spark, "curate")(
-      () => graft.CacheBook.unpersistCheckpoint(curated))
+    // monotonic-growth mode the "d" release below exists to prevent)
+    val curated = graft.CacheBook.keep(spark, "curate")(
+      stripped.withColumn("n_tokens", size(split(col("text"), " ")))
+        .localCheckpoint(false)) // lazy: the stage count materializes it
+    stages += "after_span_strip" -> curated.count()
+    if (releaseDedupCaches) graft.CacheBook.release(spark, "d")
     (curated, stages.toMap)
   }
 

@@ -90,4 +90,20 @@ class EagerPersistSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"non-eager localCheckpoint calls: ${offenders.mkString(", ")}")
   }
+
+  test("CacheBook is the only memo mechanism in src/main") {
+    // a hand-rolled memo map, build-once cell, build context or an
+    // unbounded global pool outside CacheBook is a second mechanism
+    val banned = Seq("graft.Once", "new Once", "Map.empty[(SparkSession",
+      "CacheBook.building", "Implicits.global")
+    val offenders = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "CacheBook.scala")
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if banned.exists(l.contains) => s"${p.getFileName}:${i + 1}"
+        }
+      }.toList
+    assert(offenders.isEmpty, s"memo mechanisms outside CacheBook: ${offenders.mkString(", ")}")
+  }
 }
