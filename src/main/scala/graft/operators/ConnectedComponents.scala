@@ -23,117 +23,88 @@ import org.apache.spark.storage.StorageLevel
   * superseded generation is reclaimed; a pathological chain-shaped
   * graph is the known worst case (diameter rounds), where the
   * large-star/small-star variant below bounds rounds by O(log n).
+  * Both loops run under the narrow profile ([[graft.Profiles.narrow]]),
+  * entered only after the caller's edge pipeline is materialized; a
+  * returned labeling is a checkpoint that owns no other cached frame
+  * (free it with `CacheBook.unpersistCheckpoint`).
   */
 object ConnectedComponents {
-
-  /** Serializes the session-wide shuffle-width override across
-    * concurrent component runs (Verify executes queries on a thread
-    * pool): without it two overlapping runs can capture each other's
-    * temporary value as `prev` and leave the session pinned at the CC
-    * width for every later query. Re-entrant, so callers that scope the
-    * width around a run() (Dedup.clusterLabels) can hold it too. */
-  private[graft] val confLock = new Object
-
-  /** Scope the session to the label-loop execution profile: pinned
-    * narrow shuffle width AND adaptive execution OFF. Inside the loop
-    * every relation is label-table-sized and every plan reads eager
-    * checkpoints — AQE cannot improve a join or coalesce anything
-    * useful at width 8, but it turns each round's single action into
-    * 3-4 sequential query-stage JOBS, and the loops are round-latency
-    * bound (round 14: the d-family label loops dropped ~2x wall at
-    * identical results when the per-round job count fell back to 1).
-    * Callers must hold [[confLock]]. */
-  private[graft] def pinnedLoopConf[T](spark: org.apache.spark.sql.SparkSession)(
-      body: => T): T = {
-    val widthKey = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    val prevW = spark.conf.get(widthKey)
-    val prevA = spark.conf.get(aqeKey)
-    spark.conf.set(widthKey, sys.env.getOrElse("SPARK_GRAFT_CC_PARTITIONS", "8"))
-    spark.conf.set(aqeKey, "false")
-    try body
-    finally { spark.conf.set(widthKey, prevW); spark.conf.set(aqeKey, prevA) }
-  }
 
   /** @param edges two-column DataFrame of undirected edges (a, b).
     * @return (id, cluster) for every node that appears in an edge;
     *   cluster = min node id of the component. */
   def run(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    // EAGERLY materialize the directed input first — OUTSIDE the lock:
-    // callers hand in expensive pipelines (e.g. blocked pairwise
-    // similarity joins), and serializing THAT behind the conf lock
-    // would undo the concurrent-build win elsewhere. (Eager because the
-    // forward ∪ reversed union below references it twice; a lazy
-    // persist lets the union's branches race and compute the upstream
-    // pipeline twice.)
+    // EAGERLY materialize the directed input first — OUTSIDE the narrow
+    // scope: callers hand in expensive pipelines (e.g. blocked pairwise
+    // similarity joins), which must plan at the session width, not the
+    // loop's. (Eager because the forward ∪ reversed union below
+    // references it twice; a lazy persist lets the union's branches race
+    // and compute the upstream pipeline twice.)
     val e = edges.toDF("src", "dst").localCheckpoint(true)
-    confLock.synchronized {
-      // scope shuffle width to the label table, not the session default
-      // (each round is a handful of joins over one row per NODE), and
-      // drop AQE for the loop's duration — see [[pinnedLoopConf]]. On a
-      // cluster this is the same knob sized to node count.
-      pinnedLoopConf(e.sparkSession) { runLoop(e, maxIter) }
-    }
-  }
+    // the loop runs under the narrow profile: each round is a handful
+    // of joins over one row per NODE (see graft.Profiles)
+    graft.Profiles.narrow(e.sparkSession) {
+      // closed neighborhood: a self-loop per node folds the node's OWN
+      // label into the per-round neighborhood min, so one join + one
+      // groupBy replaces the join + groupBy + second join of the naive
+      // formulation — per-round cost is dominated by fixed job/shuffle
+      // overhead at every scale where the label table fits the cluster,
+      // so fewer stages per round is the lever that matters.
+      val bi = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
+      val nodes = bi.select(col("src").as("id")).distinct()
+      val nbhd = bi.union(nodes.select(col("id").as("src"), col("id").as("dst")))
+        .distinct()
+        .persist(StorageLevel.MEMORY_AND_DISK)
 
-  private def runLoop(e: DataFrame, maxIter: Int): DataFrame = {
-    // closed neighborhood: a self-loop per node folds the node's OWN
-    // label into the per-round neighborhood min, so one join + one
-    // groupBy replaces the join + groupBy + second join of the naive
-    // formulation — per-round cost is dominated by fixed job/shuffle
-    // overhead at every scale where the label table fits the cluster,
-    // so fewer stages per round is the lever that matters.
-    val bi = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-    val nodes = bi.select(col("src").as("id")).distinct()
-    val nbhd = bi.union(nodes.select(col("id").as("src"), col("id").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // lazy: the initial-sum action below materializes the checkpoint
-    var labels = nodes.withColumn("lbl", col("id")).localCheckpoint(false)
-    // convergence via the EXACT sum of labels: labels only ever
-    // decrease, so the sum strictly decreases until fixpoint — equal
-    // sums mean no label moved. DECIMAL(38,0) keeps the sum exact for
-    // billions of 64-bit ids (no float drift, no overflow), and folding
-    // the check into the materializing action makes each round ONE job:
-    // the lazy localCheckpoint's blocks are populated by the same
-    // action that computes the sum.
-    def lblSum(df: DataFrame): java.math.BigDecimal =
-      df.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")))
-        .collect()(0).getDecimal(0)
-    var prevSum = lblSum(labels)
-    var changed = true
-    var iter = 0
-    while (changed && iter < maxIter) {
-      val next = nbhd.join(labels.withColumnRenamed("id", "src"), "src")
-        .groupBy(col("dst").as("id")).agg(min("lbl").as("lbl"))
-        // lazy checkpoint: materialized by the sum action below, and it
-        // truncates the lineage so the plan doesn't grow round-over-round
-        // (analysis time was the dominant cost before data size even
-        // mattered).
-        .localCheckpoint(false)
-      val s = lblSum(next)
-      // the superseded generation is DEAD the moment next's sum is
-      // taken — drop its blocks NOW instead of waiting for the
-      // ContextCleaner (round 14: under a long run's aggregate block-
-      // store pressure, every live superseded round competes for the
-      // store and the loop's own blocks churn through eviction moves)
-      graft.CacheBook.unpersistCheckpoint(labels)
-      changed = s.compareTo(prevSum) != 0
-      prevSum = s
-      labels = next
-      iter += 1
+      // lazy: the initial-sum action below materializes the checkpoint
+      var labels = nodes.withColumn("lbl", col("id")).localCheckpoint(false)
+      // convergence via the EXACT sum of labels: labels only ever
+      // decrease, so the sum strictly decreases until fixpoint — equal
+      // sums mean no label moved. DECIMAL(38,0) keeps the sum exact for
+      // billions of 64-bit ids (no float drift, no overflow), and folding
+      // the check into the materializing action makes each round ONE job:
+      // the lazy localCheckpoint's blocks are populated by the same
+      // action that computes the sum.
+      def lblSum(df: DataFrame): java.math.BigDecimal =
+        df.agg(coalesce(sum(col("lbl").cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")))
+          .collect()(0).getDecimal(0)
+      var prevSum = lblSum(labels)
+      var changed = true
+      var iter = 0
+      while (changed && iter < maxIter) {
+        val next = nbhd.join(labels.withColumnRenamed("id", "src"), "src")
+          .groupBy(col("dst").as("id")).agg(min("lbl").as("lbl"))
+          // lazy checkpoint: materialized by the sum action below, and it
+          // truncates the lineage so the plan doesn't grow round-over-round
+          // (analysis time was the dominant cost before data size even
+          // mattered).
+          .localCheckpoint(false)
+        val s = lblSum(next)
+        // the superseded generation is DEAD the moment next's sum is
+        // taken — drop its blocks NOW instead of waiting for the
+        // ContextCleaner (round 14: under a long run's aggregate block-
+        // store pressure, every live superseded round competes for the
+        // store and the loop's own blocks churn through eviction moves)
+        graft.CacheBook.unpersistCheckpoint(labels)
+        changed = s.compareTo(prevSum) != 0
+        prevSum = s
+        labels = next
+        iter += 1
+      }
+      val out = labels.select(col("id"), col("lbl").as("cluster"))
+      // the final labels are a materialized checkpoint: neither the
+      // neighborhood nor the input checkpoint backs them any more
+      nbhd.unpersist()
+      graft.CacheBook.unpersistCheckpoint(e)
+      // changed == true here means the loop exited on maxIter with labels
+      // still moving — the one-row-per-node contract holds but components
+      // may be split. Callers on adversarial graphs should raise maxIter
+      // or use runStars (O(log n) rounds).
+      if (changed)
+        System.err.println(s"[graft] ConnectedComponents.run: maxIter=$maxIter " +
+          "exhausted before fixpoint; labels are PARTIAL (components may be split)")
+      out
     }
-    val out = labels.select(col("id"), col("lbl").as("cluster"))
-    nbhd.unpersist()
-    // changed == true here means the loop exited on maxIter with labels
-    // still moving — the one-row-per-node contract holds but components
-    // may be split. Callers on adversarial graphs should raise maxIter
-    // or use runStars (O(log n) rounds).
-    if (changed)
-      System.err.println(s"[graft] ConnectedComponents.run: maxIter=$maxIter " +
-        "exhausted before fixpoint; labels are PARTIAL (components may be split)")
-    out
   }
 
   /** Incremental components — extend a STANDING labeling with a batch
@@ -197,72 +168,73 @@ object ConnectedComponents {
     * joins per round); this is the scale path for chain-shaped or
     * adversarial graphs — pick per workload. */
   def runStars(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    // caller's (possibly expensive) edge pipeline materializes OUTSIDE
-    // the conf lock, like run()
+    // caller's (possibly expensive) edge pipeline materializes BEFORE
+    // the narrow scope opens, like run()
     val raw = edges.toDF("a", "b").localCheckpoint(true)
-    confLock.synchronized {
-      pinnedLoopConf(raw.sparkSession) { runStarsLoop(raw, maxIter) }
-    }
-  }
-
-  private def runStarsLoop(raw: DataFrame, maxIter: Int): DataFrame = {
-    // node set is captured BEFORE dropping self-loops so a node whose
-    // only edge is (x, x) still gets a label, matching run()
-    val nodes = raw.select(col("a").as("id"))
-      .union(raw.select(col("b").as("id"))).distinct()
-    var e = raw.filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("hi"), least(col("a"), col("b")).as("lo"))
-      .distinct().localCheckpoint(true)
-    var iter = 0
-    var converged = e.isEmpty
-    while (!converged && iter < maxIter) {
-      // LARGE-STAR over the bidirected adjacency: m = min(closed
-      // neighborhood of u); every neighbor v > u re-hangs onto m.
-      // Output stays (hi, lo)-oriented because v > u >= m.
-      val bi = e.select(col("hi").as("u"), col("lo").as("v"))
-        .union(e.select(col("lo").as("u"), col("hi").as("v")))
-      val mins = bi.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("u"), col("mn")).as("m"))
-      val ls = bi.join(mins, "u").filter(col("v") > col("u"))
-        .select(col("v").as("hi"), col("m").as("lo")).distinct()
-      // SMALL-STAR on the oriented edges: u and all its smaller
-      // neighbors re-hang onto their minimum.
-      val smins = ls.groupBy("hi").agg(min(col("lo")).as("m"))
-      val next = ls.join(smins, "hi")
-        .select(col("lo").as("v"), col("m"))
-        .union(smins.select(col("hi").as("v"), col("m")))
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("hi"), col("m").as("lo")).distinct()
-        // lazy checkpoint: the symmetric-difference count below is the
-        // materializing action, so each round runs ONE job instead of
-        // checkpoint + two anti-join probes
-        .localCheckpoint(false)
-      // fixpoint = identical edge set, checked as a full-outer
-      // symmetric-difference count (both sides are star-sized frames)
-      converged = next.withColumn("r", lit(1))
-        .join(e.withColumn("l", lit(1)), Seq("hi", "lo"), "full_outer")
-        .filter(col("r").isNull || col("l").isNull).count() == 0L
-      // the fixpoint count was the last reader of the superseded
-      // generation — drop its blocks eagerly (see runLoop)
+    graft.Profiles.narrow(raw.sparkSession) {
+      // node set is captured BEFORE dropping self-loops so a node whose
+      // only edge is (x, x) still gets a label, matching run()
+      val nodes = raw.select(col("a").as("id"))
+        .union(raw.select(col("b").as("id"))).distinct()
+      var e = raw.filter(col("a") =!= col("b"))
+        .select(greatest(col("a"), col("b")).as("hi"), least(col("a"), col("b")).as("lo"))
+        .distinct().localCheckpoint(true)
+      var iter = 0
+      var converged = e.isEmpty
+      while (!converged && iter < maxIter) {
+        // LARGE-STAR over the bidirected adjacency: m = min(closed
+        // neighborhood of u); every neighbor v > u re-hangs onto m.
+        // Output stays (hi, lo)-oriented because v > u >= m.
+        val bi = e.select(col("hi").as("u"), col("lo").as("v"))
+          .union(e.select(col("lo").as("u"), col("hi").as("v")))
+        val mins = bi.groupBy("u").agg(min(col("v")).as("mn"))
+          .select(col("u"), least(col("u"), col("mn")).as("m"))
+        val ls = bi.join(mins, "u").filter(col("v") > col("u"))
+          .select(col("v").as("hi"), col("m").as("lo")).distinct()
+        // SMALL-STAR on the oriented edges: u and all its smaller
+        // neighbors re-hang onto their minimum.
+        val smins = ls.groupBy("hi").agg(min(col("lo")).as("m"))
+        val next = ls.join(smins, "hi")
+          .select(col("lo").as("v"), col("m"))
+          .union(smins.select(col("hi").as("v"), col("m")))
+          .filter(col("v") =!= col("m"))
+          .select(col("v").as("hi"), col("m").as("lo")).distinct()
+          // lazy checkpoint: the symmetric-difference count below is the
+          // materializing action, so each round runs ONE job instead of
+          // checkpoint + two anti-join probes
+          .localCheckpoint(false)
+        // fixpoint = identical edge set, checked as a full-outer
+        // symmetric-difference count (both sides are star-sized frames)
+        converged = next.withColumn("r", lit(1))
+          .join(e.withColumn("l", lit(1)), Seq("hi", "lo"), "full_outer")
+          .filter(col("r").isNull || col("l").isNull).count() == 0L
+        // the fixpoint count was the last reader of the superseded
+        // generation — drop its blocks eagerly (see run)
+        graft.CacheBook.unpersistCheckpoint(e)
+        e = next
+        iter += 1
+      }
+      if (!converged)
+        System.err.println(s"[graft] ConnectedComponents.runStars: maxIter=$maxIter " +
+          "exhausted before fixpoint; labels are PARTIAL (components may be split)")
+      // star edges ARE the labels; centers label themselves; nodes with no
+      // surviving edge (self-loop-only) label themselves. min() guards the
+      // one-row-per-node contract even if maxIter cut convergence short.
+      // Materialized EAGERLY so the shuffles run under the scoped
+      // partition width (the caller triggers lazy plans only after the
+      // conf is restored).
+      val starLabels = e.select(col("hi").as("id"), col("lo").as("cluster"))
+        .union(e.select(col("lo").as("id"), col("lo").as("cluster")))
+        .groupBy("id").agg(min("cluster").as("cluster"))
+      val out = starLabels
+        .union(nodes.join(starLabels, Seq("id"), "left_anti")
+          .select(col("id"), col("id").as("cluster")))
+        .localCheckpoint(true)
+      // the labels are materialized: free the input and the last star
+      // generation
+      graft.CacheBook.unpersistCheckpoint(raw)
       graft.CacheBook.unpersistCheckpoint(e)
-      e = next
-      iter += 1
+      out
     }
-    if (!converged)
-      System.err.println(s"[graft] ConnectedComponents.runStars: maxIter=$maxIter " +
-        "exhausted before fixpoint; labels are PARTIAL (components may be split)")
-    // star edges ARE the labels; centers label themselves; nodes with no
-    // surviving edge (self-loop-only) label themselves. min() guards the
-    // one-row-per-node contract even if maxIter cut convergence short.
-    // Materialized EAGERLY so the shuffles run under the scoped
-    // partition width (the caller triggers lazy plans only after the
-    // conf is restored).
-    val starLabels = e.select(col("hi").as("id"), col("lo").as("cluster"))
-      .union(e.select(col("lo").as("id"), col("lo").as("cluster")))
-      .groupBy("id").agg(min("cluster").as("cluster"))
-    starLabels
-      .union(nodes.join(starLabels, Seq("id"), "left_anti")
-        .select(col("id"), col("id").as("cluster")))
-      .localCheckpoint(true)
   }
 }

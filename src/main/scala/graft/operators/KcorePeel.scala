@@ -36,42 +36,35 @@ object KcorePeel {
     * @return (vec_id, peel_layer) for every node in an edge. */
   def run(und: DataFrame, k: Int, maxRounds: Int,
       register: (() => Unit) => Unit): DataFrame =
-    ConnectedComponents.confLock.synchronized {
-      ConnectedComponents.pinnedLoopConf(und.sparkSession) {
-        runLoop(und, k, maxRounds, register)
+    graft.Profiles.narrow(und.sparkSession) {
+      val edges = TriangleCount.bidirectional(und, register)
+      var alive = edges.select(col("src").as("vec_id")).distinct()
+      var layerFrames = List.empty[DataFrame]
+      var t = 1
+      var done = false
+      while (t <= maxRounds && !done) {
+        val deg = edges
+          .join(alive.withColumnRenamed("vec_id", "src"), Seq("src"), "left_semi")
+          .join(alive.withColumnRenamed("vec_id", "nbr"), Seq("nbr"), "left_semi")
+          .groupBy("src").agg(count(lit(1)).as("deg"))
+        // LAZY checkpoint: the dead-count below scans every partition of
+        // the status frame, so one action both materializes the round's
+        // checkpoint and answers the fixpoint probe — one job per round,
+        // not two (the ConnectedComponents lblSum fold).
+        val status = alive.join(deg, col("vec_id") === col("src"), "left")
+          .select(col("vec_id"), coalesce(col("deg"), lit(0L)).as("deg"))
+          .localCheckpoint(false)
+        register(() => graft.CacheBook.unpersistCheckpoint(status))
+        val dead = status.filter(col("deg") < k)
+        if (dead.count() == 0L) { done = true }
+        else {
+          layerFrames ::= dead
+            .select(col("vec_id"), lit(t).cast("int").as("peel_layer"))
+          alive = status.filter(col("deg") >= k).select("vec_id")
+          t += 1
+        }
       }
+      val core = alive.select(col("vec_id"), lit(0).cast("int").as("peel_layer"))
+      (core :: layerFrames).reduce(_ unionByName _)
     }
-
-  private def runLoop(und: DataFrame, k: Int, maxRounds: Int,
-      register: (() => Unit) => Unit): DataFrame = {
-    val edges = TriangleCount.bidirectional(und, register)
-    var alive = edges.select(col("src").as("vec_id")).distinct()
-    var layerFrames = List.empty[DataFrame]
-    var t = 1
-    var done = false
-    while (t <= maxRounds && !done) {
-      val deg = edges
-        .join(alive.withColumnRenamed("vec_id", "src"), Seq("src"), "left_semi")
-        .join(alive.withColumnRenamed("vec_id", "nbr"), Seq("nbr"), "left_semi")
-        .groupBy("src").agg(count(lit(1)).as("deg"))
-      // LAZY checkpoint: the dead-count below scans every partition of
-      // the status frame, so one action both materializes the round's
-      // checkpoint and answers the fixpoint probe — one job per round,
-      // not two (the ConnectedComponents lblSum fold).
-      val status = alive.join(deg, col("vec_id") === col("src"), "left")
-        .select(col("vec_id"), coalesce(col("deg"), lit(0L)).as("deg"))
-        .localCheckpoint(false)
-      register(() => graft.CacheBook.unpersistCheckpoint(status))
-      val dead = status.filter(col("deg") < k)
-      if (dead.count() == 0L) { done = true }
-      else {
-        layerFrames ::= dead
-          .select(col("vec_id"), lit(t).cast("int").as("peel_layer"))
-        alive = status.filter(col("deg") >= k).select("vec_id")
-        t += 1
-      }
-    }
-    val core = alive.select(col("vec_id"), lit(0).cast("int").as("peel_layer"))
-    (core :: layerFrames).reduce(_ unionByName _)
-  }
 }

@@ -26,29 +26,23 @@ object LabelProp {
     *   per-round checkpoints).
     * @return (vec_id, lbl) for every node that appears in an edge. */
   def run(und: DataFrame, iters: Int, register: (() => Unit) => Unit): DataFrame =
-    ConnectedComponents.confLock.synchronized {
-      ConnectedComponents.pinnedLoopConf(und.sparkSession) {
-        runLoop(und, iters, register)
+    graft.Profiles.narrow(und.sparkSession) {
+      // coalesceTo = 0: keep the input layout (plan parity with the
+      // committed s_label_prop budget; the loop body is the cost here).
+      val edges = TriangleCount.bidirectional(und, register, coalesceTo = 0)
+      var lab = edges.select(col("src").as("vec_id")).distinct()
+        .select(col("vec_id"), col("vec_id").as("lbl"))
+      val wL = Window.partitionBy("src").orderBy(col("c").desc, col("lbl").asc)
+      for (_ <- 1 to iters) {
+        lab = edges.join(lab.withColumnRenamed("vec_id", "nbr"), "nbr")
+          .groupBy("src", "lbl").agg(count(lit(1)).as("c"))
+          .withColumn("rn", row_number().over(wL))
+          .filter(col("rn") === 1)
+          .select(col("src").as("vec_id"), col("lbl"))
+        val cp = lab.localCheckpoint(true)
+        register(() => graft.CacheBook.unpersistCheckpoint(cp))
+        lab = cp
       }
+      lab
     }
-
-  private def runLoop(und: DataFrame, iters: Int, register: (() => Unit) => Unit): DataFrame = {
-    // coalesceTo = 0: keep the input layout (plan parity with the
-    // committed s_label_prop budget; the loop body is the cost here).
-    val edges = TriangleCount.bidirectional(und, register, coalesceTo = 0)
-    var lab = edges.select(col("src").as("vec_id")).distinct()
-      .select(col("vec_id"), col("vec_id").as("lbl"))
-    val wL = Window.partitionBy("src").orderBy(col("c").desc, col("lbl").asc)
-    for (_ <- 1 to iters) {
-      lab = edges.join(lab.withColumnRenamed("vec_id", "nbr"), "nbr")
-        .groupBy("src", "lbl").agg(count(lit(1)).as("c"))
-        .withColumn("rn", row_number().over(wL))
-        .filter(col("rn") === 1)
-        .select(col("src").as("vec_id"), col("lbl"))
-      val cp = lab.localCheckpoint(true)
-      register(() => graft.CacheBook.unpersistCheckpoint(cp))
-      lab = cp
-    }
-    lab
-  }
 }

@@ -30,43 +30,36 @@ object SeedBfs {
     *   unreached. */
   def run(und: DataFrame, seedPred: org.apache.spark.sql.Column,
       maxRounds: Int, register: (() => Unit) => Unit): DataFrame =
-    ConnectedComponents.confLock.synchronized {
-      ConnectedComponents.pinnedLoopConf(und.sparkSession) {
-        runLoop(und, seedPred, maxRounds, register)
+    graft.Profiles.narrow(und.sparkSession) {
+      val edges = TriangleCount.bidirectional(und, register)
+      val nodes = edges.select(col("src").as("vec_id")).distinct()
+      val seed = nodes.filter(seedPred)
+        .select(col("vec_id"), lit(0).cast("int").as("dist"))
+        .localCheckpoint(true)
+      register(() => graft.CacheBook.unpersistCheckpoint(seed))
+      var layers = List(seed)
+      var frontier = seed
+      var t = 1
+      var done = false
+      while (t <= maxRounds && !done) {
+        val visited = layers.reduce(_ unionByName _).select("vec_id")
+        // LAZY checkpoint: the count below is the materializing action
+        // AND the emptiness probe — one job per round, not two (the
+        // ConnectedComponents lblSum fold).
+        val nxt = edges
+          .join(frontier.withColumnRenamed("vec_id", "src").select("src"),
+            Seq("src"), "left_semi")
+          .select(col("nbr").as("vec_id")).distinct()
+          .join(visited, Seq("vec_id"), "left_anti")
+          .select(col("vec_id"), lit(t).cast("int").as("dist"))
+          .localCheckpoint(false)
+        register(() => graft.CacheBook.unpersistCheckpoint(nxt))
+        if (nxt.count() == 0L) { done = true }
+        else { layers ::= nxt; frontier = nxt; t += 1 }
       }
+      val visited = layers.reduce(_ unionByName _)
+      val unreached = nodes.join(visited.select("vec_id"), Seq("vec_id"), "left_anti")
+        .select(col("vec_id"), lit(-1).cast("int").as("dist"))
+      visited.unionByName(unreached)
     }
-
-  private def runLoop(und: DataFrame, seedPred: org.apache.spark.sql.Column,
-      maxRounds: Int, register: (() => Unit) => Unit): DataFrame = {
-    val edges = TriangleCount.bidirectional(und, register)
-    val nodes = edges.select(col("src").as("vec_id")).distinct()
-    val seed = nodes.filter(seedPred)
-      .select(col("vec_id"), lit(0).cast("int").as("dist"))
-      .localCheckpoint(true)
-    register(() => graft.CacheBook.unpersistCheckpoint(seed))
-    var layers = List(seed)
-    var frontier = seed
-    var t = 1
-    var done = false
-    while (t <= maxRounds && !done) {
-      val visited = layers.reduce(_ unionByName _).select("vec_id")
-      // LAZY checkpoint: the count below is the materializing action
-      // AND the emptiness probe — one job per round, not two (the
-      // ConnectedComponents lblSum fold).
-      val nxt = edges
-        .join(frontier.withColumnRenamed("vec_id", "src").select("src"),
-          Seq("src"), "left_semi")
-        .select(col("nbr").as("vec_id")).distinct()
-        .join(visited, Seq("vec_id"), "left_anti")
-        .select(col("vec_id"), lit(t).cast("int").as("dist"))
-        .localCheckpoint(false)
-      register(() => graft.CacheBook.unpersistCheckpoint(nxt))
-      if (nxt.count() == 0L) { done = true }
-      else { layers ::= nxt; frontier = nxt; t += 1 }
-    }
-    val visited = layers.reduce(_ unionByName _)
-    val unreached = nodes.join(visited.select("vec_id"), Seq("vec_id"), "left_anti")
-      .select(col("vec_id"), lit(-1).cast("int").as("dist"))
-    visited.unionByName(unreached)
-  }
 }

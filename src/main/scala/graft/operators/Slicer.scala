@@ -29,53 +29,6 @@ object Slicer {
     !sys.env.get("SPARK_GRAFT_SLICE_TRUST_FK").exists(_.equalsIgnoreCase("false")) &&
       !java.lang.Boolean.getBoolean("graft.slice.distrustForwardKeys")
 
-  /** REFCOUNTED discovery execution profile (pinned narrow shuffle
-    * width + AQE off — see the rationale at the [[Slicer.discover]]
-    * call site). A plain save/set/restore races when two discoveries
-    * overlap: the first to finish would restore the session width under
-    * the one still running (the reason slice_diff's two discoveries ran
-    * sequentially through round 14). Every entrant pins the SAME
-    * values, so the scope is safely shared: the first entrant (per
-    * session) saves the session conf and pins, later entrants only bump
-    * the count, and the LAST exit restores. AQE's per-stage re-planning
-    * adds scheduling latency to every exchange in a round's join chain,
-    * and discovery already knows what AQE would learn at runtime (key
-    * counts gate the broadcast hints explicitly) — A/B-measured; at
-    * warehouse scale SPARK_GRAFT_SLICE_AQE=true keeps AQE on. */
-  private val scopeState =
-    collection.mutable.Map.empty[SparkSession, (Int, String, String)]
-
-  /** Public alias: run `body` under the pinned discovery profile (for
-    * slice-entry readouts that materialize small results over the
-    * discovered key sets — same refcounting, safe next to a live
-    * discovery). */
-  def pinned[T](spark: SparkSession)(body: => T): T =
-    discoveryScope(spark)(body)
-
-  private[operators] def discoveryScope[T](spark: SparkSession)(body: => T): T = {
-    val widthKey = "spark.sql.shuffle.partitions"
-    val aqeKey = "spark.sql.adaptive.enabled"
-    scopeState.synchronized {
-      scopeState.get(spark) match {
-        case Some((depth, w, a)) => scopeState(spark) = (depth + 1, w, a)
-        case None =>
-          scopeState(spark) = (1, spark.conf.get(widthKey), spark.conf.get(aqeKey))
-          spark.conf.set(widthKey,
-            sys.env.getOrElse("SPARK_GRAFT_SLICE_PARTITIONS", "8"))
-          spark.conf.set(aqeKey,
-            sys.env.getOrElse("SPARK_GRAFT_SLICE_AQE", "false"))
-      }
-    }
-    try body
-    finally scopeState.synchronized {
-      val (depth, w, a) = scopeState(spark)
-      if (depth == 1) {
-        scopeState.remove(spark)
-        spark.conf.set(widthKey, w)
-        spark.conf.set(aqeKey, a)
-      } else scopeState(spark) = (depth - 1, w, a)
-    }
-  }
   /** One relation of the BFS: rows held on the driver (in their table's
     * column types), or a DataFrame (`small` = fits a broadcast). */
   private[operators] sealed trait Rel
@@ -231,17 +184,14 @@ final class Slicer(
       priorCounts: Map[String, Long] = Map.empty,
       priorMaxes: Map[String, Long] = Map.empty)
       : (Map[String, DataFrame], Map[String, Long], Map[String, Long]) = {
-    // scope shuffle width to the key traffic, not the session default:
-    // distributed discovery shuffles key columns only (a reduction of the
-    // row data), and a round chains several exchanges whose per-task
-    // overhead is the dominant cost once key sets are small relative to
-    // the cluster. Same knob pattern as ConnectedComponents; on a cluster
-    // size it to the expected key volume via the env var. The scope is
-    // REFCOUNTED ([[Slicer.discoveryScope]]) so independent discoveries
-    // may run concurrently (slice_diff overlaps its two root cohorts):
-    // all entrants pin the same values, and only the last exit restores
-    // the session conf.
-    Slicer.discoveryScope(SparkSession.active) {
+    // discovery runs under the narrow profile (graft.Profiles): it
+    // shuffles key columns only (a reduction of the row data), a round
+    // chains several exchanges whose per-task overhead dominates once key
+    // sets are small relative to the cluster, and AQE has nothing to
+    // learn at runtime (key counts gate the broadcast hints explicitly).
+    // The scope is refcounted, so independent discoveries may run
+    // concurrently (slice_diff overlaps its two root cohorts).
+    graft.Profiles.narrow(SparkSession.active) {
       discoverLoop(roots, priorKeys, priorCounts, priorMaxes)
     }
   }
@@ -306,9 +256,8 @@ final class Slicer(
       val keyRef = jc == keyCols(tt) // join lands on the target's primary key
       // keys already discovered can't be fresh: drop the seen keys FIRST
       // — on the driver while every seen key of `tt` is held, else by an
-      // anti-join (AQE off, see discover(), the win is the semi-join's
-      // smaller build side; under SPARK_GRAFT_SLICE_AQE=true AQE can
-      // eliminate the re-discovery scan at runtime)
+      // anti-join (AQE is off, see discover(); the win is the
+      // semi-join's smaller build side)
       val fresh = if (!keyRef) vals else vals match {
         case Held(rows) if !spread.contains(tt) =>
           val seen = held.getOrElse(tt, collection.mutable.HashSet.empty[Row])

@@ -1175,18 +1175,17 @@ object Dedup {
     * magnitude smaller — the standard production-dedup shape. */
   private def clusterLabels(s: SparkSession, dir: String): DataFrame =
     graft.CacheBook.memo(s, "x", "cluster_labels", dir) {
-      // prefetch the heavy memoized inputs BEFORE taking the conf lock:
-      // holding confLock through a shingle/Jaccard build would block
-      // every concurrent CC run on an unrelated expensive stage
+      // prefetch the heavy memoized inputs BEFORE opening the narrow
+      // scope: a shingle/Jaccard build inside it would plan at the
+      // narrow width, and so would every query that runs on the session
+      // while the scope is open
       exactPairs(s, dir); jaccardPairs(s, dir)
-      // key-only traffic: scope the shuffle width like the CC loop does
-      // (the eager checkpoint below materializes everything in-scope);
-      // confLock serializes the override with concurrent CC runs —
-      // re-entrant, so the run() inside the body locks again safely
-      ConnectedComponents.confLock.synchronized {
-        ConnectedComponents.pinnedLoopConf(s) {
-          graft.CacheBook.keep(s, "x")(clusterLabelsBody(s, dir))
-        }
+      // key-only traffic: the contraction joins and the expansion run
+      // under the narrow profile like the CC loop (the eager checkpoint
+      // below materializes everything in-scope); the run() inside nests
+      // in the same scope
+      graft.Profiles.narrow(s) {
+        graft.CacheBook.keep(s, "x")(clusterLabelsBody(s, dir))
       }
     }
 

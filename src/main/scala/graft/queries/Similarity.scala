@@ -336,48 +336,31 @@ object Similarity {
     * rounds of beam ∪ neighbors(beam) (edge EQUI-join) → re-rank →
     * top-`width` per query, with a per-round local checkpoint (each
     * round references the beam twice — unchecked, the plan nests
-    * exponentially). Shared by the flat and hierarchical searches. */
-  private val walkConfLock = new Object
-
+    * exponentially). Shared by the flat and hierarchical searches.
+    *
+    * The walk runs under the narrow profile ([[graft.Profiles.narrow]]):
+    * beam frames are NQueries × width rows — a few KB — yet every
+    * round's exchanges would inherit the SESSION shuffle width, which a
+    * cluster sizes to the 100 TB fact tables (DEPLOY.md: 8000), and AQE
+    * would split each round's one action into 3-4 sequential
+    * query-stage jobs with nothing to re-optimize. The memoized KNN
+    * graph is built EAGERLY by its memo cell before any caller reaches
+    * here, so the scope never holds a corpus-scale build. */
   private def beamWalk(s: SparkSession, e: DataFrame, qs: DataFrame,
       edges: DataFrame, seed: DataFrame, rounds: Int, width: Int): DataFrame =
-    walkConfLock.synchronized {
-      // beam frames are NQueries × width rows — a few KB — yet every
-      // round's exchanges inherit the SESSION shuffle width, which a
-      // cluster sizes to the 100 TB fact tables (DEPLOY.md: 8000): an
-      // unscoped walk would fan each tiny round into thousands of
-      // tasks. Scope the width to the walk (the ConnectedComponents/
-      // Slicer knob pattern; SPARK_GRAFT_WALK_PARTITIONS to retune).
-      // On local[32] the width alone is wall-neutral (A/B-measured —
-      // round latency there is per-job scheduling, not task count); the
-      // width scope exists for the cluster default. AQE additionally
-      // goes OFF for the walk (round 14): on these few-KB beam frames
-      // it only splits each round's one action into 3-4 sequential
-      // query-stage jobs — pure scheduling latency, nothing to
-      // re-optimize (the ConnectedComponents.pinnedLoopConf rationale).
-      // The memoized KNN graph is built EAGERLY by its memo cell before
-      // any caller reaches here, so the scope never captures a
-      // corpus-scale build.
-      val key = "spark.sql.shuffle.partitions"
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val prev = s.conf.get(key)
-      val prevA = s.conf.get(aqeKey)
-      s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_WALK_PARTITIONS", "8"))
-      s.conf.set(aqeKey, "false")
-      try {
-        var beam = cosRerank(e, qs, seed)
-          .filter(col("brn") <= width).select("q", "vec_id")
-        for (_ <- 1 to rounds) {
-          val expanded = beam
-            .union(beam.join(edges, Seq("vec_id"))
-              .select(col("q"), col("nbr").as("vec_id")))
-            .distinct()
-          beam = cosRerank(e, qs, expanded).filter(col("brn") <= width)
-            .select("q", "vec_id")
-          beam = graft.CacheBook.keep(s, "s")(beam.localCheckpoint(true))
-        }
-        beam
-      } finally { s.conf.set(key, prev); s.conf.set(aqeKey, prevA) }
+    graft.Profiles.narrow(s) {
+      var beam = cosRerank(e, qs, seed)
+        .filter(col("brn") <= width).select("q", "vec_id")
+      for (_ <- 1 to rounds) {
+        val expanded = beam
+          .union(beam.join(edges, Seq("vec_id"))
+            .select(col("q"), col("nbr").as("vec_id")))
+          .distinct()
+        beam = cosRerank(e, qs, expanded).filter(col("brn") <= width)
+          .select("q", "vec_id")
+        beam = graft.CacheBook.keep(s, "s")(beam.localCheckpoint(true))
+      }
+      beam
     }
 
   /** [[beamWalk]] for ALL sweep widths in ONE keyed loop: the beam
@@ -391,37 +374,29 @@ object Similarity {
   private def beamWalkSwept(s: SparkSession, e: DataFrame, qs: DataFrame,
       edges: DataFrame, seed: DataFrame, rounds: Int,
       widths: Seq[Int]): DataFrame =
-    walkConfLock.synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val aqeKey = "spark.sql.adaptive.enabled"
-      val prev = s.conf.get(key)
-      val prevA = s.conf.get(aqeKey)
-      s.conf.set(key, sys.env.getOrElse("SPARK_GRAFT_WALK_PARTITIONS", "8"))
-      s.conf.set(aqeKey, "false")
-      try {
-        val wq = Window.partitionBy("w", "q")
-          .orderBy(col("cos").desc, col("vec_id").asc)
-        def rerank(cand: DataFrame): DataFrame =
-          cand.join(e.select(col("vec_id"), col("v"), col("n")), "vec_id")
-            .join(qs, "q")
-            .select(col("w"), col("q"), col("vec_id"),
-              VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos"))
-            .withColumn("brn", row_number().over(wq))
-        val seed0 = cosRerank(e, qs, seed)
-        var beam = widths.map(w => seed0.filter(col("brn") <= w)
-            .select(lit(w).cast("int").as("w"), col("q"), col("vec_id")))
-          .reduce(_ unionByName _)
-        for (_ <- 1 to rounds) {
-          val expanded = beam
-            .union(beam.join(edges, Seq("vec_id"))
-              .select(col("w"), col("q"), col("nbr").as("vec_id")))
-            .distinct()
-          beam = rerank(expanded).filter(col("brn") <= col("w"))
-            .select("w", "q", "vec_id")
-          beam = graft.CacheBook.keep(s, "s")(beam.localCheckpoint(true))
-        }
-        beam
-      } finally { s.conf.set(key, prev); s.conf.set(aqeKey, prevA) }
+    graft.Profiles.narrow(s) {
+      val wq = Window.partitionBy("w", "q")
+        .orderBy(col("cos").desc, col("vec_id").asc)
+      def rerank(cand: DataFrame): DataFrame =
+        cand.join(e.select(col("vec_id"), col("v"), col("n")), "vec_id")
+          .join(qs, "q")
+          .select(col("w"), col("q"), col("vec_id"),
+            VecOps.cosine(col("qv"), col("v"), col("qn"), col("n")).as("cos"))
+          .withColumn("brn", row_number().over(wq))
+      val seed0 = cosRerank(e, qs, seed)
+      var beam = widths.map(w => seed0.filter(col("brn") <= w)
+          .select(lit(w).cast("int").as("w"), col("q"), col("vec_id")))
+        .reduce(_ unionByName _)
+      for (_ <- 1 to rounds) {
+        val expanded = beam
+          .union(beam.join(edges, Seq("vec_id"))
+            .select(col("w"), col("q"), col("nbr").as("vec_id")))
+          .distinct()
+        beam = rerank(expanded).filter(col("brn") <= col("w"))
+          .select("w", "q", "vec_id")
+        beam = graft.CacheBook.keep(s, "s")(beam.localCheckpoint(true))
+      }
+      beam
     }
 
   /** ONE shared signature-augmented corpus projection — vecs plus the
@@ -2123,40 +2098,38 @@ object Similarity {
             * lit(1000000.0)).cast("long").as("simm"))
         .localCheckpoint(true))
       val wSel = Window.partitionBy("q").orderBy(col("mmr").desc, col("vec_id").asc)
-      // the greedy loop runs over <=NQueries*MmrPool-row relations —
-      // pinned narrow width + AQE-off (round 14 OPT: the CC/BFS loop
-      // profile; each round was 3-4 AQE query-stage jobs of 32-task
-      // shuffles over ~250 rows). Inputs are materialized checkpoints,
-      // so nothing expensive serializes behind the conf lock.
-      var sel: DataFrame = null
-      graft.operators.ConnectedComponents.confLock.synchronized {
-        graft.operators.ConnectedComponents.pinnedLoopConf(s) {
-          // round 1: pure relevance (no redundancy term yet)
-          sel = pool
-            .withColumn("mmr", lit(7L) * col("relm"))
+      // the greedy loop runs over <=NQueries*MmrPool-row relations, so
+      // it runs under the narrow profile (one job per round instead of
+      // 3-4 AQE query-stage jobs of session-width shuffles over ~250
+      // rows). Its inputs are materialized checkpoints above, so nothing
+      // corpus-scale plans at the narrow width.
+      val ranked = graft.Profiles.narrow(s) {
+        // round 1: pure relevance (no redundancy term yet)
+        var sel = pool
+          .withColumn("mmr", lit(7L) * col("relm"))
+          .withColumn("srn", row_number().over(wSel))
+          .filter(col("srn") === 1)
+          .select(col("q"), col("vec_id"), lit(1).cast("int").as("rank"), col("mmr"))
+        for (t <- 2 to MmrK) {
+          val red = pairs
+            .join(sel.select(col("q"), col("vec_id").as("b")), Seq("q", "b"))
+            .groupBy(col("q"), col("a")).agg(max(col("simm")).as("redm"))
+          val cand = pool.join(sel.select("q", "vec_id"), Seq("q", "vec_id"), "left_anti")
+          val pick = cand.join(red,
+              cand("q") === red("q") && cand("vec_id") === red("a"))
+            .select(cand("q"), cand("vec_id"),
+              (lit(7L) * col("relm") - lit(3L) * col("redm")).as("mmr"))
             .withColumn("srn", row_number().over(wSel))
             .filter(col("srn") === 1)
-            .select(col("q"), col("vec_id"), lit(1).cast("int").as("rank"), col("mmr"))
-          for (t <- 2 to MmrK) {
-            val red = pairs
-              .join(sel.select(col("q"), col("vec_id").as("b")), Seq("q", "b"))
-              .groupBy(col("q"), col("a")).agg(max(col("simm")).as("redm"))
-            val cand = pool.join(sel.select("q", "vec_id"), Seq("q", "vec_id"), "left_anti")
-            val pick = cand.join(red,
-                cand("q") === red("q") && cand("vec_id") === red("a"))
-              .select(cand("q"), cand("vec_id"),
-                (lit(7L) * col("relm") - lit(3L) * col("redm")).as("mmr"))
-              .withColumn("srn", row_number().over(wSel))
-              .filter(col("srn") === 1)
-              .select(col("q"), col("vec_id"), lit(t).cast("int").as("rank"), col("mmr"))
-            sel = sel.unionByName(pick)
-            // bound plan depth: next round references sel in the anti-join
-            // AND the redundancy join — unchecked the plan grows ~3^rounds
-            sel = graft.CacheBook.keep(s, "s")(sel.localCheckpoint(true))
-          }
+            .select(col("q"), col("vec_id"), lit(t).cast("int").as("rank"), col("mmr"))
+          sel = sel.unionByName(pick)
+          // bound plan depth: next round references sel in the anti-join
+          // AND the redundancy join — unchecked the plan grows ~3^rounds
+          sel = graft.CacheBook.keep(s, "s")(sel.localCheckpoint(true))
         }
+        sel
       }
-      sel.select(col("q"), col("rank"), col("vec_id"), col("mmr").as("mmr_micro"))
+      ranked.select(col("q"), col("rank"), col("vec_id"), col("mmr").as("mmr_micro"))
         .orderBy("q", "rank")
     }),
 

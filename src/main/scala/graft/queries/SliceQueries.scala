@@ -129,11 +129,11 @@ object SliceQueries {
     // key-set join; the A side reuses the memoized customer slice.
     // The two discoveries are INDEPENDENT (disjoint root cohorts, no
     // shared mutable state), so they run CONCURRENTLY as two
-    // graft.Par tasks under the refcounted discovery profile (round 14:
+    // graft.Par tasks under the refcounted narrow profile (round 14:
     // each is round-latency bound at width 8, so overlapping them
-    // back-fills the idle cores — guide §2.6); the diff readout then materializes inside the
-    // same pinned scope, one narrow action instead of ~30 width-32 AQE
-    // query stages over key sets of ≤12k rows.
+    // back-fills the idle cores); the diff readout then
+    // materializes under the same profile, one narrow action instead of
+    // ~30 width-32 AQE query stages over key sets of ≤12k rows.
     "slice_diff" -> ((s, dir) => {
       val Seq(a, b) = graft.Par.each(Seq(
           () => custSlice(s, dir),
@@ -160,10 +160,10 @@ object SliceQueries {
             (col("n_a") - col("n_common")).as("n_only_a"),
             (col("n_b") - col("n_common")).as("n_only_b"))
       }
-      // one |tables|-row readout: materialize it while the narrow
-      // profile is still pinned (the caller's action would otherwise
-      // re-plan the 9 join subtrees at session width)
-      val out = graft.CacheBook.keep(s, "slice")(graft.operators.Slicer.pinned(s) {
+      // one |tables|-row readout: materialize it under the narrow
+      // profile (the caller's action would otherwise re-plan the 9 join
+      // subtrees at session width)
+      val out = graft.CacheBook.keep(s, "slice")(graft.Profiles.narrow(s) {
         frames.reduce(_ unionByName _).localCheckpoint(true)
       })
       out.orderBy("table_id")

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 import graft.operators.ConnectedComponents
 
 class ConnectedComponentsSpec extends SparkSpec {
@@ -113,5 +115,19 @@ class ConnectedComponentsSpec extends SparkSpec {
     val m = ConnectedComponents.runStars(chain.toDF("a", "b"), maxIter = 12)
       .as[(Long, Long)].collect().toMap
     assert(m.size == 64 && m.values.forall(_ == 1L))
+  }
+
+  test("run and runStars leave no cached frame behind once the labels are freed") {
+    // every frame a run persists is freed before it returns, except the
+    // labels' own checkpoint (CacheBookSpec.held reads the same map)
+    def leftBehind(cc: DataFrame => DataFrame): Set[Int] = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val labels = cc(Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 7L)).toDF("a", "b"))
+      assert(labels.count() == 6L)
+      CacheBook.unpersistCheckpoint(labels)
+      spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    }
+    assert(leftBehind(ConnectedComponents.run(_)).isEmpty, "run")
+    assert(leftBehind(ConnectedComponents.runStars(_)).isEmpty, "runStars")
   }
 }

@@ -106,4 +106,46 @@ class EagerPersistSpec extends AnyFunSuite {
       }.toList
     assert(offenders.isEmpty, s"memo mechanisms outside CacheBook: ${offenders.mkString(", ")}")
   }
+
+  test("Profiles.narrow is the only writer of the narrow profile's keys in src/main") {
+    // a lock, a save/set/restore copy or an env knob beside the one
+    // refcounted scope would be a second mechanism: two overlapping
+    // save/set/restore scopes leave a shared session pinned
+    val banned = Seq("confLock", "walkConfLock", "pinnedLoopConf", "discoveryScope",
+      "SPARK_GRAFT_CC_PARTITIONS", "SPARK_GRAFT_SLICE_PARTITIONS",
+      "SPARK_GRAFT_SLICE_AQE", "SPARK_GRAFT_WALK_PARTITIONS")
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> Files.readAllLines(p).asScala.toVector).toList
+    val mentions = for {
+      (p, lines) <- sources
+      (l, i) <- lines.zipWithIndex if banned.exists(l.contains)
+    } yield s"${p.getFileName}:${i + 1}"
+    assert(mentions.isEmpty, s"retired conf-scope mechanisms: ${mentions.mkString(", ")}")
+    // conf.set(k, ...) where k is the key's literal, or a name bound to
+    // it in the same file; the argument may sit on the next line
+    val firstArg = """conf\.set\(\s*([^,\s]+)""".r
+    def sets(key: String): List[(String, Int)] = for {
+      (p, lines) <- sources
+      bound = lines.flatMap(l => s"""va[lr]\\s+(\\w+)\\s*=\\s*"\\Q$key\\E"""".r
+        .findFirstMatchIn(l).map(_.group(1))).toSet
+      (l, i) <- lines.zipWithIndex
+      at <- Iterator.iterate(l.indexOf("conf.set("))(j => l.indexOf("conf.set(", j + 1))
+        .takeWhile(_ >= 0).toList
+      m <- firstArg.findFirstMatchIn(l.substring(at) + " " + lines.lift(i + 1).getOrElse(""))
+      if m.group(1) == s"\"$key\"" || bound(m.group(1))
+    } yield (p.getFileName.toString, i + 1)
+    val aqe = sets("spark.sql.adaptive.enabled").filterNot(_._1 == "Profiles.scala")
+    assert(aqe.isEmpty, s"AQE set outside Profiles.scala: $aqe")
+    // streamSession sets the width on its own clone of the session
+    val streamClone = sources.collectFirst { case (p, lines)
+        if p.getFileName.toString == "StreamingOps.scala" =>
+      val start = lines.indexWhere(_.contains("private def streamSession("))
+      if (start < 0) Range(0, 0) else start until lines.indexWhere(_.startsWith("  }"), start)
+    }.getOrElse(Range(0, 0))
+    val width = sets("spark.sql.shuffle.partitions").filterNot { case (f, n) =>
+      f == "Profiles.scala" || (f == "StreamingOps.scala" && streamClone.contains(n - 1))
+    }
+    assert(width.isEmpty, s"shuffle width set outside Profiles.scala: $width")
+  }
 }
