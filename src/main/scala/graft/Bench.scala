@@ -1,7 +1,4 @@
 package graft
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times every registered query at the given scale
@@ -10,8 +7,8 @@ import org.apache.spark.sql.SparkSession
   * reported as a timing.
   *
   * SELF-EXPLAINING timings: alongside wall-clock, every query reports
-  * its Spark JOB COUNT and summed EXECUTOR CPU TIME (a SparkListener;
-  * the bus is drained before each snapshot). The two together separate
+  * its Spark JOB COUNT and summed EXECUTOR CPU TIME ([[JobMeter]];
+  * the bus is drained before each reading). The two together separate
   * the two stories a slow sample can tell: wall up with cpu flat and
   * jobs equal = the environment (scheduling delay, CPU contention —
   * the query sat waiting); wall AND cpu up = the query actually did
@@ -85,23 +82,6 @@ object Bench {
       touched: Seq[(String, String)]): Set[(String, String)] =
     touched.toSet.intersect(liveBefore)
 
-  private final class Metrics extends SparkListener {
-    val jobs = new AtomicLong
-    val cpuNs = new AtomicLong
-    val rddWrites = new AtomicLong
-    override def onJobStart(j: SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet(); ()
-    }
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      Option(t.taskMetrics).foreach { m =>
-        cpuNs.addAndGet(m.executorCpuTime)
-        rddWrites.addAndGet(
-          org.apache.spark.graftbridge.ListenerBridge.rddBlockWrites(m))
-      }
-      ()
-    }
-  }
-
   /** Budget reader. The machine-authored file
     * (tools/bench_budget.json) carries per-query MEDIANS of wall, jobs
     * and cpuSec as {"name": {"wall": s, "jobs": n, "cpuSec": s}, ...}
@@ -151,21 +131,19 @@ object Bench {
     observed > 2 * committed + 8
 
   def main(args: Array[String]): Unit = {
+    val failed = Sessions.run(
+        // per-task cached-block write statuses feed the rddWrites counter
+        // (off by default; the accumulator cost is noise at bench scale)
+        "spark.taskMetrics.trackUpdatedBlockStatuses" -> "true") { spark =>
+      bench(spark, args.toSet)
+    }
+    if (failed) sys.exit(1)
+  }
+
+  /** Time every registered query (or those in `only`) on `spark`, print
+    * the JSON lines; true iff some query failed. */
+  private def bench(spark: SparkSession, only: Set[String]): Boolean = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // per-task cached-block write statuses feed the rddWrites counter
-      // (off by default; the accumulator cost is noise at bench scale)
-      .config("spark.taskMetrics.trackUpdatedBlockStatuses", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val metrics = new Metrics
-    spark.sparkContext.addSparkListener(metrics)
     // Untimed warmup: touch every table's scan path once. Otherwise the
     // alphabetically-first query absorbs ~5s of JVM/codegen/parquet
     // cold start that belongs to the harness, not the query (observed:
@@ -205,7 +183,6 @@ object Bench {
     // actually matters clears the floor anyway.
     val retryFloor = sys.env.get("SPARK_GRAFT_BENCH_RETRY_FLOOR")
       .flatMap(_.toDoubleOption).getOrElse(1.0)
-    val only = args.toSet // optional query-name filter for local iteration
     val errors = collection.mutable.Map.empty[String, String]
     // CPU-CALIBRATION probe: a fixed pure-compute task (512k codegen md5s,
     // no cache, no shuffle beyond one agg) whose cpuSec on an idle
@@ -221,13 +198,11 @@ object Bench {
     // ambiguity, resolved mechanically).
     def calibCpu(): Double = {
       import org.apache.spark.sql.functions._
-      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      val c0 = metrics.cpuNs.get()
-      spark.range(0, 1L << 19, 1, cpus.toInt)
-        .select(md5(concat(col("id").cast("string"), lit("calib"))).as("h"))
-        .agg(count(when(substring(col("h"), 1, 1) === "0", 1))).collect()
-      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      (metrics.cpuNs.get() - c0) / 1e9
+      JobMeter.measure(spark.sparkContext) {
+        spark.range(0, 1L << 19, 1, spark.sparkContext.defaultParallelism)
+          .select(md5(concat(col("id").cast("string"), lit("calib"))).as("h"))
+          .agg(count(when(substring(col("h"), 1, 1) === "0", 1))).collect()
+      }._2.cpuSec
     }
     calibCpu() // untimed: JIT/codegen-warm the calib plan itself
     val calibStart = calibCpu()
@@ -241,17 +216,15 @@ object Bench {
       .filter { case (name, _) => only.isEmpty || only(name) }
     case class Sample(sec: Double, jobs: Long, cpuSec: Double, rddWrites: Long)
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Sample = {
-      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      val (j0, c0, w0) = (metrics.jobs.get(), metrics.cpuNs.get(), metrics.rddWrites.get())
-      val t0 = System.nanoTime()
-      try { fn(spark, sfDir).count() }
-      catch { case e: Throwable =>
-        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+      val (elapsed, m) = JobMeter.measure(spark.sparkContext) {
+        val t0 = System.nanoTime()
+        try { fn(spark, sfDir).count() }
+        catch { case e: Throwable =>
+          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+        }
+        (System.nanoTime() - t0) / 1e9
       }
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-      Sample(elapsed, metrics.jobs.get() - j0, (metrics.cpuNs.get() - c0) / 1e9,
-        metrics.rddWrites.get() - w0)
+      Sample(elapsed, m.jobs, m.cpuSec, m.rddWrites)
     }
     // first samples whose cache-block writes exceed the committed
     // expectation — the recompute/eviction signature, flagged from the
@@ -373,7 +346,6 @@ object Bench {
     // inside any tail window; the full per-query payload stays in the
     // line above and in bench_out.json. Timed code is untouched.
     println(s"""{"metric":"total","value":${sec(total)},"unit":"sec","calibCpuSec":${sec(calibStart)},"n":${results.size},"errors":${errors.size},"retries":${retries.size},"sf":"$sfDir"}""")
-    spark.stop()
-    if (errors.nonEmpty) sys.exit(1)
+    errors.nonEmpty
   }
 }

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * checkpoints (accumulating and re-caching a growing layer table
   * every round would be quadratic in rounds — measured 10x this
   * design's cost). O(rounds · edges) total; early exit at fixpoint.
-  * The caller registers every release thunk (cache scope is a session
-  * concern).
+  * Every checkpointed or persisted frame is kept under the caller's
+  * scope (cache scope is a session concern).
   */
 object KcorePeel {
 
@@ -32,12 +32,12 @@ object KcorePeel {
     * @param maxRounds peel-round bound (fixpoint at gate scales is
     *   spec-held; a truncated run labels the not-yet-peeled alive set
     *   layer 0).
-    * @param register sink for cache-release thunks.
+    * @param scope [[graft.CacheBook]] scope that frees the loop's frames.
     * @return (vec_id, peel_layer) for every node in an edge. */
   def run(und: DataFrame, k: Int, maxRounds: Int,
-      register: (() => Unit) => Unit): DataFrame =
+      scope: String): DataFrame =
     graft.Profiles.narrow(und.sparkSession) {
-      val edges = TriangleCount.bidirectional(und, register)
+      val edges = TriangleCount.bidirectional(und, scope)
       var alive = edges.select(col("src").as("vec_id")).distinct()
       var layerFrames = List.empty[DataFrame]
       var t = 1
@@ -51,10 +51,10 @@ object KcorePeel {
         // the status frame, so one action both materializes the round's
         // checkpoint and answers the fixpoint probe — one job per round,
         // not two (the ConnectedComponents lblSum fold).
-        val status = alive.join(deg, col("vec_id") === col("src"), "left")
-          .select(col("vec_id"), coalesce(col("deg"), lit(0L)).as("deg"))
-          .localCheckpoint(false)
-        register(() => graft.CacheBook.unpersistCheckpoint(status))
+        val status = graft.CacheBook.keep(und.sparkSession, scope)(
+          alive.join(deg, col("vec_id") === col("src"), "left")
+            .select(col("vec_id"), coalesce(col("deg"), lit(0L)).as("deg"))
+            .localCheckpoint(false))
         val dead = status.filter(col("deg") < k)
         if (dead.count() == 0L) { done = true }
         else {

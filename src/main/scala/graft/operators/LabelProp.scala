@@ -15,21 +15,21 @@ import org.apache.spark.sql.functions._
   * per-node argmax window — O(iters · edges), never quadratic. The
   * bidirectional edge relation persists across rounds; each round's
   * label table localCheckpoints (one consumer, but lineage would still
-  * stack). The caller registers every release thunk (cache scope is a
-  * session concern, not the operator's).
+  * stack). Every persisted or checkpointed frame is kept under the
+  * caller's scope (cache scope is a session concern, not the operator's).
   */
 object LabelProp {
 
   /** @param und distinct canonical undirected edges (u &lt; w) — see
     *   [[TriangleCount.canonical]].
-    * @param register sink for cache-release thunks (edge persist +
-    *   per-round checkpoints).
+    * @param scope [[graft.CacheBook]] scope that frees the edge persist
+    *   and the per-round checkpoints.
     * @return (vec_id, lbl) for every node that appears in an edge. */
-  def run(und: DataFrame, iters: Int, register: (() => Unit) => Unit): DataFrame =
+  def run(und: DataFrame, iters: Int, scope: String): DataFrame =
     graft.Profiles.narrow(und.sparkSession) {
       // coalesceTo = 0: keep the input layout (plan parity with the
       // committed s_label_prop budget; the loop body is the cost here).
-      val edges = TriangleCount.bidirectional(und, register, coalesceTo = 0)
+      val edges = TriangleCount.bidirectional(und, scope, coalesceTo = 0)
       var lab = edges.select(col("src").as("vec_id")).distinct()
         .select(col("vec_id"), col("vec_id").as("lbl"))
       val wL = Window.partitionBy("src").orderBy(col("c").desc, col("lbl").asc)
@@ -39,9 +39,7 @@ object LabelProp {
           .withColumn("rn", row_number().over(wL))
           .filter(col("rn") === 1)
           .select(col("src").as("vec_id"), col("lbl"))
-        val cp = lab.localCheckpoint(true)
-        register(() => graft.CacheBook.unpersistCheckpoint(cp))
-        lab = cp
+        lab = graft.CacheBook.keep(und.sparkSession, scope)(lab.localCheckpoint(true))
       }
       lab
     }

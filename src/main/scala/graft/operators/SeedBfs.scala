@@ -16,8 +16,8 @@ import org.apache.spark.sql.functions._
   * round's fresh layer localCheckpoints; the visited set stays a FLAT
   * union of those cached layers (never re-materialized — re-caching
   * the growing union each round is the quadratic trap KcorePeel
-  * documents). Early exit when a round discovers nothing. The caller
-  * registers every release thunk.
+  * documents). Early exit when a round discovers nothing. Every
+  * persisted or checkpointed frame is kept under the caller's scope.
   */
 object SeedBfs {
 
@@ -25,18 +25,18 @@ object SeedBfs {
     * @param seedPred predicate over vec_id selecting the seed nodes.
     * @param maxRounds expansion bound (graph eccentricity from the
     *   seeds is below it at gate scales; beyond-bound nodes label -1).
-    * @param register sink for cache-release thunks.
+    * @param scope [[graft.CacheBook]] scope that frees the loop's frames.
     * @return (vec_id, dist) for every node in an edge; dist -1 =
     *   unreached. */
   def run(und: DataFrame, seedPred: org.apache.spark.sql.Column,
-      maxRounds: Int, register: (() => Unit) => Unit): DataFrame =
+      maxRounds: Int, scope: String): DataFrame =
     graft.Profiles.narrow(und.sparkSession) {
-      val edges = TriangleCount.bidirectional(und, register)
+      val keep = graft.CacheBook.keep(und.sparkSession, scope) _
+      val edges = TriangleCount.bidirectional(und, scope)
       val nodes = edges.select(col("src").as("vec_id")).distinct()
-      val seed = nodes.filter(seedPred)
+      val seed = keep(nodes.filter(seedPred)
         .select(col("vec_id"), lit(0).cast("int").as("dist"))
-        .localCheckpoint(true)
-      register(() => graft.CacheBook.unpersistCheckpoint(seed))
+        .localCheckpoint(true))
       var layers = List(seed)
       var frontier = seed
       var t = 1
@@ -46,14 +46,13 @@ object SeedBfs {
         // LAZY checkpoint: the count below is the materializing action
         // AND the emptiness probe — one job per round, not two (the
         // ConnectedComponents lblSum fold).
-        val nxt = edges
+        val nxt = keep(edges
           .join(frontier.withColumnRenamed("vec_id", "src").select("src"),
             Seq("src"), "left_semi")
           .select(col("nbr").as("vec_id")).distinct()
           .join(visited, Seq("vec_id"), "left_anti")
           .select(col("vec_id"), lit(t).cast("int").as("dist"))
-          .localCheckpoint(false)
-        register(() => graft.CacheBook.unpersistCheckpoint(nxt))
+          .localCheckpoint(false))
         if (nxt.count() == 0L) { done = true }
         else { layers ::= nxt; frontier = nxt; t += 1 }
       }

@@ -29,19 +29,18 @@ object TriangleCount {
       .distinct()
 
   /** Bidirectional (src, nbr) expansion of a canonical undirected edge
-    * relation, persisted and release-registered — the per-round scan
+    * relation, persisted and kept under `scope` — the per-round scan
     * every graph loop (BFS, k-core peel, label propagation) reads.
     * `coalesceTo` &gt; 0 shrinks the relation's partition count first (a
     * few thousand edges per million nodes do not need 32 shuffle
     * partitions churning every round); &le; 0 keeps the input layout. */
-  def bidirectional(und: DataFrame, register: (() => Unit) => Unit,
+  def bidirectional(und: DataFrame, scope: String,
       coalesceTo: Int = 4): DataFrame = {
     val base = und.select(col("u").as("src"), col("w").as("nbr"))
       .union(und.select(col("w").as("src"), col("u").as("nbr")))
-    val edges = (if (coalesceTo > 0) base.coalesce(coalesceTo) else base)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    register(() => { edges.unpersist(false); () })
-    edges
+    graft.CacheBook.keep(und.sparkSession, scope)(
+      (if (coalesceTo > 0) base.coalesce(coalesceTo) else base)
+        .persist(StorageLevel.MEMORY_AND_DISK))
   }
 
   /** (vec_id, n_tri) for every node in ≥1 triangle. `und` must be a

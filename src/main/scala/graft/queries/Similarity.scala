@@ -1511,7 +1511,7 @@ object Similarity {
       val und = graft.operators.TriangleCount
         .canonical(knnGraph(s, dir).select("src", "nbr"))
       val d = graft.operators.SeedBfs.run(und, col("vec_id") < NQueries,
-        BfsRounds, thunk => graft.CacheBook.register(s, "s")(thunk))
+        BfsRounds, "s")
       d.join(d.groupBy("dist").agg(count(lit(1)).as("n_at_dist")), "dist")
         .select(col("vec_id"), col("dist"), col("n_at_dist"))
         .orderBy("vec_id")
@@ -1580,8 +1580,7 @@ object Similarity {
     "s_kcore_peel" -> ((s, dir) => {
       val und = graft.operators.TriangleCount
         .canonical(knnGraph(s, dir).select("src", "nbr"))
-      val lay = graft.operators.KcorePeel.run(und, KcoreK, KcoreRounds,
-        thunk => graft.CacheBook.register(s, "s")(thunk))
+      val lay = graft.operators.KcorePeel.run(und, KcoreK, KcoreRounds, "s")
       lay.join(lay.groupBy("peel_layer").agg(count(lit(1)).as("layer_size")),
           "peel_layer")
         .select(col("vec_id"), col("peel_layer"), col("layer_size"))
@@ -2936,8 +2935,7 @@ object Similarity {
     graft.CacheBook.memo(s, "s", "ann:s_lpa_labels", dir)(annFrame(s, "ann:s_lpa_labels") {
       val und = graft.operators.TriangleCount
         .canonical(knnGraph(s, dir).select("src", "nbr"))
-      graft.operators.LabelProp.run(und, LpaIters,
-        thunk => graft.CacheBook.register(s, "s")(thunk))
+      graft.operators.LabelProp.run(und, LpaIters, "s")
     })
 
   private val ivfpqAnnBody: (SparkSession, String) => DataFrame = ((s, dir) => {

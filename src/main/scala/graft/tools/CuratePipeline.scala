@@ -252,27 +252,21 @@ object CuratePipeline {
     val minQuality = if (args.length > 2) args(2).toDouble else 0.3
     val format = if (args.length > 3) args(3) else "parquet"
     val benchDir = if (args.length > 4) Some(args(4)) else None
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val (curated, stages) = curate(spark, sfDir, minQuality, benchDir)
-    curated.write.mode("overwrite").parquet(s"$outDir/curated")
-    // partition dirs are the unit a training reader consumes (and the
-    // unit of write parallelism — each (split, shard) is one task's
-    // sorted run; no global sort anywhere in the pipeline)
-    writeShards(exportSet(curated), s"$outDir/shards", format)
-    // coalesce: sum over an empty curated set is NULL, not 0
-    val toks = curated.agg(coalesce(sum("n_tokens"), lit(0L))).collect()(0).getLong(0)
-    println(("input" :: "after_quality" :: "after_exact_dedup"
-        :: "after_line_dedup" :: "after_near_dedup" :: Nil)
-      .++(if (stages.contains("after_decontaminate"))
-        Seq("after_decontaminate") else Nil)
-      .:+("after_image_dedup").:+("after_span_strip")
-      .map(k => s"$k=${stages(k)}").mkString("[curate] ", " ", s" total_tokens=$toks"))
-    spark.stop()
+    graft.Sessions.run() { spark =>
+      val (curated, stages) = curate(spark, sfDir, minQuality, benchDir)
+      curated.write.mode("overwrite").parquet(s"$outDir/curated")
+      // partition dirs are the unit a training reader consumes (and the
+      // unit of write parallelism — each (split, shard) is one task's
+      // sorted run; no global sort anywhere in the pipeline)
+      writeShards(exportSet(curated), s"$outDir/shards", format)
+      // coalesce: sum over an empty curated set is NULL, not 0
+      val toks = curated.agg(coalesce(sum("n_tokens"), lit(0L))).collect()(0).getLong(0)
+      println(("input" :: "after_quality" :: "after_exact_dedup"
+          :: "after_line_dedup" :: "after_near_dedup" :: Nil)
+        .++(if (stages.contains("after_decontaminate"))
+          Seq("after_decontaminate") else Nil)
+        .:+("after_image_dedup").:+("after_span_strip")
+        .map(k => s"$k=${stages(k)}").mkString("[curate] ", " ", s" total_tokens=$toks"))
+    }
   }
 }

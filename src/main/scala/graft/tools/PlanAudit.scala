@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Prints the formatted physical plan of selected queries — the
@@ -16,37 +14,30 @@ object PlanAudit {
       SparkEntry.queries.keys.toSeq.sorted
     else if (args.length > 1) args.drop(1).toSeq
       else Seq("q_filter_pushdown", "q1_agg", "q3_join", "q5_join", "q_topk")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // GRAFT_PLANS_WITH_BUILDS=1 (round 15): since the family memos
-    // eagerly localCheckpoint, a consumer plan reads LogicalRDD leaves
-    // and the build subtrees live in CacheBook's recorded build plans —
-    // append the build plans of every memo the query touched so the
-    // captured file carries the full structural evidence (the
-    // PlanShapeSpec planWithBuilds discipline, in the audit tool).
-    val withBuilds = sys.env.get("GRAFT_PLANS_WITH_BUILDS").contains("1")
-    names.foreach { n =>
-      println(s"\n========== $n ==========")
-      if (withBuilds) {
-        val (df, touched) = graft.CacheBook.traced {
-          SparkEntry.queries(n)(spark, sfDir)
-        }
-        println(df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
-        touched.foreach { case (sc, nm) =>
-          println(s"---------- build plan: $sc/$nm ----------")
-          println(graft.CacheBook.buildPlan(spark, sc, nm))
-        }
-      } else
-        println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+    graft.Sessions.run() { spark =>
+      // GRAFT_PLANS_WITH_BUILDS=1 (round 15): since the family memos
+      // eagerly localCheckpoint, a consumer plan reads LogicalRDD leaves
+      // and the build subtrees live in CacheBook's recorded build plans —
+      // append the build plans of every memo the query touched so the
+      // captured file carries the full structural evidence (the
+      // PlanShapeSpec planWithBuilds discipline, in the audit tool).
+      val withBuilds = sys.env.get("GRAFT_PLANS_WITH_BUILDS").contains("1")
+      names.foreach { n =>
+        println(s"\n========== $n ==========")
+        if (withBuilds) {
+          val (df, touched) = graft.CacheBook.traced {
+            SparkEntry.queries(n)(spark, sfDir)
+          }
+          println(df.queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
+          touched.foreach { case (sc, nm) =>
+            println(s"---------- build plan: $sc/$nm ----------")
+            println(graft.CacheBook.buildPlan(spark, sc, nm))
+          }
+        } else
+          println(SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
+      }
     }
-    spark.stop()
   }
 }

@@ -1,10 +1,5 @@
 package graft.tools
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
-
 /** One-off diagnostic runner: replay a named query sequence with
   * optional whole-scope releases interleaved (the r11 bench cascade),
   * reporting per-step (wall, jobs, cpuSec) — the tool behind the
@@ -13,53 +8,36 @@ import org.apache.spark.sql.SparkSession
 object Rca {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // stage-level cpu attribution: SPARK_GRAFT_EVENTLOG=<dir> writes the
-    // standard event log there (sum per-stage Executor CPU Time offline)
-    val spark = sys.env.get("SPARK_GRAFT_EVENTLOG").fold(b0)(d =>
-        b0.config("spark.eventLog.enabled", "true")
-          .config("spark.eventLog.dir", d))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // fail fast on a typo'd query name BEFORE replaying anything — a
     // NoSuchElementException mid-sequence would discard the expensive
     // session state the run was meant to diagnose (the Verify rule)
     val unknown = args.filterNot(a =>
       a.startsWith("RELEASE:") || a == "GC" || graft.SparkEntry.queries.contains(a))
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val jobs = new AtomicLong; val cpuNs = new AtomicLong
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-        Option(t.taskMetrics).foreach(m => cpuNs.addAndGet(m.executorCpuTime)); ()
+    // stage-level cpu attribution: SPARK_GRAFT_EVENTLOG=<dir> writes the
+    // standard event log there (sum per-stage Executor CPU Time offline)
+    val eventLog = sys.env.get("SPARK_GRAFT_EVENTLOG").toSeq.flatMap(d =>
+      Seq("spark.eventLog.enabled" -> "true", "spark.eventLog.dir" -> d))
+    graft.Sessions.run(eventLog: _*) { spark =>
+      Seq("region", "nation", "customer", "supplier", "part", "orders",
+        "lineitem", "events", "documents", "embeddings").foreach { t =>
+        try spark.read.parquet(s"$sfDir/$t.parquet").limit(256).collect()
+        catch { case _: Throwable => () }
       }
-    })
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").limit(256).collect()
-      catch { case _: Throwable => () }
+      args.foreach {
+        case s if s.startsWith("RELEASE:") =>
+          graft.CacheBook.release(spark, s.stripPrefix("RELEASE:"))
+          System.gc()
+          println(s"[rca] released ${s.stripPrefix("RELEASE:")}")
+        case "GC" => System.gc(); println("[rca] gc")
+        case name =>
+          val (wall, m) = graft.JobMeter.measure(spark.sparkContext) {
+            val t0 = System.nanoTime()
+            graft.SparkEntry.queries(name)(spark, sfDir).count()
+            (System.nanoTime() - t0) / 1e9
+          }
+          println(f"[rca] $name%-28s wall=$wall%7.2f jobs=${m.jobs}%4d cpu=${m.cpuSec}%7.2f")
+      }
     }
-    args.foreach {
-      case s if s.startsWith("RELEASE:") =>
-        graft.CacheBook.release(spark, s.stripPrefix("RELEASE:"))
-        System.gc()
-        println(s"[rca] released ${s.stripPrefix("RELEASE:")}")
-      case "GC" => System.gc(); println("[rca] gc")
-      case name =>
-        org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-        val (j0, c0) = (jobs.get(), cpuNs.get())
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, sfDir).count()
-        val wall = (System.nanoTime() - t0) / 1e9
-        org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-        println(f"[rca] $name%-28s wall=$wall%7.2f jobs=${jobs.get() - j0}%4d cpu=${(cpuNs.get() - c0) / 1e9}%7.2f")
-    }
-    spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.Tables
 import graft.operators.{SliceRoot, Slicer}
 import graft.plans.{SchemaConfig, SchemaGraph}
@@ -90,32 +88,24 @@ object SliceDump {
         val cfg = graft.functions.ScrubConfig.fromJson(readFile(p))
         cfg.apply(_, _)
       }.getOrElse((_, df) => df)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    val result = new Slicer(graph, t => Tables.load(spark, sfDir, t))
-      .run(roots)
-    SliceWriter.write(result, outDir, scrub,
-      format = sys.env.getOrElse("SPARK_GRAFT_SLICE_FORMAT", "parquet"))
-    SqlWriter.write(result, outDir, scrub)
-    val seqs = result.sequences.collect()
-      .flatMap(r => if (r.isNullAt(1)) None else Some(r.getString(0) -> r.getLong(1))).toMap
-    RestoreWriter.write(graph, outDir, seqs, s"$outDir/restore.sql",
-      result.keys.keySet, transaction, disableTriggers, jobs)
-    // schema sections (pre-data CREATE TABLEs, post-data constraints) so
-    // the archive restores into an empty database; typed from the
-    // scrubbed schemas, like the data
-    SliceWriter.writeSchema(result, graph, outDir, scrub)
-    // reference-parity single-archive output (slice_db ZIP-of-segments)
-    if (sys.env.get("SPARK_GRAFT_SLICE_ZIP").contains("1"))
-      SliceWriter.zip(outDir, s"$outDir.zip")
-    println(s"slice written to $outDir: tables=${result.keys.keys.toSeq.sorted.mkString(",")}")
-    spark.stop()
+    graft.Sessions.run() { spark =>
+      val result = new Slicer(graph, t => Tables.load(spark, sfDir, t))
+        .run(roots)
+      SliceWriter.write(result, outDir, scrub,
+        format = sys.env.getOrElse("SPARK_GRAFT_SLICE_FORMAT", "parquet"))
+      SqlWriter.write(result, outDir, scrub)
+      val seqs = result.sequences.collect()
+        .flatMap(r => if (r.isNullAt(1)) None else Some(r.getString(0) -> r.getLong(1))).toMap
+      RestoreWriter.write(graph, outDir, seqs, s"$outDir/restore.sql",
+        result.keys.keySet, transaction, disableTriggers, jobs)
+      // schema sections (pre-data CREATE TABLEs, post-data constraints) so
+      // the archive restores into an empty database; typed from the
+      // scrubbed schemas, like the data
+      SliceWriter.writeSchema(result, graph, outDir, scrub)
+      // reference-parity single-archive output (slice_db ZIP-of-segments)
+      if (sys.env.get("SPARK_GRAFT_SLICE_ZIP").contains("1"))
+        SliceWriter.zip(outDir, s"$outDir.zip")
+      println(s"slice written to $outDir: tables=${result.keys.keys.toSeq.sorted.mkString(",")}")
+    }
   }
 }

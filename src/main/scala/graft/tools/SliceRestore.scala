@@ -80,53 +80,48 @@ object SliceRestore {
 
   def main(args: Array[String]): Unit = {
     val sliceDir = resolve(args(0))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    var failed = false
-    validate(spark, sliceDir).foreach { case (id, expected, actual) =>
-      val ok = actual == expected
-      if (!ok) failed = true
-      println(s"[restore] $id: manifest=$expected data=$actual ${if (ok) "OK" else "MISMATCH"}")
-    }
-    // optional FK-closure audit: SliceRestore <dirOrZip> <graph.json>
-    val positional = args.zipWithIndex.filter { case (a, i) =>
-      !a.startsWith("--") && (i == 0 || !args(i - 1).startsWith("--"))
-    }.map(_._1)
-    val graphOpt = positional.drop(1).headOption.map(p =>
-      graft.plans.SchemaConfig.fromJson(
-        java.nio.file.Files.readString(java.nio.file.Paths.get(p))))
-    graphOpt.foreach { graph =>
-      validateRefs(spark, graph, sliceDir).foreach { case (id, orphans) =>
-        if (orphans > 0) failed = true
-        println(s"[restore] ref $id: orphans=$orphans ${if (orphans == 0) "OK" else "BROKEN"}")
+    val broken = graft.Sessions.run() { spark =>
+      var failed = false
+      validate(spark, sliceDir).foreach { case (id, expected, actual) =>
+        val ok = actual == expected
+        if (!ok) failed = true
+        println(s"[restore] $id: manifest=$expected data=$actual ${if (ok) "OK" else "MISMATCH"}")
       }
+      // optional FK-closure audit: SliceRestore <dirOrZip> <graph.json>
+      val positional = args.zipWithIndex.filter { case (a, i) =>
+        !a.startsWith("--") && (i == 0 || !args(i - 1).startsWith("--"))
+      }.map(_._1)
+      val graphOpt = positional.drop(1).headOption.map(p =>
+        graft.plans.SchemaConfig.fromJson(
+          java.nio.file.Files.readString(java.nio.file.Paths.get(p))))
+      graphOpt.foreach { graph =>
+        validateRefs(spark, graph, sliceDir).foreach { case (id, orphans) =>
+          if (orphans > 0) failed = true
+          println(s"[restore] ref $id: orphans=$orphans ${if (orphans == 0) "OK" else "BROKEN"}")
+        }
+      }
+      // --apply <jdbcUrl>: dependency-graph-parallel load into the target
+      def flag(name: String): Option[String] = {
+        val i = args.indexOf(name)
+        if (i < 0) None
+        else if (i + 1 >= args.length)
+          sys.error(s"$name requires a value")
+        else Some(args(i + 1))
+      }
+      flag("--apply").foreach { url =>
+        val graph = graphOpt.getOrElse(
+          sys.error("--apply needs the graph argument (the FK wait graph)"))
+        val jobs = flag("--jobs").map(v => v.toIntOption.getOrElse(
+          sys.error(s"--jobs must be an integer, got '$v'"))).getOrElse(4)
+        val props = new java.util.Properties()
+        flag("--driver").foreach(props.setProperty("driver", _))
+        val loads = RestoreExecutor(spark, graph, sliceDir, url, props, jobs,
+          includeSchema = args.contains("--include-schema"))
+        loads.sortBy(_.startNanos).foreach(l =>
+          println(s"[restore] loaded ${l.table}: ${l.rows} rows"))
+      }
+      failed
     }
-    // --apply <jdbcUrl>: dependency-graph-parallel load into the target
-    def flag(name: String): Option[String] = {
-      val i = args.indexOf(name)
-      if (i < 0) None
-      else if (i + 1 >= args.length)
-        sys.error(s"$name requires a value")
-      else Some(args(i + 1))
-    }
-    flag("--apply").foreach { url =>
-      val graph = graphOpt.getOrElse(
-        sys.error("--apply needs the graph argument (the FK wait graph)"))
-      val jobs = flag("--jobs").map(v => v.toIntOption.getOrElse(
-        sys.error(s"--jobs must be an integer, got '$v'"))).getOrElse(4)
-      val props = new java.util.Properties()
-      flag("--driver").foreach(props.setProperty("driver", _))
-      val loads = RestoreExecutor(spark, graph, sliceDir, url, props, jobs,
-        includeSchema = args.contains("--include-schema"))
-      loads.sortBy(_.startNanos).foreach(l =>
-        println(s"[restore] loaded ${l.table}: ${l.rows} rows"))
-    }
-    spark.stop()
-    if (failed) sys.exit(1)
+    if (broken) sys.exit(1)
   }
 }

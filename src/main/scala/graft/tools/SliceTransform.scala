@@ -124,14 +124,6 @@ object SliceTransform {
     p.pepper.foreach(graft.functions.Transforms.setPepper)
     val cfg = ScrubConfig.fromJson(
       Files.readString(Paths.get(p.scrubPath)))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // ZIP in/out: the reference transforms INSIDE its archive; here the
     // archive halves reuse the SliceWriter zip round-trip
     val inDir =
@@ -143,9 +135,8 @@ object SliceTransform {
     val outDir =
       if (outIsZip) Files.createTempDirectory("graft-rescrub-out").toString
       else out
-    transform(spark, inDir, outDir, cfg, p.format)
+    graft.Sessions.run()(transform(_, inDir, outDir, cfg, p.format))
     if (outIsZip) SliceWriter.zip(outDir, out)
     println(s"re-scrubbed slice written to $out: tables=${tablesIn(inDir).mkString(",")}")
-    spark.stop()
   }
 }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Diagnostic runner for the streaming entries: replays named queries
@@ -13,40 +12,32 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
 object StProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
-        println(s"[stprobe] started ${e.name} at ${System.nanoTime() / 1000000}ms")
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        val d = p.durationMs
-        println(s"[stprobe] batch=${p.batchId} rows=${p.numInputRows} " +
-          s"durations=${d}")
-        Option(p.stateOperators).foreach(_.foreach { so =>
-          println(s"[stprobe]   state op=${so.operatorName} commitMs=${so.commitTimeMs} " +
-            s"rowsTotal=${so.numRowsTotal} memUsed=${so.memoryUsedBytes}")
-        })
+    graft.Sessions.run() { spark =>
+      spark.streams.addListener(new StreamingQueryListener {
+        override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+          println(s"[stprobe] started ${e.name} at ${System.nanoTime() / 1000000}ms")
+        override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
+          val p = e.progress
+          val d = p.durationMs
+          println(s"[stprobe] batch=${p.batchId} rows=${p.numInputRows} " +
+            s"durations=${d}")
+          Option(p.stateOperators).foreach(_.foreach { so =>
+            println(s"[stprobe]   state op=${so.operatorName} commitMs=${so.commitTimeMs} " +
+              s"rowsTotal=${so.numRowsTotal} memUsed=${so.memoryUsedBytes}")
+          })
+        }
+        override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+          println(s"[stprobe] terminated at ${System.nanoTime() / 1000000}ms")
+      })
+      Seq("events", "documents", "embeddings", "orders").foreach { t =>
+        try spark.read.parquet(s"$sfDir/$t.parquet").limit(256).collect()
+        catch { case _: Throwable => () }
       }
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        println(s"[stprobe] terminated at ${System.nanoTime() / 1000000}ms")
-    })
-    Seq("events", "documents", "embeddings", "orders").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").limit(256).collect()
-      catch { case _: Throwable => () }
+      args.foreach { name =>
+        val t0 = System.nanoTime()
+        graft.SparkEntry.queries(name)(spark, sfDir).count()
+        println(f"[stprobe] $name%-22s wall=${(System.nanoTime() - t0) / 1e9}%7.2f")
+      }
     }
-    args.foreach { name =>
-      val t0 = System.nanoTime()
-      graft.SparkEntry.queries(name)(spark, sfDir).count()
-      println(f"[stprobe] $name%-22s wall=${(System.nanoTime() - t0) / 1e9}%7.2f")
-    }
-    spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.SparkEntry
 
 /** Times one query twice (cold = plan+codegen+run, warm = run) to
@@ -9,19 +7,12 @@ import graft.SparkEntry
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name) = args.take(2)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    (1 to 3).foreach { i =>
-      val t0 = System.nanoTime()
-      val n = SparkEntry.queries(name)(spark, sfDir).count()
-      println(f"[timequery] run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+    graft.Sessions.run() { spark =>
+      (1 to 3).foreach { i =>
+        val t0 = System.nanoTime()
+        val n = SparkEntry.queries(name)(spark, sfDir).count()
+        println(f"[timequery] run$i: ${(System.nanoTime() - t0) / 1e9}%.2f s ($n rows)")
+      }
     }
-    spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.functions.Transforms
@@ -31,15 +31,9 @@ object TransformField {
     val Array(name, value) = rest.take(2)
     val f = transforms.getOrElse(name,
       sys.error(s"unknown transform '$name'; one of ${transforms.keys.toSeq.sorted.mkString(", ")}"))
-    // reuse a live session (tests, notebooks) and leave it running;
-    // stop only a session this invocation created
-    val hadActive = SparkSession.getActiveSession
-      .orElse(SparkSession.getDefaultSession).isDefined
-    val spark = SparkSession.builder().master("local[1]")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    import spark.implicits._
-    println(Seq(value).toDF("v").select(f(col("v")).cast("string")).as[String].head())
-    if (!hadActive) spark.stop()
+    graft.Sessions.run() { spark =>
+      import spark.implicits._
+      println(Seq(value).toDF("v").select(f(col("v")).cast("string")).as[String].head())
+    }
   }
 }

@@ -1,9 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 /** The bench retry contract after the round-12 structural fix:
   *
   *  1. retryKind is EVIDENCE-based — "cache-read" iff the traced warm
@@ -17,19 +13,8 @@ class BenchRetrySpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
 
-  private def jobsOf(body: => Unit): Long = {
-    val jobs = new AtomicLong
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { body; org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get()
-  }
+  private def jobsOf(body: => Unit): Long =
+    JobMeter.measure(spark.sparkContext)(body)._2.jobs
 
   test("writesOver: the committed-writes rule fires above 2x + 8 and not below") {
     // the round-14 mechanical reading rule, pinned: 2x absorbs plan-

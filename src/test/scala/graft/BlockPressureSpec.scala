@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.storage.StorageLevel
 
 /** The round-13 window anomaly as a regression gate: the d/s/m family
@@ -23,41 +20,17 @@ import org.apache.spark.storage.StorageLevel
   */
 class BlockPressureSpec extends SparkSpec {
 
-  private final class Metrics extends SparkListener {
-    val cpuNs = new AtomicLong
-    val rddWrites = new AtomicLong
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      Option(t.taskMetrics).foreach { m =>
-        cpuNs.addAndGet(m.executorCpuTime)
-        rddWrites.addAndGet(
-          org.apache.spark.graftbridge.ListenerBridge.rddBlockWrites(m))
-      }
-      ()
-    }
-  }
-
-  private def measured[A](m: Metrics)(body: => A): (Double, Long) = {
-    org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-    val (c0, w0) = (m.cpuNs.get(), m.rddWrites.get())
-    body
-    org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(spark.sparkContext)
-    ((m.cpuNs.get() - c0) / 1e9, m.rddWrites.get() - w0)
-  }
+  private def measured(name: String): JobMeter.Reading =
+    JobMeter.measure(spark.sparkContext) {
+      SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
+    }._2
 
   test("r13-weak entries stay probe-priced on a warm pass under storage eviction") {
-    val dir = "/root/testdata/sf0.001"
     val entries = Seq("d_cluster_stars", "s_dbscan", "m_scene_dedup_inc")
-    val metrics = new Metrics
-    spark.sparkContext.addSparkListener(metrics)
     try {
       // first touch: builds every memo the entries share (edges, star
       // labels, scene sigs, the dbscan result memo)
-      val firstCpu = entries.map { n =>
-        val (cpu, _) = measured(metrics) {
-          SparkEntry.queries(n)(spark, dir).count(); ()
-        }
-        n -> cpu
-      }.toMap
+      val firstCpu = entries.map(n => n -> measured(n).cpuSec).toMap
       // storage eviction: fill the store with a MEMORY_ONLY hog sized
       // past the storage pool, so LRU evicts/demotes the standing memo
       // blocks (MEMORY_AND_DISK blocks move to disk; a MEMORY_ONLY or
@@ -75,9 +48,7 @@ class BlockPressureSpec extends SparkSpec {
         // warm pass under pressure: every entry must read standing
         // state — near-zero writes, cpu a fraction of its build
         entries.foreach { n =>
-          val (cpu, writes) = measured(metrics) {
-            SparkEntry.queries(n)(spark, dir).count(); ()
-          }
+          val JobMeter.Reading(_, cpu, writes) = measured(n)
           assert(writes <= 8,
             s"$n warm pass re-stored $writes blocks — a memo is being " +
               "silently recomputed (the r13 d_cluster_stars signature)")
@@ -86,9 +57,6 @@ class BlockPressureSpec extends SparkSpec {
               "the warm pass is re-running its build")
         }
       } finally hog.unpersist(true)
-    } finally {
-      spark.sparkContext.removeSparkListener(metrics)
-      CacheBook.releaseAll(spark)
-    }
+    } finally CacheBook.releaseAll(spark)
   }
 }

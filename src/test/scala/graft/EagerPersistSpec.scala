@@ -107,6 +107,30 @@ class EagerPersistSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"memo mechanisms outside CacheBook: ${offenders.mkString(", ")}")
   }
 
+  test("Sessions builds every session and JobMeter owns every listener in src/main") {
+    // a builder chain elsewhere drifts in width, zone and conf, and its
+    // getOrCreate re-configures whatever session is already running (the
+    // conf.set guard below cannot see a .config(...) chain)
+    val owned = Seq(
+      "SparkSession.builder" -> "Sessions.scala",
+      "SPARK_GRAFT_CPUS" -> "Sessions.scala",
+      "extends SparkListener" -> "JobMeter.scala",
+      "new SparkListener" -> "JobMeter.scala",
+      // operators keep their frames through CacheBook.keep
+      "register: (() => Unit) => Unit" -> "")
+    val offenders = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val file = p.getFileName.toString
+        Files.readAllLines(p).asScala.zipWithIndex.flatMap { case (l, i) =>
+          owned.collect { case (text, owner) if l.contains(text) && file != owner =>
+            s"$file:${i + 1} ($text)"
+          }
+        }
+      }.toList
+    assert(offenders.isEmpty, s"outside their one owner: ${offenders.mkString(", ")}")
+  }
+
   test("Profiles.narrow is the only writer of the narrow profile's keys in src/main") {
     // a lock, a save/set/restore copy or an env knob beside the one
     // refcounted scope would be a second mechanism: two overlapping

@@ -24,8 +24,9 @@ class KcorePeelSpec extends SparkSpec {
     } yield (a, b)
     val edges = (cliqueEdges ++ Seq((10L, 11L), (20L, 1L), (20L, 2L),
       (20L, 3L), (20L, 10L))).toDF("src", "nbr")
-    val got = KcorePeel.run(TriangleCount.canonical(edges), 4, 10, _ => ())
+    val got = KcorePeel.run(TriangleCount.canonical(edges), 4, 10, "t_kcore")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    CacheBook.release(spark, "t_kcore")
     val expected = (1L to 5L).map(_ -> 0).toMap ++
       Map(10L -> 1, 11L -> 1, 20L -> 2)
     assert(got == expected)

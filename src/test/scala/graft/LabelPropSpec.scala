@@ -11,11 +11,10 @@ class LabelPropSpec extends SparkSpec {
   import graft.operators.{LabelProp, TriangleCount}
 
   private def run(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
-    val thunks = collection.mutable.ArrayBuffer.empty[() => Unit]
     val got = LabelProp.run(
-        TriangleCount.canonical(edges.toDF("src", "nbr")), iters, thunks += _)
+        TriangleCount.canonical(edges.toDF("src", "nbr")), iters, "t_lpa")
       .as[(Long, Long)].collect().toMap
-    thunks.foreach(_())
+    CacheBook.release(spark, "t_lpa")
     got
   }
 

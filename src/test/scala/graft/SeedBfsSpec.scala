@@ -17,8 +17,9 @@ class SeedBfsSpec extends SparkSpec {
     // seeds {0, 1}; chain 1-2-3; 0-4; island {10, 11}
     val edges = Seq((0L, 4L), (1L, 2L), (2L, 3L), (10L, 11L))
       .toDF("src", "nbr")
-    val got = SeedBfs.run(TriangleCount.canonical(edges), col("vec_id") < 2, 9, _ => ())
+    val got = SeedBfs.run(TriangleCount.canonical(edges), col("vec_id") < 2, 9, "t_bfs")
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    CacheBook.release(spark, "t_bfs")
     assert(got == Map(0L -> 0, 1L -> 0, 4L -> 1, 2L -> 1, 3L -> 2,
       10L -> -1, 11L -> -1))
   }

@@ -9,19 +9,11 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // per-task cached-block write statuses feed BlockPressureSpec's
-      // rddWrites channel (same conf the bench harness runs under)
-      .config("spark.taskMetrics.trackUpdatedBlockStatuses", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // width 4 whatever SPARK_GRAFT_CPUS says: the suite's plans and job
+  // counts are pinned at this width
+  lazy val session: SparkSession = Sessions.local(4,
+    "spark.app.name" -> "graft-test",
+    // per-task cached-block write statuses feed BlockPressureSpec's
+    // rddWrites channel (same conf the bench harness runs under)
+    "spark.taskMetrics.trackUpdatedBlockStatuses" -> "true")
 }

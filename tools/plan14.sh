@@ -11,6 +11,8 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens=java.base/$p=ALL-UNNAMED"
 done
+# PLANS.md was captured at shuffle width 8
+export SPARK_GRAFT_CPUS=8
 java -Xmx8g $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -cp "$CP" graft.tools.PlanAudit /root/testdata/sf0.01 "$@" > /tmp/plan14_raw.txt 2>/dev/null
 python3 - "$TAG" "$@" <<'PY'
