@@ -26,18 +26,19 @@ import org.apache.spark.sql.execution.LogicalRDD
   *    scope is.
   *
   * Scopes are the query-family prefixes ("d", "s", "slice", "x", ...).
-  * [[Bench]] releases a scope as soon as its last consumer family has
-  * run, and any caller can [[releaseAll]] between corpora. Release both
+  * A caller [[release]]s a scope once its last consumer has run (the
+  * standalone CuratePipeline frees the "d" memos it built), and any
+  * caller can [[releaseAll]] between corpora. Release both
   * frees the blocks and evicts the cell, so a later call rebuilds from
   * source instead of reading through a dead checkpoint (an unpersisted
   * localCheckpoint has no lineage to recompute from).
   *
-  * Names serve the bench's warm retry: every memo access is recorded by
-  * [[traced]], [[liveNamed]] says which memos were warm before a retry,
-  * and [[releaseNamed]] drops exactly the memos the retried query read,
-  * with the frames their builds kept, leaving every other memo standing.
-  * A failed build registers nothing: its kept frames are freed on the
-  * spot, so no phantom name outlives it.
+  * Names make the memos observable: [[traced]] records which memos a
+  * body read (PlanAudit and the plan-shape specs pair each with its
+  * recorded build plan), and [[liveNamed]] lists the memos standing on
+  * a session (perfbench reports how many outlive a request). A failed
+  * build registers nothing: its kept frames are freed on the spot, so
+  * no phantom name outlives it.
   */
 object CacheBook {
   private final case class Entry(name: String, thunk: () => Unit)
@@ -54,8 +55,8 @@ object CacheBook {
 
   private val cells = mutable.Map.empty[(SparkSession, String, String, Any), Cell]
 
-  // Active memo-access trace (at most one; the bench is the only tracer
-  // and runs queries serially). A plain shared buffer — NOT a
+  // Active memo-access trace (at most one: traced is not reentrant). A
+  // plain shared buffer — NOT a
   // ThreadLocal — because family builds fan out on driver threads and
   // those builds' accesses belong to the traced query.
   private var traceBuf: mutable.LinkedHashSet[(String, String)] = null
@@ -111,16 +112,6 @@ object CacheBook {
     df
   }
 
-  /** Run `body` as the build of the named memo (scope, name): releases
-    * registered on this thread for the same (session, scope) attach to
-    * the name once `body` returns, and are run at once if it throws. */
-  private[graft] def building[T](s: SparkSession, scope: String, name: String)(
-      body: => T): T = {
-    val (v, kept) = attached(s, scope, name)(body)
-    add(s, scope, kept)
-    v
-  }
-
   private def attached[T](s: SparkSession, scope: String, name: String)(
       body: => T): (T, List[Entry]) = {
     val b = new Build(s, scope, name)
@@ -148,8 +139,8 @@ object CacheBook {
       case None => add(s, scope, List(Entry("", thunk)))
     }
 
-  /** Register a NAMED release thunk directly. Several thunks may share
-    * one name; [[releaseNamed]] runs them together. */
+  /** Register a NAMED release thunk directly: it runs when its scope is
+    * released, and [[liveNamed]] lists it until then. */
   def register(s: SparkSession, scope: String, name: String)(
       thunk: () => Unit): Unit = {
     require(name.nonEmpty, "named registration requires a non-empty name")
@@ -157,8 +148,8 @@ object CacheBook {
   }
 
   /** Run `body` with memo-access tracing active; returns (result,
-    * accessed (scope, name) pairs in first-access order). Not reentrant
-    * — the bench runs queries serially and is the only caller. */
+    * accessed (scope, name) pairs in first-access order). Not reentrant:
+    * PlanAudit and the plan-shape specs trace one query at a time. */
   def traced[T](body: => T): (T, Seq[(String, String)]) = {
     val buf = mutable.LinkedHashSet.empty[(String, String)]
     synchronized {
@@ -174,24 +165,6 @@ object CacheBook {
   def release(s: SparkSession, scope: String): Unit =
     runAll(synchronized { book.remove((s, scope)).map(_.toList).getOrElse(Nil) })
 
-  /** Run and drop ONLY the named entries in `names` ((scope, name)
-    * pairs), leaving every other registration — in the same scopes and
-    * elsewhere — standing. The bench's clean retry releases exactly the
-    * memos the retried query touched; the clean re-run rebuilds and
-    * re-registers them, so no other query's warm state moves. */
-  def releaseNamed(s: SparkSession, names: Set[(String, String)]): Unit = {
-    if (names.isEmpty) return
-    runAll(synchronized {
-      val out = mutable.ListBuffer.empty[Entry]
-      for (((sess, scope), es) <- book if sess eq s) {
-        val (hit, rest) = es.partition(e => e.name.nonEmpty && names((scope, e.name)))
-        out ++= hit
-        es.clear(); es ++= rest
-      }
-      out.toList
-    })
-  }
-
   /** Release every scope registered on the session. */
   def releaseAll(s: SparkSession): Unit = {
     val scopes = synchronized { book.keys.filter(_._1 eq s).map(_._2).toList }
@@ -203,7 +176,7 @@ object CacheBook {
     synchronized { book.keys.filter(_._1 eq s).map(_._2).toList.sorted }
 
   /** The NAMED memos currently live on the session, as (scope, name)
-    * pairs — the bench's "what was warm before this retry" snapshot. */
+    * pairs; perfbench reports how many stand after a request. */
   def liveNamed(s: SparkSession): Set[(String, String)] = synchronized {
     book.iterator.collect { case ((sess, scope), es) if sess eq s =>
       es.iterator.filter(_.name.nonEmpty).map(e => (scope, e.name))

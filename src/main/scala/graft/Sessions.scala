@@ -44,12 +44,12 @@ object Sessions {
       }
     }
 
-  /** Run `body` on [[local]]`(cpus, conf*)`, and stop the session
-    * afterwards — also when `body` throws — only if this call built it. */
-  def run[T](conf: (String, String)*)(body: SparkSession => T): T = {
+  /** Run `body` on [[local]]`(cpus)`, and stop the session afterwards —
+    * also when `body` throws — only if this call built it. */
+  def run[T](body: SparkSession => T): T = {
     val (spark, built) = synchronized {
       val before = existing
-      (local(cpus, conf: _*), before.isEmpty)
+      (local(cpus), before.isEmpty)
     }
     try body(spark)
     finally if (built) spark.stop()

@@ -13,7 +13,7 @@ object Verify {
     val only = args.drop(2).toSet
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    Sessions.run() { spark =>
+    Sessions.run { spark =>
       new java.io.File(outDir).mkdirs()
       // dump queries on a small thread pool: Spark schedules the jobs
       // concurrently, so independent queries overlap their idle phases

@@ -199,7 +199,7 @@ object Dedup {
     * 1.5M-md5 build runs once, not three times. Materialized EAGERLY:
     * every consumer is a self-join, and a lazy persist lets the join
     * branches race and compute the build twice before either populates
-    * the cache. All build-side dedup memos live in bench scope "d"
+    * the cache. All build-side dedup memos live in scope "d"
     * (released after the d_* family); the final label table lives in
     * scope "x" (x_canon, the alphabetically-late consumer, still needs
     * it). */
@@ -1149,9 +1149,10 @@ object Dedup {
   /** Memoized star-contraction labels over [[clusterEdges]] — the
     * d_cluster_stars result relation. runStars returns an eager local
     * checkpoint, so the memo holds materialized blocks; the memo exists
-    * so a bench warm retry reads standing state instead of silently
+    * so a warm re-run reads standing state instead of silently
     * re-running the whole per-round checkpoint loop (the r13 `weak`
-    * signature: flat jobs, 70 re-written blocks, nothing to read). */
+    * signature: flat jobs, 70 re-written blocks, nothing to read;
+    * BlockPressureSpec pins it). */
   private def starsLabels(s: SparkSession, dir: String): DataFrame =
     graft.CacheBook.memo(s, "d", "stars_labels", dir) {
       graft.CacheBook.keep(s, "d")(ConnectedComponents.runStars(clusterEdges(s, dir)))

@@ -74,23 +74,6 @@ object Similarity {
     s"(SELECT greatest($NCentroidsFloor, " +
       s"CAST(floor(sqrt(CAST(count(*) AS DOUBLE))) AS BIGINT)) FROM $rel)"
 
-  /** SPARK_GRAFT_NCENTROIDS overrides the derived K — SCALE EXPERIMENTS
-    * only (the oracles derive, so a gate run under the override will
-    * hash-mismatch LOUDLY instead of silently passing on an interpolated
-    * constant). Set-but-unparsable fails hard; an active override warns
-    * once per JVM (r12 ADVICE: a silently-inherited override in a
-    * production session was undetectable). */
-  private val centroidOverride: Option[Int] = sys.env.get("SPARK_GRAFT_NCENTROIDS").map { v =>
-    val k = v.toIntOption.getOrElse(throw new IllegalArgumentException(
-      s"SPARK_GRAFT_NCENTROIDS is set but unparsable: '$v'"))
-    require(k > 0, s"SPARK_GRAFT_NCENTROIDS must be positive, got $k")
-    k
-  }
-  private lazy val overrideWarned: Unit = centroidOverride.foreach(k =>
-    System.err.println(s"[graft] WARNING: SPARK_GRAFT_NCENTROIDS=$k overrides " +
-      "the data-derived centroid count — scale-experiment mode; oracle " +
-      "hash-matches are NOT expected under an override"))
-
   /** Memoized corpus vector count — one bounded scalar action feeding
     * every derived-K site (the newDocThreshold convention). */
   private[graft] def vecCount(s: SparkSession, dir: String): Long =
@@ -98,14 +81,12 @@ object Similarity {
 
   /** Derived centroid count for the corpus-level IVF index. */
   private[graft] def nCentroids(s: SparkSession, dir: String): Int =
-    centroidOverride.map { k => overrideWarned; k }
-      .getOrElse(kFor(vecCount(s, dir)))
+    kFor(vecCount(s, dir))
 
   /** Derived centroid count for the TOKEN-level index (PqM tokens per
     * vector, so the population is 8N). */
   private[graft] def nCentroidsTok(s: SparkSession, dir: String): Int =
-    centroidOverride.map { k => overrideWarned; k }
-      .getOrElse(kFor(PqM.toLong * vecCount(s, dir)))
+    kFor(PqM.toLong * vecCount(s, dir))
 
   /** Probe count for the token index: as K(N) grows, a FIXED nprobe
     * probes a shrinking fraction of the space and recall decays (the
@@ -742,9 +723,7 @@ object Similarity {
           .select(col("q"), col("t"), col("cid"),
             subDot(col("tv"), col("cv")).as("pdot"))
           .withColumn("prn", row_number().over(wP))
-          // the K the STANDING index was built with (override-aware
-          // via nCentroidsTok) — deriving from the corpus count alone
-          // would skew the probed fraction under SPARK_GRAFT_NCENTROIDS
+          // the K the STANDING index was built with
           .filter(col("prn") <= nProbeTok(nCentroidsTok(s, dir)))
           .select("q", "cid"))
       // bounded collect (≤ NQ·8·np cids) parameterizes partition pruning
@@ -2373,15 +2352,12 @@ object Similarity {
     * 78 → 10 s decade walls with the anchor). The keyed repartition
     * satisfies the assignment window's clustering requirement exactly
     * (no second exchange survives) and costs one narrow-row shuffle.
-    * Env-tunable: a cluster sizes it to cores like every width knob
-    * here (DEPLOY.md); the local default is the session parallelism.
-    * Local trade, measured both ways: at 32 SMT threads the spread
-    * dense loop holds sibling hyperthreads, inflating the CPU-TIME
-    * channel ~2-3x at FLAT sf0.1 wall (the budgets price it); at 8
-    * threads (the driver's scaling run) it is neutral-to-better. */
+    * The width is the session parallelism. Local trade, measured both
+    * ways: at 32 SMT threads the spread dense loop holds sibling
+    * hyperthreads, inflating the CPU-TIME channel ~2-3x at FLAT sf0.1
+    * wall; at 8 threads it is neutral-to-better. */
   private[graft] def assignWidth(s: SparkSession): Int =
-    sys.env.get("SPARK_GRAFT_ASSIGN_PARTITIONS").flatMap(_.toIntOption)
-      .getOrElse(s.sparkContext.defaultParallelism)
+    s.sparkContext.defaultParallelism
 
   /** Collect a (cid, cv, cn) centroid relation into a constant
     * [[graft.functions.CentroidBank]] — the same K≈√N rows the old
@@ -2455,9 +2431,8 @@ object Similarity {
       val (tNew, _) = oldSeed(s, dir)
       val oldToks = toksOf(e.filter(col("vec_id") < tNew))
       // K derives from the OLD token population (the count the
-      // nightly build saw), override-aware like every draw site
-      val kOldTok = centroidOverride.map { k => overrideWarned; k }
-        .getOrElse(kFor(PqM.toLong * e.filter(col("vec_id") < tNew).count()))
+      // nightly build saw)
+      val kOldTok = kFor(PqM.toLong * e.filter(col("vec_id") < tNew).count())
       // EAGER localCheckpoints, not persists (the item-1 plan tax):
       // behind a persist every consumer of the standing cells
       // (s_tok_upsert's merge, st_tok_ingest's stream-static join)
@@ -2588,8 +2563,7 @@ object Similarity {
       val tNew = e.agg(max("vec_id")).head().getLong(0) * 4 / 5
       // the standing index predates the batch, so its K derives from
       // the OLD population (the count the nightly build saw)
-      val kOld = centroidOverride.map { k => overrideWarned; k }
-        .getOrElse(kFor(e.filter(col("vec_id") < tNew).count()))
+      val kOld = kFor(e.filter(col("vec_id") < tNew).count())
       // eager localCheckpoint, not persist: the K-row seed's lineage is
       // a full-corpus md5 sort, re-planned per consumer behind a persist
       val seed = graft.CacheBook.keep(s, "s")(

@@ -10,7 +10,9 @@ import graft.plans.SchemaGraph
   * constraints at restore.py:221-263).
   *
   * The script itself is metadata-sized (one section per table); the data
-  * volume stays in the parquet/sql segments it references.
+  * volume stays in the sql segments it includes. Every include is a
+  * relative `\ir sql/<table>.sql` ([[SqlWriter.writeTable]]'s index), so
+  * the script sits at the slice root and restores from any directory.
   */
 object RestoreWriter {
 
@@ -31,8 +33,7 @@ object RestoreWriter {
     *   Script emission is identical for any jobs value — the flag
     *   exists to validate the combination (SliceDump also validates it
     *   up front, before the slice runs). */
-  def restoreScript(graph: SchemaGraph, sliceDir: String,
-      sequences: Map[String, Long],
+  def restoreScript(graph: SchemaGraph, sequences: Map[String, Long],
       slicedTables: Set[String] = Set.empty,
       transaction: Boolean = true,
       disableTriggers: Boolean = false,
@@ -62,11 +63,11 @@ object RestoreWriter {
     if (deferred.nonEmpty && !disableTriggers)
       sb ++= s"SET CONSTRAINTS ALL DEFERRED; -- cycle tables: ${deferred.mkString(", ")}\n"
     order.foreach { case (t, isDeferred) =>
-      // cycle note on its own line: anything after the \i path would be
+      // cycle note on its own line: anything after the \ir path would be
       // parsed as extra psql meta-command arguments, not a comment
       if (isDeferred && !disableTriggers)
         sb ++= s"-- $t: constraints deferred (FK cycle)\n"
-      sb ++= s"\\i $sliceDir/sql/$t\n"
+      sb ++= s"\\ir sql/$t.sql\n"
     }
     if (disableTriggers)
       order.foreach { case (t, _) => sb ++= s"ALTER TABLE $t ENABLE TRIGGER ALL;\n" }
@@ -78,13 +79,19 @@ object RestoreWriter {
     sb.result()
   }
 
+  /** Write [[restoreScript]] to `outPath`, which must sit directly in
+    * `sliceDir`: the script's includes are relative to its own
+    * directory. */
   def write(graph: SchemaGraph, sliceDir: String, sequences: Map[String, Long],
       outPath: String, slicedTables: Set[String] = Set.empty,
       transaction: Boolean = true, disableTriggers: Boolean = false,
       jobs: Int = 1): Unit = {
-    Files.createDirectories(Paths.get(outPath).getParent)
-    Files.writeString(Paths.get(outPath),
-      restoreScript(graph, sliceDir, sequences, slicedTables,
+    val out = Paths.get(outPath).toAbsolutePath.normalize
+    require(out.getParent == Paths.get(sliceDir).toAbsolutePath.normalize,
+      s"restore script $outPath must sit at the slice root $sliceDir")
+    Files.createDirectories(out.getParent)
+    Files.writeString(out,
+      restoreScript(graph, sequences, slicedTables,
         transaction, disableTriggers, jobs))
   }
 }

@@ -1,5 +1,9 @@
 package graft.sources
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,7 +26,7 @@ object SqlWriter {
     val lit0: Column = f.dataType match {
       case StringType =>
         concat(lit("'"), regexp_replace(c, "'", "''"), lit("'"))
-      case TimestampType =>
+      case TimestampType | TimestampNTZType =>
         concat(lit("TIMESTAMP '"), date_format(c, "yyyy-MM-dd HH:mm:ss.SSSSSS"), lit("'"))
       case DateType =>
         concat(lit("DATE '"), date_format(c, "yyyy-MM-dd"), lit("'"))
@@ -44,15 +48,32 @@ object SqlWriter {
     df.select(concat(parts: _*).as("stmt"))
   }
 
-  /** One script directory per table, `<outDir>/sql/<table>`. The tables
-    * write concurrently on [[graft.Par]] (up to the context's
+  /** Write `df`'s INSERT statements to `<outDir>/sql/<table>/`, one
+    * part file per partition, in one job. psql cannot include a
+    * directory, so the script restore.sql includes is the index
+    * `<outDir>/sql/<table>.sql`: one `\ir <table>/<part>` line per part
+    * file, in sorted order, written on the driver. `\ir` resolves from
+    * the including file's directory, so the slice restores from any
+    * working directory and after it is moved or unzipped. */
+  def writeTable(df: DataFrame, table: String, outDir: String): Unit = {
+    insertStatements(df, table).write.mode("overwrite").text(s"$outDir/sql/$table")
+    val listing = Files.list(Paths.get(outDir, "sql", table))
+    val parts = try listing.iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("part-")).toSeq.sorted
+    finally listing.close()
+    Files.writeString(Paths.get(outDir, "sql", s"$table.sql"),
+      parts.map(p => s"\\ir $table/$p\n").mkString)
+    ()
+  }
+
+  /** [[writeTable]] for every table of the slice. The tables write
+    * concurrently on [[graft.Par]] (up to the context's
     * `defaultParallelism` at once); each table is still one job. */
   def write(result: SliceResult, outDir: String,
       scrub: (String, DataFrame) => DataFrame = (_, df) => df): Unit = {
     val rows = result.allRows
     graft.Par.each(rows.keys.toSeq.sorted) { table =>
-      insertStatements(scrub(table, rows(table)), table)
-        .write.mode("overwrite").text(s"$outDir/sql/$table")
+      writeTable(scrub(table, rows(table)), table, outDir)
     }
   }
 }

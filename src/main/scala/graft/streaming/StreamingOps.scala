@@ -75,11 +75,10 @@ object StreamingOps {
     * materialized result. This is a REAL streaming execution (source →
     * state store → sink), just over a finite input. */
   /** Throwaway session clone carrying the bounded-stream SQL conf —
-    * state-store width scoped to stream state volume (each store pays
-    * per-commit IO every micro-batch; at cluster scale the same knob is
-    * sized to throughput), background snapshot maintenance pushed out
-    * (pure IO on short bounded runs), and optionally the no-data-batch
-    * policy. A CLONE rather than set/restore on the shared session:
+    * state-store width 8, scoped to stream state volume (each store
+    * pays per-commit IO every micro-batch), background snapshot
+    * maintenance pushed out (pure IO on short bounded runs), and
+    * optionally the no-data-batch policy. A CLONE rather than set/restore on the shared session:
     * graft.Verify submits queries on a 4-thread pool, and a scoped conf
     * on the shared session races concurrent query starts (measured:
     * a leaked no-data-batch=false swallowed st_left_join's
@@ -87,8 +86,7 @@ object StreamingOps {
   private def streamSession(spark: SparkSession,
       noDataBatch: Boolean): SparkSession = {
     val ss = org.apache.spark.sql.graftbridge.SessionBridge.cloneSession(spark)
-    ss.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
+    ss.conf.set("spark.sql.shuffle.partitions", "8")
     ss.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
     // noDataBatch = false (round 15): a query whose every result row is
     // emitted EAGERLY in the data batch (inner stream-stream join,

@@ -17,7 +17,7 @@ object CorpusReport {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outFile = args.lift(1).getOrElse("corpus_report.json")
-    graft.Sessions.run() { spark =>
+    graft.Sessions.run { spark =>
       def rowsOf(name: String): Seq[Map[String, String]] = {
         val df = SparkEntry.queries(name)(spark, sfDir)
         val cols = df.columns
@@ -27,7 +27,7 @@ object CorpusReport {
           }.toMap)
       }
       // control chars must be escaped too (a raw newline inside a string
-      // value is invalid JSON — same rule Bench's serializer applies)
+      // value is invalid JSON)
       def jstr(v: String): String =
         "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"")
           .replaceAll("[\\x00-\\x1F]", " ") + "\""

@@ -31,7 +31,7 @@ object CuratePipeline {
     *   first-50-docs convention here
     * @param releaseDedupCaches release the "d"-scope band memos this
     *   run built before returning (the standalone-CLI default); the
-    *   gate query passes false — inside a shared Verify/Bench session
+    *   gate query passes false — inside a shared Verify session
     *   a whole-scope release would drop the d-family's live memos out
     *   from under concurrent queries */
   def curate(spark: SparkSession, dir: String, minQuality: Double,
@@ -252,7 +252,7 @@ object CuratePipeline {
     val minQuality = if (args.length > 2) args(2).toDouble else 0.3
     val format = if (args.length > 3) args(3) else "parquet"
     val benchDir = if (args.length > 4) Some(args(4)) else None
-    graft.Sessions.run() { spark =>
+    graft.Sessions.run { spark =>
       val (curated, stages) = curate(spark, sfDir, minQuality, benchDir)
       curated.write.mode("overwrite").parquet(s"$outDir/curated")
       // partition dirs are the unit a training reader consumes (and the

@@ -14,7 +14,7 @@ object PlanAudit {
       SparkEntry.queries.keys.toSeq.sorted
     else if (args.length > 1) args.drop(1).toSeq
       else Seq("q_filter_pushdown", "q1_agg", "q3_join", "q5_join", "q_topk")
-    graft.Sessions.run() { spark =>
+    graft.Sessions.run { spark =>
       // GRAFT_PLANS_WITH_BUILDS=1 (round 15): since the family memos
       // eagerly localCheckpoint, a consumer plan reads LogicalRDD leaves
       // and the build subtrees live in CacheBook's recorded build plans —

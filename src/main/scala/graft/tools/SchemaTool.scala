@@ -18,7 +18,7 @@ object SchemaTool {
   def main(args: Array[String]): Unit = {
     val graph =
       if (args.length > 1 && args(1) == "--jdbc") {
-        graft.Sessions.run()(graft.sources.SchemaIntrospect.viaJdbc(_, args(2),
+        graft.Sessions.run(graft.sources.SchemaIntrospect.viaJdbc(_, args(2),
           args.lift(3).getOrElse(""), args.lift(4).getOrElse("")))
       } else if (args.last.endsWith(".json"))
         SchemaConfig.fromJson(java.nio.file.Files.readString(java.nio.file.Paths.get(args.last)))

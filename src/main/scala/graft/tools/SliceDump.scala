@@ -88,7 +88,7 @@ object SliceDump {
         val cfg = graft.functions.ScrubConfig.fromJson(readFile(p))
         cfg.apply(_, _)
       }.getOrElse((_, df) => df)
-    graft.Sessions.run() { spark =>
+    graft.Sessions.run { spark =>
       val result = new Slicer(graph, t => Tables.load(spark, sfDir, t))
         .run(roots)
       SliceWriter.write(result, outDir, scrub,

@@ -80,7 +80,7 @@ object SliceRestore {
 
   def main(args: Array[String]): Unit = {
     val sliceDir = resolve(args(0))
-    val broken = graft.Sessions.run() { spark =>
+    val broken = graft.Sessions.run { spark =>
       var failed = false
       validate(spark, sliceDir).foreach { case (id, expected, actual) =>
         val ok = actual == expected

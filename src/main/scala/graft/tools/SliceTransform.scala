@@ -30,7 +30,9 @@ import graft.sources.{Formats, SliceWriter, SqlWriter}
   *    raw values, and copying them through would leak exactly what the
   *    re-scrub was asked to remove;
   *  - every other sidecar (schema sections, restore.sql) is copied
-  *    byte-for-byte — the scrub changes values, never shape.
+  *    byte-for-byte — the scrub changes values, never shape; the
+  *    copied restore.sql's relative includes resolve to the new
+  *    slice's regenerated scripts.
   *
   * The round-trip contract (SliceTransformSpec): scrubbing AT dump time
   * and dumping-then-rescrubbing with the same config + pepper produce
@@ -94,9 +96,7 @@ object SliceTransform {
     tables.foreach { t =>
       val scrubbed = cfg(t, Formats.read(spark, s"$inDir/data/$t", format))
       Formats.write(scrubbed, s"$outDir/data/$t", format)
-      if (hadSql)
-        SqlWriter.insertStatements(scrubbed, t)
-          .write.mode("overwrite").text(s"$outDir/sql/$t")
+      if (hadSql) SqlWriter.writeTable(scrubbed, t, outDir)
     }
     // sidecars: manifest verbatim (counts/last_values are scrub-invariant),
     // schema + restore script byte-for-byte; data/ and sql/ were rewritten
@@ -135,7 +135,7 @@ object SliceTransform {
     val outDir =
       if (outIsZip) Files.createTempDirectory("graft-rescrub-out").toString
       else out
-    graft.Sessions.run()(transform(_, inDir, outDir, cfg, p.format))
+    graft.Sessions.run(transform(_, inDir, outDir, cfg, p.format))
     if (outIsZip) SliceWriter.zip(outDir, out)
     println(s"re-scrubbed slice written to $out: tables=${tablesIn(inDir).mkString(",")}")
   }

@@ -31,7 +31,7 @@ object TransformField {
     val Array(name, value) = rest.take(2)
     val f = transforms.getOrElse(name,
       sys.error(s"unknown transform '$name'; one of ${transforms.keys.toSeq.sorted.mkString(", ")}"))
-    graft.Sessions.run() { spark =>
+    graft.Sessions.run { spark =>
       import spark.implicits._
       println(Seq(value).toDF("v").select(f(col("v")).cast("string")).as[String].head())
     }

@@ -15,11 +15,11 @@ object ListenerBridge {
     * and memory→disk eviction moves all register here; plain cache
     * READS never do). `updatedBlockStatuses` is private[spark], hence
     * the bridge; populated only when
-    * `spark.taskMetrics.trackUpdatedBlockStatuses` is on (the bench
-    * enables it). A warm sample that claims to read standing memos
-    * must show ~0 of these — a large count at flat job counts is
-    * block-store churn (eviction + recompute/re-store), measured
-    * instead of inferred. */
+    * `spark.taskMetrics.trackUpdatedBlockStatuses` is on (the test
+    * session enables it for BlockPressureSpec). A warm sample that
+    * claims to read standing memos must show ~0 of these — a large
+    * count at flat job counts is block-store churn (eviction +
+    * recompute/re-store), measured instead of inferred. */
   def rddBlockWrites(tm: org.apache.spark.executor.TaskMetrics): Long =
     if (tm == null) 0L
     else tm.updatedBlockStatuses.count { case (id, st) =>

@@ -15,8 +15,9 @@ import org.apache.spark.storage.StorageLevel
   * (writes ≈ 0, cpu a small fraction of the build).
   *
   * Knobs this pins (mechanical, artifact-mirrored): warm rddWrites ≤ 8
-  * — the same +8 AQE-jitter floor as [[Bench.writesOver]] — and warm
-  * cpu ≤ half the first-touch cpu. Entries: the three r13 `weak` ones.
+  * — a floor for AQE jitter, which can re-store a handful of blocks on
+  * a warm pass that reads every memo — and warm cpu ≤ half the
+  * first-touch cpu. Entries: the three r13 `weak` ones.
   */
 class BlockPressureSpec extends SparkSpec {
 

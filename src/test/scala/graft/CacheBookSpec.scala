@@ -113,17 +113,57 @@ class CacheBookSpec extends SparkSpec {
     } finally CacheBook.release(spark, "zrel")
   }
 
-  test("releaseNamed frees a memo's kept frames and leaves other memos standing") {
-    def memo(name: String): DataFrame =
-      CacheBook.memo(spark, "znamed", name, "k")(checkpoint("znamed"))
+  test("anonymous registrations during a named build attach to the memo") {
+    // a memo's build-side per-call state (Slicer key frames, beamWalk
+    // checkpoints) belongs to the memo: a failed build frees it on the
+    // spot, while registrations outside the build, or for another
+    // scope inside it, stay until their own scope is released
+    var attached = false; var outside = false; var other = false
+    CacheBook.register(spark, "zb")(() => outside = true)
     try {
-      val (a, b) = (memo("a"), memo("b"))
-      CacheBook.releaseNamed(spark, Set(("znamed", "a")))
-      assert(!held(a), "the released memo's kept frame must be freed")
-      assert(held(b) && (memo("b") eq b), "the other memo must stand")
-      assert(!CacheBook.liveNamed(spark).contains(("znamed", "a")))
-      assert(CacheBook.liveNamed(spark).contains(("znamed", "b")))
-      assert(!(memo("a") eq a), "the released memo rebuilds")
-    } finally CacheBook.release(spark, "znamed")
+      intercept[RuntimeException] {
+        CacheBook.memo(spark, "zb", "memoA", "k") {
+          CacheBook.register(spark, "zb")(() => attached = true)
+          CacheBook.register(spark, "zb2")(() => other = true)
+          sys.error("build fails")
+        }
+      }
+      assert(attached, "the build-side thunk must go with the failed memo")
+      assert(!outside && !other, "thunks outside the build's scope must stand")
+      assert(CacheBook.liveScopes(spark).contains("zb"))
+      CacheBook.release(spark, "zb")
+      assert(outside && !other)
+    } finally { CacheBook.release(spark, "zb"); CacheBook.release(spark, "zb2") }
+    assert(other)
+  }
+
+  test("release(scope) frees one scope's memo frames and leaves other scopes' memos standing") {
+    def memo(scope: String): DataFrame =
+      CacheBook.memo(spark, scope, "m", "k")(checkpoint(scope))
+    try {
+      val (a, b) = (memo("zsa"), memo("zsb"))
+      CacheBook.release(spark, "zsa")
+      assert(!held(a), "the released scope's kept frame must be freed")
+      assert(held(b) && (memo("zsb") eq b), "the other scope's memo must stand")
+      assert(!CacheBook.liveNamed(spark).contains(("zsa", "m")))
+      assert(CacheBook.liveNamed(spark).contains(("zsb", "m")))
+      assert(!(memo("zsa") eq a), "the released memo rebuilds")
+    } finally { CacheBook.release(spark, "zsa"); CacheBook.release(spark, "zsb") }
+  }
+
+  test("traced records a memo on its cold build and its warm read; liveNamed lists it once built") {
+    val q = queries.Dedup.queries("d_exact")
+    CacheBook.releaseAll(spark)
+    try {
+      assert(!CacheBook.liveNamed(spark).exists(_._1 == "d"))
+      val (_, cold) = CacheBook.traced { q(spark, dir).count() }
+      assert(cold.contains(("d", "exact_pairs")))
+      val live = CacheBook.liveNamed(spark)
+      assert(live.contains(("d", "exact_pairs")))
+      val (_, warm) = CacheBook.traced { q(spark, dir).count() }
+      assert(warm.contains(("d", "exact_pairs")))
+      assert(warm.toSet.subsetOf(live), s"a warm read touches only live memos: $warm")
+      assert(CacheBook.liveNamed(spark) == live, "a warm read builds nothing new")
+    } finally CacheBook.releaseAll(spark)
   }
 }

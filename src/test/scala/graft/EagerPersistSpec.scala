@@ -131,6 +131,37 @@ class EagerPersistSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"outside their one owner: ${offenders.mkString(", ")}")
   }
 
+  test("src/main reads exactly the listed env knobs, and the old bench is gone") {
+    // an env read is an option every deployment must know about: a new
+    // one is added to this list on purpose, never in passing
+    val knobs = Set("SPARK_GRAFT_CPUS", "GRAFT_PEPPER", "GRAFT_DP_PEPPER",
+      "SPARK_GRAFT_SLICE_TRUST_FK", "GRAFT_SLICE_DEBUG", "GRAFT_PLANS_WITH_BUILDS",
+      "SPARK_GRAFT_SLICE_FORMAT", "SPARK_GRAFT_SLICE_ZIP", "GRAFT_LSH_PLANES",
+      "GRAFT_JACCARD_BLOCK_CAP")
+    val banned = Seq("graft.Bench", "releaseNamed", "SPARK_GRAFT_BENCH")
+    val access = """sys\.env|getenv""".r
+    val keyed = """(?:sys\.env|getenv)(?:\.\w+)?\s*\(\s*"(\w+)"""".r
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString -> Files.readString(p)).toList
+    def at(file: String, text: String, i: Int) =
+      s"$file:${text.take(i).count(_ == '\n') + 1}"
+    val read = (for {
+      (file, text) <- sources
+      m <- access.findAllMatchIn(text)
+    } yield keyed.findPrefixMatchOf(text.substring(m.start)).map(_.group(1))
+      .getOrElse(s"<non-literal key at ${at(file, text, m.start)}>")).toSet
+    assert(read == knobs,
+      s"env keys read but not listed: ${(read -- knobs).toSeq.sorted.mkString(", ")}; " +
+        s"listed but not read: ${(knobs -- read).toSeq.sorted.mkString(", ")}")
+    val mentions = for {
+      (file, text) <- sources
+      b <- banned
+      i <- Iterator.iterate(text.indexOf(b))(j => text.indexOf(b, j + 1)).takeWhile(_ >= 0)
+    } yield s"${at(file, text, i)} ($b)"
+    assert(mentions.isEmpty, s"retired bench code: ${mentions.mkString(", ")}")
+  }
+
   test("Profiles.narrow is the only writer of the narrow profile's keys in src/main") {
     // a lock, a save/set/restore copy or an env knob beside the one
     // refcounted scope would be a second mechanism: two overlapping

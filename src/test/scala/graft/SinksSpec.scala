@@ -37,6 +37,14 @@ class SinksSpec extends SparkSpec {
     assert(stmts.head == "INSERT INTO p (pid, txt) VALUES (1, 'it''s');")
   }
 
+  test("SqlWriter quotes zoneless timestamps like instants") {
+    // parquet timestamps written without a zone (DuckDB's TIMESTAMP, the
+    // test corpora's o_orderdate) read back as TimestampNTZType
+    val df = spark.sql("SELECT 1 AS id, TIMESTAMP_NTZ '1998-08-03 04:05:06' AS ts")
+    assert(SqlWriter.insertStatements(df, "t").as[String].head() ==
+      "INSERT INTO t (id, ts) VALUES (1, TIMESTAMP '1998-08-03 04:05:06.000000');")
+  }
+
   test("SqlWriter.write shards one text dir per table") {
     val dir = Files.createTempDirectory("sqlw").toString
     SqlWriter.write(result(), dir)
@@ -45,9 +53,9 @@ class SinksSpec extends SparkSpec {
   }
 
   test("RestoreWriter orders parents first and restores sequences") {
-    val script = RestoreWriter.restoreScript(graph, "/s", Map("p" -> 2L, "c" -> 11L))
-    val pIdx = script.indexOf("\\i /s/sql/p")
-    val cIdx = script.indexOf("\\i /s/sql/c")
+    val script = RestoreWriter.restoreScript(graph, Map("p" -> 2L, "c" -> 11L))
+    val pIdx = script.indexOf("\\ir sql/p.sql")
+    val cIdx = script.indexOf("\\ir sql/c.sql")
     assert(pIdx >= 0 && cIdx > pIdx, "parent restored before child")
     assert(script.contains("setval(pg_get_serial_sequence('c', 'cid'), 12, false)"))
     assert(script.startsWith("BEGIN;") && script.trim.endsWith("COMMIT;"))
@@ -59,32 +67,32 @@ class SinksSpec extends SparkSpec {
       references = Seq(
         Reference("cp", "c", Seq("pid"), "p", Seq("pid")),
         Reference("pc", "p", Seq("pid"), "c", Seq("cid"))))
-    val script = RestoreWriter.restoreScript(cyclic, "/s", Map.empty, Set("p"))
-    assert(script.contains("\\i /s/sql/p\n"), "sliced table included")
-    assert(!script.contains("/s/sql/c"), "unsliced table not referenced")
-    // no trailing text after the \i path (psql parses it as arguments)
+    val script = RestoreWriter.restoreScript(cyclic, Map.empty, Set("p"))
+    assert(script.contains("\\ir sql/p.sql\n"), "sliced table included")
+    assert(!script.contains("sql/c.sql"), "unsliced table not referenced")
+    // no trailing text after the \ir path (psql parses it as arguments)
     script.linesIterator.filter(_.startsWith("\\i")).foreach { l =>
-      assert(l.matches("""\\i \S+"""), s"clean \\i line: $l")
+      assert(l.matches("""\\ir \S+"""), s"clean \\ir line: $l")
     }
   }
 
   test("RestoreWriter execution options: no-transaction, disable-triggers, jobs guard") {
     // --no-transaction: no BEGIN/COMMIT wrapper
-    val noTx = RestoreWriter.restoreScript(graph, "/s", Map.empty,
+    val noTx = RestoreWriter.restoreScript(graph, Map.empty,
       transaction = false)
     assert(!noTx.contains("BEGIN;") && !noTx.contains("COMMIT;"))
     // --disable-triggers: load bracketed by DISABLE/ENABLE TRIGGER ALL
-    val noTrig = RestoreWriter.restoreScript(graph, "/s", Map.empty,
+    val noTrig = RestoreWriter.restoreScript(graph, Map.empty,
       disableTriggers = true)
     val dis = noTrig.indexOf("ALTER TABLE p DISABLE TRIGGER ALL;")
-    val load = noTrig.indexOf("\\i /s/sql/p")
+    val load = noTrig.indexOf("\\ir sql/p.sql")
     val en = noTrig.indexOf("ALTER TABLE p ENABLE TRIGGER ALL;")
     assert(dis >= 0 && dis < load && load < en, "triggers off around the load")
     // jobs > 1 requires --no-transaction (reference restore.py:44-45)
     intercept[IllegalArgumentException] {
-      RestoreWriter.restoreScript(graph, "/s", Map.empty, jobs = 4)
+      RestoreWriter.restoreScript(graph, Map.empty, jobs = 4)
     }
-    RestoreWriter.restoreScript(graph, "/s", Map.empty,
+    RestoreWriter.restoreScript(graph, Map.empty,
       transaction = false, jobs = 4) // valid combination
     // FK cycles can't defer without a transaction unless enforcement is off
     val cyclic = SchemaGraph(
@@ -93,9 +101,9 @@ class SinksSpec extends SparkSpec {
         Reference("cp", "c", Seq("pid"), "p", Seq("pid")),
         Reference("pc", "p", Seq("pid"), "c", Seq("cid"))))
     intercept[IllegalArgumentException] {
-      RestoreWriter.restoreScript(cyclic, "/s", Map.empty, transaction = false)
+      RestoreWriter.restoreScript(cyclic, Map.empty, transaction = false)
     }
-    val cycNoTrig = RestoreWriter.restoreScript(cyclic, "/s", Map.empty,
+    val cycNoTrig = RestoreWriter.restoreScript(cyclic, Map.empty,
       transaction = false, disableTriggers = true)
     assert(!cycNoTrig.contains("SET CONSTRAINTS"),
       "no deferral needed with enforcement disabled")

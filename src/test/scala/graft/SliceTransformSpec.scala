@@ -1,11 +1,13 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import graft.functions.{ScrubConfig, Transforms}
 import graft.operators.{SliceRoot, Slicer}
 import graft.plans.{Reference, SchemaGraph, TableDef}
-import graft.sources.{SliceWriter, SqlWriter}
+import graft.sources.{RestoreWriter, SliceWriter, SqlWriter}
 import graft.tools.SliceTransform
 
 /** Offline re-scrub round trip (reference `transform` concept,
@@ -64,6 +66,61 @@ class SliceTransformSpec extends SparkSpec {
       val sql = spark.read.text(s"$rescrub/sql/p").as[String].collect().mkString("\n")
       assert(!sql.contains("Margaret"), "re-scrubbed INSERT script leaks a raw value")
       assert(sql.contains("INSERT INTO p"))
+    } finally Transforms.resetPepper()
+  }
+
+  /** Every line psql runs for `<root>/restore.sql`, includes expanded:
+    * `\ir` resolves from the including file's directory, `\i` from the
+    * working directory, here a fresh one outside the slice. Every
+    * include must name a regular file inside `root`. */
+  private def restoreLines(root: Path): Seq[String] = {
+    val cwd = Files.createTempDirectory("st-cwd")
+    def run(script: Path): Seq[String] =
+      Files.readAllLines(script).asScala.toSeq.flatMap { l =>
+        l.split(" ", 2) match {
+          case Array(cmd @ ("\\i" | "\\ir"), rel) =>
+            val from = if (cmd == "\\ir") script.getParent else cwd
+            val target = from.resolve(rel).normalize
+            assert(target.startsWith(root) && Files.isRegularFile(target),
+              s"$script: `$l` does not name a file inside $root")
+            run(target)
+          case _ => Seq(l)
+        }
+      }
+    run(root.resolve("restore.sql"))
+  }
+
+  private def inserts(dir: String): Seq[String] =
+    restoreLines(Paths.get(dir).toAbsolutePath.normalize)
+      .filter(_.startsWith("INSERT")).sorted
+
+  test("restore.sql includes resolve inside the slice after dump, re-scrub and unzip") {
+    Transforms.setPepper("round-trip-pepper")
+    try {
+      val r = result()
+      def expected(scrub: (String, org.apache.spark.sql.DataFrame) =>
+          org.apache.spark.sql.DataFrame): Seq[String] =
+        r.allRows.toSeq.flatMap { case (t, df) =>
+          SqlWriter.insertStatements(scrub(t, df), t).as[String].collect().toSeq
+        }.sorted
+      val plain = Files.createTempDirectory("st-inc-plain").toString
+      SliceWriter.write(r, plain)
+      SqlWriter.write(r, plain)
+      RestoreWriter.write(graph, plain, Map.empty, s"$plain/restore.sql", r.keys.keySet)
+      val raw = expected((_, df) => df)
+      assert(raw.exists(_.contains("Margaret")) && inserts(plain) == raw)
+
+      val rescrub = Files.createTempDirectory("st-inc-rescrub").toString
+      SliceTransform.transform(spark, plain, rescrub, cfg)
+      val scrubbed = expected(cfg.apply)
+      assert(!scrubbed.exists(_.contains("Margaret")) && inserts(rescrub) == scrubbed,
+        "the re-scrubbed slice's restore.sql must load its own scrubbed INSERTs")
+
+      val zipPath = s"${Files.createTempDirectory("st-inc-zip")}/slice.zip"
+      SliceWriter.zip(rescrub, zipPath)
+      val unpacked = Files.createTempDirectory("st-inc-unzip").toString
+      SliceWriter.unzip(zipPath, unpacked)
+      assert(inserts(unpacked) == scrubbed)
     } finally Transforms.resetPepper()
   }
 
